@@ -23,8 +23,7 @@ import org.apache.spark.sql.DataFrame
 object Artifacts {
 
   @volatile private var baseOpt: Option[String] = None
-  private val written = scala.collection.concurrent.TrieMap.empty[String, String]
-  Caching.nameRegistry(written, "artifacts.written")
+  private val written = Caching.Registry[String]("artifacts.written", cap = Int.MaxValue)
 
   // Corpus-flavor namespace: `save` is first-write-wins per name, so two
   // queries running the SAME operator against DIFFERENT corpora (the
@@ -77,13 +76,13 @@ object Artifacts {
   /** Write `df` once per enable() scope (idempotent across the queries that
     * share a fit); no-op when disabled. The frame is tiny (fit-sized, not
     * corpus-sized) so a single-file write keeps the oracle read trivial.
-    * Routed through the registryGet latch (r17): TrieMap.getOrElseUpdate
-    * evaluates its builder non-atomically, so two concurrent first saves of
+    * Routed through the registry's build latch (r17): a plain
+    * getOrElseUpdate evaluates its builder non-atomically, so two concurrent first saves of
     * one name would BOTH run the parquet write — racing overwrites of the
     * same path. Sequential harnesses never hit this; a parallel Verify will.
     */
   def save(name: String)(df: => DataFrame): Unit = baseOpt.foreach { base =>
-    Caching.registryGet(written, full(name), cap = Int.MaxValue) {
+    written.get(full(name)) {
       val path = s"$base/${full(name)}"
       df.coalesce(1).write.mode("overwrite").parquet(path)
       path
@@ -95,7 +94,7 @@ object Artifacts {
     * persisted table back (build-once/probe-many index shapes). None when
     * disabled or not yet materialized.
     */
-  def path(name: String): Option[String] = written.get(full(name))
+  def path(name: String): Option[String] = written.peek(full(name))
 
   /** DuckDB table expression for a saved artifact. Only resolves after the
     * owning query ran (Verify dumps oracle SQL after the query loop); an
@@ -107,7 +106,7 @@ object Artifacts {
     * base-face refs are unchanged).
     */
   def ref(name: String): String =
-    written.get(full(name))
+    written.peek(full(name))
       .map(path => s"read_parquet('$path/*.parquet')")
       .getOrElse(s"artifact_not_materialized_${full(name)}")
 }

@@ -31,10 +31,14 @@ object Bench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    // faces that threw in any pass: they get no time sample and stay out
+    // of every median and the total
+    val failed = scala.collection.mutable.Set.empty[String]
     // noop sink: materializes every output column (count() would let
-    // Catalyst prune the projections and under-measure)
+    // Catalyst prune the projections and under-measure). None = the face
+    // threw.
     def run(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
-            gc: Boolean = true): Double = {
+            gc: Boolean = true): Option[Double] = {
       // Collect the PREVIOUS query's garbage before starting the clock:
       // without this, heavy neighbors (LDA fits, W2V) bill multi-second GC
       // pauses to whatever small query runs next — r03 medians showed a
@@ -49,14 +53,21 @@ object Bench {
       // across a 180-query 3-run sweep.
       if (gc) { System.gc(); Thread.sleep(GcSettleMs) }
       val t0 = System.nanoTime()
-      try Caching.scoped {
-        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      }
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] $name failed: ${e.getMessage}")
-      }
-      finally Caching.releaseAll() // frames tracked from pooled threads
-      (System.nanoTime() - t0) / 1e9
+      val ok =
+        try {
+          Caching.scoped {
+            fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+          }
+          true
+        }
+        catch { case scala.util.control.NonFatal(e) =>
+          System.err.println(s"[bench] $name failed: ${e.getMessage}")
+          failed += name
+          false
+        }
+        finally Caching.releaseAll() // frames tracked from pooled threads
+      val s = (System.nanoTime() - t0) / 1e9
+      if (ok) Some(s) else None
     }
     // One warmup pass (pays JIT + the cross-query fitted-model cache), then
     // `timedRuns` timed passes; report the per-query MEDIAN — single-pass
@@ -86,18 +97,21 @@ object Bench {
     }
     val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
-    ordered.foreach { case (name, fn) => run(name, fn, gc = false) }
+    // the warm-up pass IS the cold point for registry-backed faces (first
+    // call pays the deterministic fit; later calls hit the registry)
+    val cold = ordered.flatMap { case (name, fn) =>
+      run(name, fn, gc = false).map(name -> _)
+    }.toMap
     val samples = (1 to timedRuns).map { r =>
       val shuffled = new scala.util.Random(r).shuffle(ordered)
-      shuffled.map { case (name, fn) => name -> run(name, fn) }.toMap
+      shuffled.flatMap { case (name, fn) => run(name, fn).map(name -> _) }.toMap
     }
     def median(xs: Seq[Double]): Double = {
       val s = xs.sorted
       if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2.0
     }
-    val results = ordered.map { case (name, _) =>
-      name -> median(samples.map(_(name)).toSeq)
-    }.toMap
+    val sweep = ordered.filterNot { case (name, _) => failed(name) }
+      .map { case (name, _) => name -> median(samples.map(_(name))) }.toMap
     // Solo re-adjudication — the record adjudicates ITSELF instead of a
     // judge re-running suspects by hand: any query whose sweep median
     // exceeds its previous committed record by >1.5× (or, with no prior,
@@ -117,26 +131,33 @@ object Bench {
       } catch { case _: Exception => Map.empty }
     val suspects = ordered.collect {
       case (name, fn)
-        if {
-          val m = results(name)
+        if sweep.contains(name) && {
+          val m = sweep(name)
           val runs = samples.map(_(name))
           prev.get(name).exists(p => m > 1.5 * p && m > 1.0) ||
             (prev.isEmpty && m > 2.0 && m > 1.5 * runs.min)
         } => (name, fn)
     }
-    val solo = suspects.map { case (name, fn) =>
+    val solo = suspects.flatMap { case (name, fn) =>
       run(name, fn, gc = false) // solo warmup (cache refill after scoped release)
-      name -> median((1 to timedRuns).map(_ => run(name, fn)))
+      val xs = (1 to timedRuns).flatMap(_ => run(name, fn))
+      if (failed(name)) None else Some(name -> median(xs))
     }.toMap
+    val results = sweep -- failed
     if (solo.nonEmpty)
       System.err.println(s"[bench] solo re-adjudicated: " + solo.toSeq.sorted
         .map { case (n, s) => f"$n sweep=${results(n)}%.2f solo=$s%.2f" }
         .mkString("; "))
+    if (only.nonEmpty) results.toSeq.sortBy(_._1).foreach { case (q, med) =>
+      val ts = samples.map(_(q)).sorted
+      System.err.println(f"[time] $q: cold ${cold(q)}%.2f s, median $med%.2f s " +
+        s"(runs ${ts.map(t => f"$t%.2f").mkString(", ")})")
+    }
     // per-query spread across the timed runs: with single-number medians a
     // real 2x regression in a heavy query is indistinguishable from
     // environment noise (topic_cv swung 2.3 -> 9.8 -> 4.0 s across rounds
     // with zero code changes); min/median/max makes the noise band visible
-    val spread = ordered.map { case (name, _) =>
+    val spread = results.keys.toSeq.map { name =>
       val xs = samples.map(_(name)).sorted
       name -> (xs.head, median(xs), xs.last)
     }
@@ -205,6 +226,7 @@ object Bench {
       .map { case (k, s) =>
         s"""  "$k": {"sweep": ${r1(results(k))}, "solo": ${r1(s)}}""" }
       .mkString("{\n", ",\n", "\n}")
+    val failedJson = failed.toSeq.sorted.map(n => "\"" + n + "\"").mkString("[", ", ", "]")
     val self =
       s"""{
          |"sf": "$sfDir",
@@ -214,6 +236,7 @@ object Bench {
          |"env": $env,
          |"registry_stats": $regStats,
          |"n_queries": ${results.size},
+         |"failed": $failedJson,
          |"total_sec": $total,
          |"slowest": {"query": "${slowest.fold("")(_._1)}", "sec": ${slowest.fold(0.0)(_._2)}},
          |"solo_adjudicated": $soloQs,
@@ -231,22 +254,10 @@ object Bench {
     // not from re-running) — evictions > 0 on a registry a slow face rides
     // means cap thrash; 0 means the face's cost is its own work
     System.err.println("[bench] registry stats:\n" + Caching.registryStatsReport())
-    operators.TopicModelOps.clearModelCache() // drop cross-query fit frames
-    operators.VocabOps.clearBpeCache()
-    operators.DedupOps.clearLabelCache()
-    operators.DedupOps.clearIndexCache()
-    operators.ClassifierOps.clearNbCache()
-    operators.RetrievalOps.clearPostingsCache()
-    operators.RetrievalOps.clearRagCache()
-    operators.SimilarityOps.clearBalancedCache()
-    operators.SemDedupOps.clearCache()
-    operators.IndexMaintOps.clearFrozenWorldCache()
-    operators.LmOps.clearNllCache()
-    operators.TopicMetricsOps.clearClassTfCache()
-    operators.TopicMetricsOps.clearTopWordsCache()
-    operators.SketchOps.clearHllHistoryCache()
-    operators.CurationOps.clearEvalGramsCache()
-    graft.multimodal.MediaOps.clearMediaCache()
+    if (failed.nonEmpty)
+      System.err.println(s"[bench] failed: ${failed.toSeq.sorted.mkString(", ")}")
+    Caching.clearAll() // release every build-once registry
     spark.stop()
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

@@ -1,26 +1,34 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Dataset}
 
-/** Tracked per-query persist registry.
+/** The engine's two cache lifetimes: query-scoped persists and build-once
+  * registries.
   *
-  * Operators persist intermediates that feed several consumers inside ONE
-  * query (LSH signature tables, term-frequency scans, presence sets). Those
-  * caches are dead the moment the query's sink materializes, but a bare
-  * `.persist()` has no owner who can safely release it — so in a long-lived
-  * session (the 64-query Bench/Verify runs, or a warehouse service) executor
-  * storage grows monotonically.
+  * Query-scoped persists. Operators persist intermediates that feed
+  * several consumers inside ONE query (LSH signature tables,
+  * term-frequency scans, presence sets). Those caches are dead the moment
+  * the query's sink materializes, but a bare `.persist()` has no owner who
+  * can safely release it — so in a long-lived session (the Bench/Verify
+  * runs, or a warehouse service) executor storage grows monotonically.
+  * Operators register such caches via `track`; harnesses (Bench, Verify,
+  * AnalysisRunner callers) wrap each query in `scoped { … }` — frames
+  * tracked on the calling thread inside the block are unpersisted when the
+  * block exits, so one query's release can never evict another in-flight
+  * query's caches in a concurrent service. Frames tracked from OTHER
+  * threads spawned inside a scope (e.g. the grid-search driver futures)
+  * fall back to the process-global scope; sequential harnesses drain that
+  * with `releaseAll()` after each query.
   *
-  * Contract: operators register query-scoped caches via `track`; harnesses
-  * (Bench, Verify, AnalysisRunner callers) wrap each query in `scoped { … }`
-  * — frames tracked on the calling thread inside the block are unpersisted
-  * when the block exits, so one query's release can never evict another
-  * in-flight query's caches in a concurrent service. Frames tracked from
-  * OTHER threads spawned inside a scope (e.g. the grid-search driver
-  * futures) fall back to the process-global scope; sequential harnesses
-  * drain that with `releaseAll()` after each query. Long-lived cross-query
-  * caches (the fitted-model registry in TopicModelOps) intentionally do NOT
-  * go through this registry.
+  * Build-once registries. Deterministic fits and stored-index shapes
+  * (fitted topic models, postings, signature tables, IVF/PQ worlds, …)
+  * outlive queries: each lives in a named `Registry`, keyed by corpus
+  * fingerprint, built once per key per session and served to every later
+  * consumer. A registry owns its entries, their LRU order, its in-flight
+  * build latches and its hit/miss/eviction counters, and registers itself
+  * at construction — so `clearAll()` is the one teardown that releases
+  * every registry's storage (Bench and Verify call it at exit), and
+  * `registryStatsSnapshot()` reads every registry's counters.
   */
 object Caching {
 
@@ -89,26 +97,74 @@ object Caching {
   /** Frames currently tracked in the active scope (spec surface). */
   def trackedCount: Int = current.value.size
 
-  /** Atomic fit-registry lookup — hits pay one brief LRU-bookkeeping lock
-    * (never a build); misses take a per-KEY build latch.
-    * `TrieMap.getOrElseUpdate` evaluates its by-name builder
-    * non-atomically — two concurrent first calls both run the (expensive)
-    * fit and both persist, and the losing frame's storage leaks until JVM
-    * exit because only the cached winner is unpersisted at teardown. Every
-    * cross-query registry (NLL scores, media corpus, dedup labels,
-    * postings, BPE merges, fitted topic models, …) routes through here.
+  /** Best-effort storage release for a registry value: Datasets (and
+    * Dataset members of Products — BigramLm, StandingQueries, (index,
+    * cut) tuples) are unpersisted. LIMITATION (documented, ADVICE r16):
+    * fitted ML model values (the TopicModelOps registry) expose no uniform
+    * handle to the RDDs/datasets they pin internally (e.g.
+    * DistributedLDAModel's graph), so an evicted model's internal storage
+    * is NOT reclaimed here — dropping the reference lets GC +
+    * ContextCleaner reap it, and model registries' caps exist to bound the
+    * MAP, not the executor store. A corpus-cycling service wanting eager
+    * reclamation should register model values wrapped in a Product
+    * carrying their persisted frames.
+    */
+  private def releaseValue(v: Any): Unit = v match {
+    case ds: Dataset[_] => ds.unpersist(false)
+    case p: Product => p.productIterator.foreach {
+      case ds: Dataset[_] => ds.unpersist(false)
+      case _ => ()
+    }
+    case _ => ()
+  }
+
+  /** Default per-registry entry cap. */
+  val RegistryMaxEntries = 8
+
+  /** Cap for fitted-model registries (TopicModelOps): the per-corpus
+    * working set is ≥ 9 keys (base LDA + topics-frame + 4 grid fits +
+    * KMeans + noise + example/reduce variants), and a bench session runs
+    * two corpora (base + realistic twin) — 32 holds both with headroom
+    * while still bounding a corpus-cycling service.
+    */
+  val ModelRegistryMaxEntries = 32
+
+  /** Every registry constructed in this JVM, in construction order. */
+  private val registries = new java.util.concurrent.CopyOnWriteArrayList[Registry[_]]
+
+  object Registry {
+    def apply[V](name: String, cap: Int = RegistryMaxEntries): Registry[V] =
+      new Registry[V](name, cap)
+
+    /** Joiner retry bound: a joiner that finds the creator failed becomes
+      * the next creator AT MOST this many times before propagating the
+      * last error. Without a bound, N concurrent callers on a persistently
+      * failing hot key run N sequential full builds (ADVICE r16); with it,
+      * the worst case is `JoinerRetryBound + 1` builds per caller, after
+      * which the caller sees the creator's error.
+      */
+    val JoinerRetryBound = 1
+  }
+
+  /** A named build-once registry: `get` returns the value under `key`,
+    * building it at most once per key while it stays resident.
+    * A plain `getOrElseUpdate` evaluates its builder non-atomically — two
+    * concurrent first calls both run the (expensive) fit and both persist,
+    * and the losing frame's storage leaks until JVM exit because only the
+    * cached winner is released at teardown. Every cross-query cache (NLL
+    * scores, media corpus, dedup labels, postings, BPE merges, fitted
+    * topic models, …) is one of these.
     *
-    * Concurrency: duplicate keys build once (losers block on the winner's
-    * lazy holder), but DISTINCT keys build concurrently — the per-map lock
-    * guards only holder bookkeeping, never a build. This preserves the
-    * grid-search "embarrassingly parallel across k" property (the four
-    * driver futures in TopicModelOps.ldaGridSearch fit different k keys
-    * at the same time).
+    * Concurrency: hits and build bookkeeping take this registry's monitor
+    * briefly (never across a build). Duplicate keys build once (joiners
+    * block on the creator's latch), but DISTINCT keys build concurrently.
+    * This preserves the grid-search "embarrassingly parallel across k"
+    * property (the four driver futures in TopicModelOps.ldaGridSearch fit
+    * different k keys at the same time).
     *
-    * Bounded by construction: each registry map holds at most `cap`
-    * entries (default `RegistryMaxEntries`) — inserting past the cap
-    * evicts the LEAST-RECENTLY-ACCESSED entry and unpersists its storage
-    * if the value is (or contains) a DataFrame. LRU-on-access, not
+    * Bounded by construction: the registry holds at most `cap` entries —
+    * inserting past the cap evicts the LEAST-RECENTLY-ACCESSED entry and
+    * releases its storage (`releaseValue`). LRU-on-access, not
     * FIFO-by-build: a hot key re-read every harness sweep (the 5:20 LDA
     * fit that lda_topic_coherence reuses) cannot be evicted by its own
     * family's colder keys cycling through. Registries whose per-corpus
@@ -125,308 +181,188 @@ object Caching {
     * sessions are sequential per registry family, so this never bites;
     * a concurrent service wanting stronger guarantees should size `cap`
     * above its live working set.
+    *
+    * Counters: hits, misses (= builds run) and evictions (= LRU victims
+    * released; `clear()` counts none) — the adjudication tool for "did
+    * the LRU evict a hot entry mid-sweep".
     */
-  val RegistryMaxEntries = 8
+  final class Registry[V](val name: String, cap: Int = RegistryMaxEntries) {
+    // insertion-ordered; a hit re-inserts its key, so the head is always
+    // the least-recently-accessed entry. Entries and holders share this
+    // registry's monitor.
+    private val entries = scala.collection.mutable.LinkedHashMap.empty[String, V]
+    private val holders = scala.collection.mutable.HashMap.empty[String, Holder]
+    private val hits = new java.util.concurrent.atomic.AtomicLong
+    private val misses = new java.util.concurrent.atomic.AtomicLong
+    private val evictions = new java.util.concurrent.atomic.AtomicLong
+    registries.add(this)
 
-  /** Cap for fitted-model registries (TopicModelOps): the per-corpus
-    * working set is ≥ 9 keys (base LDA + topics-frame + 4 grid fits +
-    * KMeans + noise + example/reduce variants), and a bench session runs
-    * two corpora (base + realistic twin) — 32 holds both with headroom
-    * while still bounding a corpus-cycling service.
-    */
-  val ModelRegistryMaxEntries = 32
+    def get(key: String)(build: => V): V =
+      attempt(key, Registry.JoinerRetryBound)(build)
 
-  // One holder per in-flight build. The creator alone runs `compute`;
-  // joiners block in `await`. An explicit latch, NOT a lazy val: a lazy
-  // val that fails re-runs its (captured) thunk in whichever blocked
-  // thread touches it next — that thread's retry result would never be
-  // published to the map (it isn't the creator), leaking its persisted
-  // frame and silently rebuilding per caller. With the latch, a failed
-  // build wakes the joiners with the error and they retry the whole
-  // lookup with their OWN builder (one of them becomes the new creator).
-  //
-  // Failure taxonomy (ADVICE r16): only NonFatal errors take the Left
-  // path — joiners treating an OutOfMemoryError as a retriable miss would
-  // re-run the expensive build under a condition the JVM may not survive.
-  // Fatal throwables still PUBLISH a Left first (the latch must open or
-  // joiners hang forever) and then rethrow in the creator's thread; an
-  // interrupt publishes, restores the thread's interrupt flag, and
-  // propagates.
-  private final class Holder[V](thunk: () => V) {
-    private val done = new java.util.concurrent.CountDownLatch(1)
-    @volatile private var result: Either[Throwable, V] = _
-    def compute(): Either[Throwable, V] = {
-      val r = try Right(thunk()) catch {
-        case e: InterruptedException =>
-          Thread.currentThread().interrupt()
-          Left(e)
-        case scala.util.control.NonFatal(e) => Left(e)
-        case fatal: Throwable =>
-          result = Left(fatal)
-          done.countDown()
-          throw fatal
-      }
-      result = r
-      done.countDown()
-      r
-    }
-    def await(): Either[Throwable, V] = { done.await(); result }
-  }
+    /** The value under `key` if built — no build, no counters, no LRU
+      * touch (for readers that only ask what exists, e.g. Artifacts.path).
+      */
+    def peek(key: String): Option[V] = synchronized(entries.get(key))
 
-  // Per-registry access order (LRU) and in-flight holders, keyed by map
-  // identity — registries are static singletons, so these never grow past
-  // the registry count.
-  private val accessOrder = new java.util.IdentityHashMap[
-    AnyRef, scala.collection.mutable.ArrayDeque[String]]
-  private val inFlight = new java.util.IdentityHashMap[
-    AnyRef, scala.collection.mutable.HashMap[String, Holder[_]]]
+    def size: Int = synchronized(entries.size)
 
-  private def orderFor(map: AnyRef): scala.collection.mutable.ArrayDeque[String] =
-    accessOrder.synchronized {
-      var q = accessOrder.get(map)
-      if (q == null) {
-        q = scala.collection.mutable.ArrayDeque.empty[String]
-        accessOrder.put(map, q)
-      }
-      q
+    /** Release every value and forget every key (counts no evictions).
+      * In-flight builds still publish when they finish.
+      */
+    def clear(): Unit = synchronized {
+      entries.values.foreach(releaseValue)
+      entries.clear()
     }
 
-  private def holdersFor(map: AnyRef): scala.collection.mutable.HashMap[String, Holder[_]] =
-    inFlight.synchronized {
-      var h = inFlight.get(map)
-      if (h == null) {
-        h = scala.collection.mutable.HashMap.empty[String, Holder[_]]
-        inFlight.put(map, h)
-      }
-      h
+    /** (name, hits, misses, evictions). */
+    def stats: (String, Long, Long, Long) =
+      (name, hits.get, misses.get, evictions.get)
+
+    private[Caching] def resetStats(): Unit = {
+      hits.set(0); misses.set(0); evictions.set(0)
     }
 
-  /** Move `key` to the most-recently-accessed position (no-op if the key
-    * was never registered through registryGet, e.g. direct map puts).
-    * One O(cap) scan under the per-registry deque monitor — hits are not
-    * strictly lock-free, but the lock covers only this bookkeeping (never
-    * a build) and cap ≤ 32.
-    */
-  private def touch(map: AnyRef, key: String): Unit = {
-    val q = orderFor(map)
-    q.synchronized {
-      val before = q.size
-      q.filterInPlace(_ != key)
-      if (q.size != before) q += key
-    }
-  }
-
-  /** Best-effort storage release on LRU eviction: DataFrame values (and
-    * DataFrame members of Products — BigramLm, (index, cut) tuples) are
-    * unpersisted. LIMITATION (documented, ADVICE r16): fitted ML model
-    * values (the TopicModelOps registry) expose no uniform handle to the
-    * RDDs/datasets they pin internally (e.g. DistributedLDAModel's graph),
-    * so an evicted model's internal storage is NOT reclaimed here — model
-    * registries rely on the harness-teardown `clearModelCache()` (which
-    * drops the references and lets GC + ContextCleaner reap the RDDs) for
-    * model-pinned storage, and their caps exist to bound the MAP, not the
-    * executor store. A corpus-cycling service wanting eager reclamation
-    * should register model values wrapped in a Product carrying their
-    * persisted frames.
-    */
-  private def releaseValue(v: Any): Unit = v match {
-    case df: DataFrame => df.unpersist(false)
-    case p: Product => p.productIterator.foreach {
-      case df: DataFrame => df.unpersist(false)
-      case _ => ()
-    }
-    case _ => ()
-  }
-
-  /** Record `key` as most-recently-accessed and evict past `cap`. Stale
-    * order entries (keys dropped by an external map.clear()) pop
-    * harmlessly — map.remove finds nothing to release.
-    */
-  private def touchAndEvict(map: scala.collection.concurrent.TrieMap[String, _],
-                            key: String, cap: Int): Unit = {
-    val q = orderFor(map)
-    q.synchronized {
-      q.filterInPlace(_ != key)
-      q += key
-      while (q.size > cap) {
-        val victim = q.removeHead()
-        map.remove(victim).foreach { v =>
-          statsFor(map).evictions.incrementAndGet()
-          releaseValue(v)
+    // One holder per in-flight build. The creator alone runs `compute`;
+    // joiners block in `await`. An explicit latch, NOT a lazy val: a lazy
+    // val that fails re-runs its (captured) thunk in whichever blocked
+    // thread touches it next — that thread's retry result would never be
+    // published (it isn't the creator), leaking its persisted frame and
+    // silently rebuilding per caller. With the latch, a failed build wakes
+    // the joiners with the error and they retry the whole lookup with
+    // their OWN builder (one of them becomes the new creator).
+    //
+    // Failure taxonomy (ADVICE r16): only NonFatal errors take the Left
+    // path — joiners treating an OutOfMemoryError as a retriable miss
+    // would re-run the expensive build under a condition the JVM may not
+    // survive. Fatal throwables still PUBLISH a Left first (the latch must
+    // open or joiners hang forever) and then rethrow in the creator's
+    // thread; an interrupt publishes, restores the thread's interrupt
+    // flag, and propagates.
+    private final class Holder(thunk: () => V) {
+      private val done = new java.util.concurrent.CountDownLatch(1)
+      @volatile private var result: Either[Throwable, V] = _
+      def compute(): Either[Throwable, V] = {
+        val r = try Right(thunk()) catch {
+          case e: InterruptedException =>
+            Thread.currentThread().interrupt()
+            Left(e)
+          case scala.util.control.NonFatal(e) => Left(e)
+          case fatal: Throwable =>
+            result = Left(fatal)
+            done.countDown()
+            throw fatal
         }
+        result = r
+        done.countDown()
+        r
       }
+      def await(): Either[Throwable, V] = { done.await(); result }
     }
-  }
 
-  /** Joiner retry bound: a joiner that finds the creator failed becomes
-    * the next creator AT MOST this many times before propagating the last
-    * error. Without a bound, N concurrent callers on a persistently
-    * failing hot key run N sequential full builds (ADVICE r16); with it,
-    * the worst case is `JoinerRetryBound + 1` builds per caller, after
-    * which the caller sees the creator's error.
-    */
-  val JoinerRetryBound = 1
+    // Under the monitor: the value under `key`, moved to the
+    // most-recently-accessed end.
+    private def touch(key: String): Option[V] =
+      entries.remove(key).map { v => entries(key) = v; v }
 
-  def registryGet[V](map: scala.collection.concurrent.TrieMap[String, V],
-                     key: String,
-                     cap: Int = RegistryMaxEntries)(build: => V): V =
-    registryGetAttempt(map, key, cap, JoinerRetryBound)(build)
+    private def hit(v: V): V = { hits.incrementAndGet(); v }
 
-  private def registryGetAttempt[V](
-      map: scala.collection.concurrent.TrieMap[String, V],
-      key: String, cap: Int, retriesLeft: Int)(build: => V): V =
-    map.get(key) match {
-      case Some(v) =>
-        touch(map, key)
-        statsFor(map).hits.incrementAndGet()
-        v
-      case None =>
-        val holders = holdersFor(map)
-        // Resolve under the per-map bookkeeping lock: re-check the map
-        // (another thread may have installed between our miss and here),
-        // then join or create the key's holder. The build itself runs
-        // OUTSIDE this lock.
-        val resolved: Either[V, (Holder[V], Boolean)] = holders.synchronized {
-          map.get(key) match {
-            case Some(v) => Left(v)
-            case None => holders.get(key) match {
-              case Some(existing) =>
-                Right((existing.asInstanceOf[Holder[V]], false))
-              case None =>
-                val nh = new Holder[V](() => build)
-                holders.put(key, nh)
-                Right((nh, true))
-            }
+    private def attempt(key: String, retriesLeft: Int)(build: => V): V = {
+      // Resolve under the monitor: a hit, or join/create the key's holder.
+      // The build itself runs OUTSIDE the monitor.
+      val resolved: Either[V, (Holder, Boolean)] = synchronized {
+        touch(key) match {
+          case Some(v) => Left(v)
+          case None => holders.get(key) match {
+            case Some(existing) => Right((existing, false))
+            case None =>
+              val nh = new Holder(() => build)
+              holders(key) = nh
+              Right((nh, true))
           }
         }
-        resolved match {
-          case Left(v) =>
-            touch(map, key)
-            statsFor(map).hits.incrementAndGet()
-            v
-          case Right((h, mine)) =>
-            if (mine) {
-              statsFor(map).misses.incrementAndGet()
-              // creator: run the build, publish BEFORE retiring the holder
-              // (so no other caller can miss the map and start a second
-              // build of a value that already exists), drop the holder on
-              // failure so the next caller retries. A FATAL throwable
-              // escapes compute() after publishing its Left (joiners must
-              // wake) — retire the holder on that path too, or every later
-              // caller would join a dead latch and fail instantly.
-              val r = try h.compute() catch { case fatal: Throwable =>
-                holders.synchronized {
-                  if (holders.get(key).exists(_ eq h)) holders.remove(key)
-                }
-                throw fatal
-              }
-              holders.synchronized {
-                r match {
-                  case Right(v) =>
-                    map.put(key, v)
-                    touchAndEvict(map, key, cap)
-                  case Left(_) => ()
-                }
-                if (holders.get(key).exists(_ eq h)) holders.remove(key)
-              }
-              r.fold(e => throw e, identity)
-            } else {
-              // joiner: duplicate keys block here; distinct keys overlap.
-              // If the creator failed with a RETRIABLE (NonFatal) error,
-              // retry the whole lookup with OUR builder — never re-run the
-              // dead holder's thunk — at most JoinerRetryBound times, then
-              // propagate. Fatal Lefts (VM errors, interrupts) propagate
-              // immediately: re-running an expensive build after an OOM is
-              // how a sick JVM dies slower.
-              h.await() match {
-                case Right(v) =>
-                  touch(map, key)
-                  statsFor(map).hits.incrementAndGet()
-                  v
-                case Left(e) if retriesLeft > 0 &&
-                    scala.util.control.NonFatal(e) =>
-                  registryGetAttempt(map, key, cap, retriesLeft - 1)(build)
-                case Left(e) if scala.util.control.NonFatal(e) => throw e
-                case Left(e) =>
-                  // the CREATOR died fatally or was interrupted — this
-                  // joiner thread was neither, so rethrowing the creator's
-                  // exception verbatim here would misread upstream (an
-                  // InterruptedException surfacing in a thread whose
-                  // interrupt flag is clear; ADVICE r17). Wrap it so the
-                  // joiner's stack says what actually happened.
-                  throw new RegistryBuildFailed(key, e)
-              }
-            }
+      }
+      resolved match {
+        case Left(v) => hit(v)
+        case Right((h, true)) => create(key, h)
+        case Right((h, false)) => join(key, h, retriesLeft)(build)
+      }
+    }
+
+    // Creator: run the build, publish BEFORE retiring the holder (so no
+    // other caller can miss and start a second build of a value that
+    // already exists), drop the holder on failure so the next caller
+    // retries. A FATAL throwable escapes compute() after publishing its
+    // Left (joiners must wake) — retire the holder on that path too, or
+    // every later caller would join a dead latch and fail instantly.
+    private def create(key: String, h: Holder): V = {
+      misses.incrementAndGet()
+      val r = try h.compute() catch { case fatal: Throwable =>
+        retire(key, h)
+        throw fatal
+      }
+      synchronized {
+        r.foreach { v =>
+          entries(key) = v
+          while (entries.size > cap) {
+            val (victim, old) = entries.head
+            entries.remove(victim)
+            evictions.incrementAndGet()
+            releaseValue(old)
+          }
         }
+        retire(key, h)
+      }
+      r.fold(e => throw e, identity)
     }
 
-  // ------------------------------------------------------- registry stats
-  // Per-registry hit/miss/eviction counters (r17, VERDICT ask #3): the
-  // adjudication tool for "did the LRU evict a hot entry mid-sweep". Maps
-  // self-name at first use via `nameRegistry`; unnamed maps report under
-  // their identity hash.
-  private final class Stats {
-    val hits = new java.util.concurrent.atomic.AtomicLong
-    val misses = new java.util.concurrent.atomic.AtomicLong
-    val evictions = new java.util.concurrent.atomic.AtomicLong
-  }
-
-  /** Identity-keyed CHM entry: registries are compared by REFERENCE, never
-    * by content — two empty TrieMaps are `equals` but are distinct
-    * registries, so a plain CHM[AnyRef, _] would conflate them.
-    */
-  private final class IdKey(val ref: AnyRef) {
-    override def hashCode: Int = System.identityHashCode(ref)
-    override def equals(o: Any): Boolean = o match {
-      case k: IdKey => k.ref eq ref
-      case _ => false
+    private def retire(key: String, h: Holder): Unit = synchronized {
+      if (holders.get(key).exists(_ eq h)) holders.remove(key)
     }
+
+    // Joiner: duplicate keys block here; distinct keys overlap. If the
+    // creator failed with a RETRIABLE (NonFatal) error, retry the whole
+    // lookup with OUR builder — never re-run the dead holder's thunk — at
+    // most JoinerRetryBound times, then propagate. Fatal Lefts (VM
+    // errors, interrupts) propagate immediately: re-running an expensive
+    // build after an OOM is how a sick JVM dies slower.
+    private def join(key: String, h: Holder, retriesLeft: Int)(build: => V): V =
+      h.await() match {
+        case Right(v) =>
+          synchronized(touch(key))
+          hit(v)
+        case Left(e) if retriesLeft > 0 && scala.util.control.NonFatal(e) =>
+          attempt(key, retriesLeft - 1)(build)
+        case Left(e) if scala.util.control.NonFatal(e) => throw e
+        case Left(e) =>
+          // the CREATOR died fatally or was interrupted — this joiner
+          // thread was neither, so rethrowing the creator's exception
+          // verbatim here would misread upstream (an InterruptedException
+          // surfacing in a thread whose interrupt flag is clear; ADVICE
+          // r17). Wrap it so the joiner's stack says what actually happened.
+          throw new RegistryBuildFailed(key, e)
+      }
   }
 
-  // ConcurrentHashMap, NOT a synchronized IdentityHashMap (ADVICE r17):
-  // statsFor sits on registryGet's HIT path, and one global monitor there
-  // serializes hits across ALL registries — the cross-registry contention
-  // the parallel-Verify hardening elsewhere exists to avoid. CHM.get is
-  // lock-free; after the first touch a hit costs one get + one AtomicLong
-  // increment.
-  private val stats =
-    new java.util.concurrent.ConcurrentHashMap[IdKey, Stats]
-  private val registryNames = new java.util.IdentityHashMap[AnyRef, String]
-
-  private def statsFor(map: AnyRef): Stats = {
-    val k = new IdKey(map)
-    val s = stats.get(k)
-    if (s != null) s
-    else stats.computeIfAbsent(k, _ => new Stats)
+  /** Every registry constructed so far (spec + monitoring surface). */
+  private[graft] def allRegistries: Seq[Registry[_]] = {
+    import scala.jdk.CollectionConverters._
+    registries.asScala.toSeq
   }
 
-  /** Label `map` in the stats report (idempotent; call once at the
-    * registry definition site).
-    */
-  def nameRegistry(map: AnyRef, name: String): Unit =
-    registryNames.synchronized { registryNames.put(map, name); () }
+  /** Release every registry's values — the one harness teardown. */
+  def clearAll(): Unit = registries.forEach(_.clear())
 
   /** Structured per-registry counters, sorted by name — the committed-
     * record surface (Bench embeds this in BENCH_SELF as `registry_stats`,
     * VERDICT r17 #6: adjudicating "did a cap thrash" must not depend on
     * stderr-log survival).
     */
-  def registryStatsSnapshot(): Seq[(String, Long, Long, Long)] = {
-    import scala.jdk.CollectionConverters._
-    stats.entrySet().asScala.toSeq
-      .map { e =>
-        val name = registryNames.synchronized {
-          Option(registryNames.get(e.getKey.ref))
-        }.getOrElse(s"anon@${System.identityHashCode(e.getKey.ref)}")
-        val s = e.getValue
-        (name, s.hits.get, s.misses.get, s.evictions.get)
-      }
-      .sortBy(_._1)
-  }
+  def registryStatsSnapshot(): Seq[(String, Long, Long, Long)] =
+    allRegistries.map(_.stats).sortBy(_._1)
 
-  /** One line per registry that saw traffic: name hits/misses/evictions.
-    * Misses = builds run; evictions = LRU victims released. A hot face
-    * whose registry shows evictions > 0 mid-sweep is thrashing its cap.
+  /** One line per registry: name hits/misses/evictions. A hot face whose
+    * registry shows evictions > 0 mid-sweep is thrashing its cap.
     */
   def registryStatsReport(): String =
     registryStatsSnapshot()
@@ -435,10 +371,5 @@ object Caching {
       .mkString("\n")
 
   /** Zero every counter (tool runs that want per-phase deltas). */
-  def resetRegistryStats(): Unit = {
-    import scala.jdk.CollectionConverters._
-    stats.values().asScala.foreach { s =>
-      s.hits.set(0); s.misses.set(0); s.evictions.set(0)
-    }
-  }
+  def resetRegistryStats(): Unit = registries.forEach(_.resetStats())
 }

@@ -266,9 +266,7 @@ object RealisticCorpus {
       : (SparkSession, String) => DataFrame =
     (s, d) => Artifacts.namespaced("real")(op(s, ensure(s, d)))
 
-  private val materialized =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-  Caching.nameRegistry(materialized, "realistic.dirs")
+  private val materialized = Caching.Registry[String]("realistic.dirs")
 
   /** Materialize (once per corpus version per session) the realistic twin
     * of `dir` and return its path. Content-keyed like the fit registries:
@@ -277,7 +275,7 @@ object RealisticCorpus {
     * against a normal corpus directory.
     */
   def ensure(spark: SparkSession, dir: String): String =
-    Caching.registryGet(materialized, Fingerprint.dirKey(spark, dir)) {
+    materialized.get(Fingerprint.dirKey(spark, dir)) {
       val key = math.abs(Fingerprint.listingHash(spark, dir))
       val out = s"${sys.props("java.io.tmpdir")}/graft_realistic_v$Version/$key"
       val marker = new java.io.File(s"$out/documents.parquet/_SUCCESS")

@@ -57,15 +57,20 @@ object Verify {
     }, "graft-storage-watermark")
     sampler.setDaemon(true)
     sampler.start()
-    SparkEntry.queries.filter(q => selected(q._1)).foreach { case (name, fn) =>
-      try Caching.scoped {
-        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
-      }
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-      finally Caching.releaseAll() // frames tracked from pooled threads
+    val failed = SparkEntry.queries.toSeq.filter(q => selected(q._1)).flatMap {
+      case (name, fn) =>
+        try {
+          Caching.scoped {
+            fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+              .parquet(s"$outDir/$name")
+          }
+          None
+        }
+        catch { case scala.util.control.NonFatal(e) =>
+          System.err.println(s"[verify] $name failed: ${e.getMessage}")
+          Some(name)
+        }
+        finally Caching.releaseAll() // frames tracked from pooled threads
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
@@ -86,22 +91,10 @@ object Verify {
     // r15): peak cached memory across all RDD/SQL-cache blocks, sampled
     // by the watermark thread started before the query loop
     println(f"[verify] storage high-water: ${storageHighWater.get() / 1e6}%.1f MB")
-    operators.TopicModelOps.clearModelCache() // drop cross-query fit frames
-    operators.VocabOps.clearBpeCache()
-    operators.DedupOps.clearLabelCache()
-    operators.DedupOps.clearIndexCache()
-    operators.ClassifierOps.clearNbCache()
-    operators.RetrievalOps.clearPostingsCache()
-    operators.RetrievalOps.clearRagCache()
-    operators.SimilarityOps.clearBalancedCache()
-    operators.SemDedupOps.clearCache()
-    operators.IndexMaintOps.clearFrozenWorldCache()
-    operators.LmOps.clearNllCache()
-    operators.TopicMetricsOps.clearClassTfCache()
-    operators.TopicMetricsOps.clearTopWordsCache()
-    operators.SketchOps.clearHllHistoryCache()
-    operators.CurationOps.clearEvalGramsCache()
-    graft.multimodal.MediaOps.clearMediaCache()
+    if (failed.nonEmpty)
+      println(s"[verify] failed: ${failed.sorted.mkString(", ")}")
+    Caching.clearAll() // release every build-once registry
     spark.stop()
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

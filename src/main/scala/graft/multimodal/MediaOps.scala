@@ -220,9 +220,7 @@ object MediaOps {
     * clusters from scratch — the slowest row on the r13 board (17.4 s
     * sweep / 11.8 s solo).
     */
-  private val mediaCache = scala.collection.concurrent.TrieMap
-    .empty[String, DataFrame]
-  graft.Caching.nameRegistry(mediaCache, "media.corpus")
+  private val mediaCache = graft.Caching.Registry[DataFrame]("media.corpus")
 
   /** Corpus-scaled band width per dirKey — computed once per corpus
     * version alongside the cached frame (before r15 every signatureCorpus
@@ -230,22 +228,15 @@ object MediaOps {
     * per-call scan across all five media faces the registry was meant to
     * amortize).
     */
-  private val bitsCache = scala.collection.concurrent.TrieMap
-    .empty[String, Int]
-  graft.Caching.nameRegistry(bitsCache, "media.bits")
+  private val bitsCache = graft.Caching.Registry[Int]("media.bits")
 
-  def clearMediaCache(): Unit = {
-    mediaCache.values.foreach(_.unpersist(false))
-    mediaCache.clear()
-    bitsCache.clear()
-  }
+  def clearMediaCache(): Unit = { mediaCache.clear(); bitsCache.clear() }
 
-  /** Hit path is lock-free; the build is serialized per registry
-    * (Caching.registryGet) so concurrent first calls can't both run the
-    * codec pass and leak the losing persisted frame.
+  /** Built once per key (Caching.Registry) so concurrent first calls
+    * can't both run the codec pass and leak the losing persisted frame.
     */
   private def cached(key: String)(build: => DataFrame): DataFrame =
-    graft.Caching.registryGet(mediaCache, key) {
+    mediaCache.get(key) {
       val df = build.persist()
       df.count() // materialize before the building query's scope ends
       df
@@ -262,10 +253,10 @@ object MediaOps {
     import graft.functions.VectorFunctions.asDouble
     import graft.operators.SimilarityOps
     val dirKey = graft.Fingerprint.dirKey(spark, dir)
-    // registryGet, not bare getOrElseUpdate: two concurrent first calls
+    // a registry, not bare getOrElseUpdate: two concurrent first calls
     // would both run the documents count() job (benign value-wise, a
     // wasted scan cost-wise)
-    val bits = graft.Caching.registryGet(bitsCache, dirKey)(
+    val bits = bitsCache.get(dirKey)(
       SimilarityOps.dedupBandBits(Tables.documents(spark, dir).count()))
     lastMediaBits = bits
     cached(s"mcorpus:$dirKey") {

@@ -106,16 +106,14 @@ object ClassifierOps {
     * the train+classify pass is a deterministic fit shared by the
     * confusion and metrics faces; cleared at harness teardown.
     */
-  private val confCache = scala.collection.concurrent.TrieMap
-    .empty[String, Seq[(String, String, Long)]]
-  graft.Caching.nameRegistry(confCache, "classifier.nb")
+  private val confCache =
+    graft.Caching.Registry[Seq[(String, String, Long)]]("classifier.nb")
 
   def clearNbCache(): Unit = confCache.clear()
 
   private def confusionRows(spark: SparkSession,
                             dir: String): Seq[(String, String, Long)] =
-    graft.Caching.registryGet(confCache,
-        graft.Fingerprint.dirKey(spark, dir)) {
+    confCache.get(graft.Fingerprint.dirKey(spark, dir)) {
       val docs = Tables.documents(spark, dir)
       val (prior, lik) = nbTrain(docs, "text", "lang")
       nbClassify(prior, lik, docs, "text", "doc_id")

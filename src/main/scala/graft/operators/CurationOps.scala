@@ -70,19 +70,13 @@ object CurationOps {
     * decontam audits, both funnels, both five-stage ingest gates) probe
     * this same frozen artifact.
     */
-  private val evalGramsCache = scala.collection.concurrent.TrieMap
-    .empty[String, DataFrame]
-  graft.Caching.nameRegistry(evalGramsCache, "curation.evalgrams")
+  private val evalGramsCache = graft.Caching.Registry[DataFrame]("curation.evalgrams")
 
-  def clearEvalGramsCache(): Unit = {
-    evalGramsCache.values.foreach(_.unpersist(false))
-    evalGramsCache.clear()
-  }
+  def clearEvalGramsCache(): Unit = evalGramsCache.clear()
 
   private[graft] def corpusEvalGrams(spark: SparkSession, dir: String,
                                      n: Int = 13): DataFrame =
-    graft.Caching.registryGet(evalGramsCache,
-        s"${graft.Fingerprint.dirKey(spark, dir)}|$n") {
+    evalGramsCache.get(s"${graft.Fingerprint.dirKey(spark, dir)}|$n") {
       val g = Tables.documents(spark, dir)
         .filter(SamplingOps.hashBucket(col("doc_id"), 10000) < 500)
         .select(explode(gramHashes(col("text"), n)).as("gram"))

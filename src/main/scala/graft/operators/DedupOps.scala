@@ -174,14 +174,11 @@ object DedupOps {
     * builds, and the contraction gauge — each was re-hashing the corpus
     * per invocation. Keyed corpus fingerprint × tier.
     */
-  private val sigCache = scala.collection.concurrent.TrieMap
-    .empty[String, DataFrame]
-  graft.Caching.nameRegistry(sigCache, "dedup.sigs")
+  private val sigCache = graft.Caching.Registry[DataFrame]("dedup.sigs")
 
   private[operators] def corpusMinhashSigs(spark: SparkSession,
                                            dir: String): DataFrame =
-    graft.Caching.registryGet(sigCache,
-        s"${graft.Fingerprint.dirKey(spark, dir)}|minhash") {
+    sigCache.get(s"${graft.Fingerprint.dirKey(spark, dir)}|minhash") {
       val sigs = minhashSignatures(Tables.documents(spark, dir), "text")
         .select(col("doc_id"), col("sh_hashes"), col("sig"), col("bands"))
         .persist()
@@ -191,8 +188,7 @@ object DedupOps {
 
   private[operators] def corpusBandedFps(spark: SparkSession,
                                          dir: String): DataFrame =
-    graft.Caching.registryGet(sigCache,
-        s"${graft.Fingerprint.dirKey(spark, dir)}|simhash") {
+    sigCache.get(s"${graft.Fingerprint.dirKey(spark, dir)}|simhash") {
       val fps = simhashFingerprints(Tables.documents(spark, dir), "text")
         .select(col("doc_id"), col("simhash"),
           simhashBands(col("simhash"), 4, SimhashBandBits).as("bands"))
@@ -290,8 +286,7 @@ object DedupOps {
     */
   private[operators] def corpusGramSets(spark: SparkSession, dir: String,
                                         n: Int = 3): DataFrame =
-    graft.Caching.registryGet(sigCache,
-        s"${graft.Fingerprint.dirKey(spark, dir)}|grams$n") {
+    sigCache.get(s"${graft.Fingerprint.dirKey(spark, dir)}|grams$n") {
       val g = Tables.documents(spark, dir)
         .select(col("doc_id"),
           windowHashSet(tokenHashesK(normalized(col("text"))), n).as("grams"))
@@ -837,20 +832,13 @@ object DedupOps {
     * for every consumer face — four faces (ingest gate, five-stage gate,
     * and their realistic twins) probe it per corpus.
     */
-  private val indexCache = scala.collection.concurrent.TrieMap
-    .empty[String, (DataFrame, Long)]
-  graft.Caching.nameRegistry(indexCache, "dedup.index")
+  private val indexCache = graft.Caching.Registry[(DataFrame, Long)]("dedup.index")
 
-  def clearIndexCache(): Unit = {
-    indexCache.values.foreach(_._1.unpersist(false))
-    indexCache.clear()
-    indexBucketsCache.values.foreach(_.unpersist(false))
-    indexBucketsCache.clear()
-  }
+  def clearIndexCache(): Unit = { indexCache.clear(); indexBucketsCache.clear() }
 
   private[graft] def storedIndex(spark: SparkSession,
                                  dir: String): (DataFrame, Long) =
-    graft.Caching.registryGet(indexCache,
+    indexCache.get(
         s"${graft.Fingerprint.dirKey(spark, dir)}|${graft.Artifacts.contextTag}") {
       val docs = Tables.documents(spark, dir)
       val cut = docs
@@ -882,13 +870,11 @@ object DedupOps {
     * an `Exchange` repeated for data that is already laid out as needed).
     * Registry-persisted beside the index itself, same key.
     */
-  private val indexBucketsCache = scala.collection.concurrent.TrieMap
-    .empty[String, DataFrame]
-  graft.Caching.nameRegistry(indexBucketsCache, "dedup.indexbuckets")
+  private val indexBucketsCache = graft.Caching.Registry[DataFrame]("dedup.indexbuckets")
 
   private[graft] def storedIndexBuckets(spark: SparkSession,
                                         dir: String): DataFrame =
-    graft.Caching.registryGet(indexBucketsCache,
+    indexBucketsCache.get(
         s"${graft.Fingerprint.dirKey(spark, dir)}|${graft.Artifacts.contextTag}") {
       val (stored, _) = storedIndex(spark, dir)
       val b = stored
@@ -917,21 +903,13 @@ object DedupOps {
     * two fixed-width columns per doc — assignment-table-sized, the same
     * class as the cached KMeans assignments.
     */
-  private val labelCache = scala.collection.concurrent.TrieMap
-    .empty[String, DataFrame]
-  graft.Caching.nameRegistry(labelCache, "dedup.labels")
+  private val labelCache = graft.Caching.Registry[DataFrame]("dedup.labels")
 
-  def clearLabelCache(): Unit = {
-    labelCache.values.foreach(_.unpersist(false))
-    labelCache.clear()
-    sigCache.values.foreach(_.unpersist(false))
-    sigCache.clear()
-  }
+  def clearLabelCache(): Unit = { labelCache.clear(); sigCache.clear() }
 
   private[operators] def minhashLabels(spark: SparkSession,
                                        dir: String): DataFrame =
-    graft.Caching.registryGet(labelCache,
-        graft.Fingerprint.dirKey(spark, dir)) {
+    labelCache.get(graft.Fingerprint.dirKey(spark, dir)) {
       // bucket explode over the registry-shared signature table — the
       // label build and the pair face hash the corpus once between them
       val labels = propagateLabels(

@@ -61,12 +61,11 @@ object Embedders {
     * cross-query cache — intentionally NOT scope-released, like
     * TopicModelOps' fitted models).
     */
-  private val cache = scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-  graft.Caching.nameRegistry(cache, "embedders.w2v")
+  private val cache = graft.Caching.Registry[DataFrame]("embedders.w2v")
 
   /** Shared unit-vector Word2Vec corpus over the documents fixture. */
   private def w2vCorpus(spark: SparkSession, dir: String): DataFrame = {
-    val corpus = graft.Caching.registryGet(cache, s"w2v:$dir") {
+    val corpus = cache.get(s"w2v:$dir") {
       val docs = Tables.documents(spark, dir)
       new Word2VecEmbedder().embed(docs, "doc_id", "text")
         .select(col("doc_id").as("vec_id"), unitVector(col("embedding")).as("nv"))
@@ -99,7 +98,7 @@ object Embedders {
     // the seeded 100-doc fit joins the fitted-embedding registry like every
     // other deterministic fit (w2vCorpus, the LDA/KMeans caches) — repeat
     // invocations re-read the persisted vectors instead of re-training
-    val w2v = graft.Caching.registryGet(cache, s"w2v100:$dir")(
+    val w2v = cache.get(s"w2v100:$dir")(
         new Word2VecEmbedder().embed(docs, "doc_id", "text").persist())
       .withColumn("embedder", lit("word2vec"))
     // the w2v side's fitted vectors export for the oracle; the precomputed

@@ -152,21 +152,10 @@ object IndexMaintOps {
     * artifact context). The RETRAINED world and both probe passes stay
     * live per run: they ARE the gauge's measurement.
     */
-  private val frozenWorldCache = scala.collection.concurrent.TrieMap
-    .empty[String, (DataFrame, DataFrame, DataFrame, DataFrame)]
-  graft.Caching.nameRegistry(frozenWorldCache, "indexmaint.worlds")
+  private val frozenWorldCache =
+    graft.Caching.Registry[(DataFrame, DataFrame, DataFrame, DataFrame)]("indexmaint.worlds")
 
-  def clearFrozenWorldCache(): Unit = {
-    frozenWorldCache.values.foreach { case (ca, m, cb, ib) =>
-      ca.unpersist(false); m.unpersist(false)
-      cb.unpersist(false); ib.unpersist(false)
-    }
-    frozenWorldCache.clear()
-    incWorldCache.values.foreach { case (c, b) =>
-      c.unpersist(false); b.unpersist(false)
-    }
-    incWorldCache.clear()
-  }
+  def clearFrozenWorldCache(): Unit = { frozenWorldCache.clear(); incWorldCache.clear() }
 
   /** Stored-index registry for the INCREMENTAL face's version-A world —
     * (frozen centroids, built A-postings), both persisted. The face's own
@@ -179,9 +168,8 @@ object IndexMaintOps {
     * Same key shape as `indexmaint.worlds` (corpus fingerprint × artifact
     * context).
     */
-  private val incWorldCache = scala.collection.concurrent.TrieMap
-    .empty[String, (DataFrame, DataFrame)]
-  graft.Caching.nameRegistry(incWorldCache, "indexmaint.incworld")
+  private val incWorldCache =
+    graft.Caching.Registry[(DataFrame, DataFrame)]("indexmaint.incworld")
 
   /** Both of the gauge's index worlds — (frozen centroids, maintained
     * postings, retrained centroids, retrained postings), all persisted.
@@ -194,7 +182,7 @@ object IndexMaintOps {
     */
   private def driftWorlds(spark: SparkSession, dir: String)
       : (DataFrame, DataFrame, DataFrame, DataFrame) =
-    graft.Caching.registryGet(frozenWorldCache,
+    frozenWorldCache.get(
         s"${graft.Fingerprint.dirKey(spark, dir)}|${graft.Artifacts.contextTag}") {
       val (old, neu) = versions(spark, dir)
       val oldC = graft.Caching.track(old)
@@ -264,7 +252,7 @@ object IndexMaintOps {
   def ivfIncrementalQuery(spark: SparkSession, dir: String): DataFrame = {
     val (old, neu) = versions(spark, dir)
     val oldC = graft.Caching.track(old)
-    val (cents, built) = graft.Caching.registryGet(incWorldCache,
+    val (cents, built) = incWorldCache.get(
         s"${graft.Fingerprint.dirKey(spark, dir)}|${graft.Artifacts.contextTag}") {
       def mat(df: DataFrame): DataFrame = {
         val p = df.persist()

@@ -310,24 +310,10 @@ object LmOps {
     * joins were the measured bound of `quality_gate_agreement` (14.0 s at
     * the 10× probe).
     */
-  private val nllCache = scala.collection.concurrent.TrieMap
-    .empty[String, DataFrame]
-  graft.Caching.nameRegistry(nllCache, "lm.nll")
+  private val nllCache = graft.Caching.Registry[DataFrame]("lm.nll")
 
-  def clearNllCache(): Unit = {
-    nllCache.values.foreach(_.unpersist(false))
-    nllCache.clear()
-    bucketedCache.values.foreach(_.unpersist(false))
-    bucketedCache.clear()
-    historyModelCache.values.foreach { m =>
-      m.logp.unpersist(false); m.missLogp.unpersist(false)
-    }
-    historyModelCache.clear()
-    splitModelCache.values.foreach { m =>
-      m.logp.unpersist(false); m.missLogp.unpersist(false)
-    }
-    splitModelCache.clear()
-  }
+  def clearNllCache(): Unit =
+    Seq(nllCache, bucketedCache, historyModelCache, splitModelCache).foreach(_.clear())
 
   /** Registry for the HELD-IN-split model (train = doc_id % 5 ≠ 0) the
     * cross-corpus faces score with: `txt_lm_cross` and the quality gate
@@ -336,13 +322,10 @@ object LmOps {
     * `lm.history` contract with a different cut derivation. Scoring the
     * held-out split stays live per run: it IS each face's measurement.
     */
-  private val splitModelCache = scala.collection.concurrent.TrieMap
-    .empty[String, BigramLm]
-  graft.Caching.nameRegistry(splitModelCache, "lm.splitmodel")
+  private val splitModelCache = graft.Caching.Registry[BigramLm]("lm.splitmodel")
 
   private def heldInModel(spark: SparkSession, dir: String): BigramLm =
-    graft.Caching.registryGet(splitModelCache,
-        s"${graft.Fingerprint.dirKey(spark, dir)}|mod5") {
+    splitModelCache.get(s"${graft.Fingerprint.dirKey(spark, dir)}|mod5") {
       val m = bigramModel(
         Tables.documents(spark, dir).filter(col("doc_id") % 5 =!= 0),
         "text", "lang")
@@ -358,14 +341,11 @@ object LmOps {
     * it (the frozen model is a stored table in production, like the
     * minhash index it rides beside).
     */
-  private val historyModelCache = scala.collection.concurrent.TrieMap
-    .empty[String, BigramLm]
-  graft.Caching.nameRegistry(historyModelCache, "lm.history")
+  private val historyModelCache = graft.Caching.Registry[BigramLm]("lm.history")
 
   def frozenHistoryModel(spark: SparkSession, dir: String, cut: Long,
                          textCol: String, langCol: String): BigramLm =
-    graft.Caching.registryGet(historyModelCache,
-        s"${graft.Fingerprint.dirKey(spark, dir)}|$cut") {
+    historyModelCache.get(s"${graft.Fingerprint.dirKey(spark, dir)}|$cut") {
       val history = Tables.documents(spark, dir)
         .filter(col("doc_id") <= cut)
       val m = bigramModel(history, textCol, langCol)
@@ -379,8 +359,7 @@ object LmOps {
     * branch (6-dp pre-round guard included).
     */
   def selfScoredNll(spark: SparkSession, dir: String): DataFrame =
-    graft.Caching.registryGet(nllCache,
-      graft.Fingerprint.dirKey(spark, dir))(buildSelfScoredNll(spark, dir))
+    nllCache.get(graft.Fingerprint.dirKey(spark, dir))(buildSelfScoredNll(spark, dir))
 
   private def buildSelfScoredNll(spark: SparkSession, dir: String)
       : DataFrame = {
@@ -422,17 +401,14 @@ object LmOps {
       // gate agreement, both funnels) — registry it like its parent
       // instead of re-running the tercile windows per consumer (r17:
       // ~0.5 s per funnel run at sf0.1)
-      graft.Caching.registryGet(bucketedCache,
-          graft.Fingerprint.dirKey(spark, dir)) {
+      bucketedCache.get(graft.Fingerprint.dirKey(spark, dir)) {
         val b = pplBucketedUncached(spark, dir, 1.0).persist()
         b.count() // materialize before the building query's scope ends
         b
       }
     else pplBucketedUncached(spark, dir, thresholdFrac)
 
-  private val bucketedCache = scala.collection.concurrent.TrieMap
-    .empty[String, DataFrame]
-  graft.Caching.nameRegistry(bucketedCache, "lm.bucketed")
+  private val bucketedCache = graft.Caching.Registry[DataFrame]("lm.bucketed")
 
   private def pplBucketedUncached(spark: SparkSession, dir: String,
                                   thresholdFrac: Double): DataFrame = {

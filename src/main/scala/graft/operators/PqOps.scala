@@ -171,24 +171,14 @@ object PqOps {
     * so a cache-storage eviction between queries recomputes transforms,
     * never fits.
     */
-  private val cache = scala.collection.concurrent.TrieMap.empty[String, Any]
-  graft.Caching.nameRegistry(cache, "pq.codebooks")
+  private val cache = graft.Caching.Registry[Any]("pq.codebooks")
   private def cached[T](key: String)(f: => T): T =
-    graft.Caching.registryGet(cache, key)(f).asInstanceOf[T]
+    cache.get(key)(f).asInstanceOf[T]
 
   /** Evict the cached fits (escape hatch for long-lived sessions),
     * releasing the persisted index frames.
     */
-  def clearFits(): Unit = {
-    cache.values.foreach {
-      case t: Product => t.productIterator.foreach {
-        case df: DataFrame => df.unpersist(false)
-        case _ => ()
-      }
-      case _ => ()
-    }
-    cache.clear()
-  }
+  def clearFits(): Unit = cache.clear()
 
   /** Build (once per dir) the full PQ index over the fixture corpus and
     * export its artifacts (coarse centroids + list assignments + codebooks

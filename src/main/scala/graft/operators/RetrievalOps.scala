@@ -53,23 +53,12 @@ object RetrievalOps {
     * version instead of five. Same lifetime contract as DedupOps'
     * labelCache — Bench/Verify clear at teardown.
     */
-  private val postingsCache = scala.collection.concurrent.TrieMap
-    .empty[String, DataFrame]
-  private val posPostingsCache = scala.collection.concurrent.TrieMap
-    .empty[String, DataFrame]
-  graft.Caching.nameRegistry(postingsCache, "retrieval.postings")
-  graft.Caching.nameRegistry(posPostingsCache, "retrieval.pospostings")
+  private val postingsCache = graft.Caching.Registry[DataFrame]("retrieval.postings")
+  private val posPostingsCache =
+    graft.Caching.Registry[DataFrame]("retrieval.pospostings")
 
-  def clearPostingsCache(): Unit = {
-    postingsCache.values.foreach(_.unpersist(false))
-    postingsCache.clear()
-    posPostingsCache.values.foreach(_.unpersist(false))
-    posPostingsCache.clear()
-    frozenStandingCache.values.foreach(_.terms.unpersist(false))
-    frozenStandingCache.clear()
-    enrichedCache.values.foreach(_.unpersist(false))
-    enrichedCache.clear()
-  }
+  def clearPostingsCache(): Unit =
+    Seq(postingsCache, posPostingsCache, frozenStandingCache, enrichedCache).foreach(_.clear())
 
   /** Cross-query registry of the ENRICHED corpus postings — per-posting
     * BM25 impact weights (word, doc_id, contrib), the precomputed form a
@@ -80,13 +69,10 @@ object RetrievalOps {
     * index refresh face keeps its live enrichment — re-deriving serve
     * stats from the refreshed index IS that operator.
     */
-  private val enrichedCache = scala.collection.concurrent.TrieMap
-    .empty[String, DataFrame]
-  graft.Caching.nameRegistry(enrichedCache, "retrieval.enriched")
+  private val enrichedCache = graft.Caching.Registry[DataFrame]("retrieval.enriched")
 
   private def corpusEnriched(spark: SparkSession, dir: String): DataFrame =
-    graft.Caching.registryGet(enrichedCache,
-        graft.Fingerprint.dirKey(spark, dir)) {
+    enrichedCache.get(graft.Fingerprint.dirKey(spark, dir)) {
       val e = bm25Enriched(corpusPostings(spark, dir)).persist()
       e.count() // materialize before the building query's scope ends
       e
@@ -100,13 +86,11 @@ object RetrievalOps {
     * (fresh-B) stats and both scoring passes stay live — they ARE the
     * gauge's measurement (the indexmaint.worlds contract, lexical twin).
     */
-  private val frozenStandingCache = scala.collection.concurrent.TrieMap
-    .empty[String, StandingQueries]
-  graft.Caching.nameRegistry(frozenStandingCache, "retrieval.frozenstanding")
+  private val frozenStandingCache =
+    graft.Caching.Registry[StandingQueries]("retrieval.frozenstanding")
 
   private def corpusPostings(spark: SparkSession, dir: String): DataFrame =
-    graft.Caching.registryGet(postingsCache,
-        graft.Fingerprint.dirKey(spark, dir)) {
+    postingsCache.get(graft.Fingerprint.dirKey(spark, dir)) {
       val tf = postings(Tables.documents(spark, dir), "doc_id", "text")
         .persist()
       tf.count() // materialize before the building query's scope ends
@@ -126,8 +110,7 @@ object RetrievalOps {
       posexplode(tokens(col(textCol))).as(Seq("pos", "word")))
 
   private def corpusPositional(spark: SparkSession, dir: String): DataFrame =
-    graft.Caching.registryGet(posPostingsCache,
-        graft.Fingerprint.dirKey(spark, dir)) {
+    posPostingsCache.get(graft.Fingerprint.dirKey(spark, dir)) {
       val pp = positionalPostings(Tables.documents(spark, dir), "doc_id", "text")
         .persist()
       pp.count()
@@ -779,7 +762,7 @@ object RetrievalOps {
     // frozen by contract ("derived from one postings build ... frozen here
     // the way a deployed percolator freezes its index stats") — registry
     // per corpus version, same pattern as the drift gauge's frozen world
-    val standing = graft.Caching.registryGet(frozenStandingCache,
+    val standing = frozenStandingCache.get(
         s"${graft.Fingerprint.dirKey(spark, dir)}|corpus") {
       val s = buildStandingFromPostings(corpusPostings(spark, dir), _ < 8)
       val terms = s.terms.persist()
@@ -832,8 +815,7 @@ object RetrievalOps {
     val cut = docs.agg(floor(max(col("doc_id")) * 0.9).cast("long"))
       .collect()(0).getLong(0)
     val neu = docs.filter(col("doc_id") % 101 =!= 0)
-    val frozen = graft.Caching.registryGet(frozenStandingCache,
-        s"${graft.Fingerprint.dirKey(spark, dir)}|A") {
+    val frozen = frozenStandingCache.get(s"${graft.Fingerprint.dirKey(spark, dir)}|A") {
       val old = docs.filter(col("doc_id") <= cut)
         .withColumn("text", when(col("doc_id") % 97 === 0,
           concat(col("text"), lit(" stale edition"))).otherwise(col("text")))
@@ -1131,20 +1113,14 @@ object RetrievalOps {
     * fingerprint × artifact context; the realistic twin's namespaced
     * context gets its own entry AND its own `real/` artifacts).
     */
-  private val ragCache = scala.collection.concurrent.TrieMap
-    .empty[String, (DataFrame, DataFrame, DataFrame)]
-  graft.Caching.nameRegistry(ragCache, "retrieval.ragindex")
+  private val ragCache =
+    graft.Caching.Registry[(DataFrame, DataFrame, DataFrame)]("retrieval.ragindex")
 
-  def clearRagCache(): Unit = {
-    ragCache.values.foreach { case (c, i, ce) =>
-      c.unpersist(false); i.unpersist(false); ce.unpersist(false)
-    }
-    ragCache.clear()
-  }
+  def clearRagCache(): Unit = ragCache.clear()
 
   private def ragWorlds(spark: SparkSession, dir: String)
       : (DataFrame, DataFrame, DataFrame) =
-    graft.Caching.registryGet(ragCache,
+    ragCache.get(
         s"${graft.Fingerprint.dirKey(spark, dir)}|${graft.Artifacts.contextTag}") {
       def mat(df: DataFrame): DataFrame = {
         val p = df.persist()

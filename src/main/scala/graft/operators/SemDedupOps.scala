@@ -54,13 +54,9 @@ object SemDedupOps {
     * key, so reruns inside a service lifetime reuse the persisted
     * assignment (same contract as TopicModelOps' registry).
     */
-  private val cache = scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-  graft.Caching.nameRegistry(cache, "semdedup.assign")
+  private val cache = graft.Caching.Registry[DataFrame]("semdedup.assign")
 
-  def clearCache(): Unit = {
-    cache.values.foreach(_.unpersist(false))
-    cache.clear()
-  }
+  def clearCache(): Unit = cache.clear()
 
   /** (vec_id, cluster, nv): unit vectors under a corpus-scaled k-means
     * quantizer — k = ⌈n/ClusterSize⌉ (floor 8), fit on a deterministic
@@ -72,7 +68,7 @@ object SemDedupOps {
     */
   private def unitAssigned(spark: SparkSession, dir: String): DataFrame = {
     val key = s"semdedup:${graft.Fingerprint.dirKey(spark, dir)}"
-    val assigned = graft.Caching.registryGet(cache, key) {
+    val assigned = cache.get(key) {
       import org.apache.spark.ml.clustering.KMeans
       import org.apache.spark.ml.functions.array_to_vector
       val unit = Tables.embeddings(spark, dir)

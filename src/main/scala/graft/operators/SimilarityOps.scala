@@ -200,15 +200,12 @@ object SimilarityOps {
     * width used so the per-namespace oracle knob is re-recorded on every
     * access, not just the building one.
     */
-  private val bandsCache = scala.collection.concurrent.TrieMap
-    .empty[String, (DataFrame, Int)]
-  graft.Caching.nameRegistry(bandsCache, "sim.bands")
+  private val bandsCache = graft.Caching.Registry[(DataFrame, Int)]("sim.bands")
 
   private def bandedCorpus(spark: SparkSession, dir: String, tier: String,
                            bands: Int, bitsOf: DataFrame => Int)
       : (DataFrame, Int) =
-    graft.Caching.registryGet(bandsCache,
-        s"${graft.Fingerprint.dirKey(spark, dir)}|$tier") {
+    bandsCache.get(s"${graft.Fingerprint.dirKey(spark, dir)}|$tier") {
       val embs = Tables.embeddings(spark, dir)
       val bits = bitsOf(embs)
       val df = withBands(unitCorpus(embs), bands, bits).persist()
@@ -310,22 +307,11 @@ object SimilarityOps {
     * twice. Keyed corpus-fingerprint × artifact context so Verify's
     * export world and each corpus flavor get their own entry.
     */
-  private val balancedCache = scala.collection.concurrent.TrieMap
-    .empty[String, (DataFrame, DataFrame, DataFrame, Long, (Int, Int))]
-  graft.Caching.nameRegistry(balancedCache, "sim.balanced")
+  private val balancedCache =
+    graft.Caching.Registry[(DataFrame, DataFrame, DataFrame, Long, (Int, Int))]("sim.balanced")
 
-  def clearBalancedCache(): Unit = {
-    balancedCache.values.foreach { case (c, i, ce, _, _) =>
-      c.unpersist(false); i.unpersist(false); ce.unpersist(false)
-    }
-    balancedCache.clear()
-    ivfWorldCache.values.foreach { case (c, i, ce) =>
-      c.unpersist(false); i.unpersist(false); ce.unpersist(false)
-    }
-    ivfWorldCache.clear()
-    bandsCache.values.foreach(_._1.unpersist(false))
-    bandsCache.clear()
-  }
+  def clearBalancedCache(): Unit =
+    Seq(balancedCache, ivfWorldCache, bandsCache).foreach(_.clear())
 
   /** Stored-index registry for the PLAIN IVF world — (unit corpus,
     * assignments, centroids), all persisted. Same contract as
@@ -338,13 +324,12 @@ object SimilarityOps {
     * balanced/RAG tiers already rode registries). The fit is seeded, so
     * every consumer sees the identical index the Artifacts export pins.
     */
-  private val ivfWorldCache = scala.collection.concurrent.TrieMap
-    .empty[String, (DataFrame, DataFrame, DataFrame)]
-  graft.Caching.nameRegistry(ivfWorldCache, "sim.ivfworld")
+  private val ivfWorldCache =
+    graft.Caching.Registry[(DataFrame, DataFrame, DataFrame)]("sim.ivfworld")
 
   private[operators] def ivfWorld(spark: SparkSession, dir: String)
       : (DataFrame, DataFrame, DataFrame) =
-    graft.Caching.registryGet(ivfWorldCache,
+    ivfWorldCache.get(
         s"${graft.Fingerprint.dirKey(spark, dir)}|${graft.Artifacts.contextTag}") {
       def mat(df: DataFrame): DataFrame = {
         val p = df.persist()
@@ -358,7 +343,7 @@ object SimilarityOps {
 
   private def balancedWorlds(spark: SparkSession, dir: String)
       : (DataFrame, DataFrame, DataFrame, Long, (Int, Int)) =
-    graft.Caching.registryGet(balancedCache,
+    balancedCache.get(
         s"${graft.Fingerprint.dirKey(spark, dir)}|${graft.Artifacts.contextTag}") {
       def mat(df: DataFrame): DataFrame = {
         val p = df.persist()

@@ -284,14 +284,10 @@ object SketchOps {
     * invocation. Keyed corpus fingerprint × artifact context like every
     * stored-index registry; ≤ m rows per entry.
     */
-  private val hllHistoryCache = scala.collection.concurrent.TrieMap
-    .empty[String, (DataFrame, Long)]
-  graft.Caching.nameRegistry(hllHistoryCache, "sketch.hllhistory")
+  private val hllHistoryCache =
+    graft.Caching.Registry[(DataFrame, Long)]("sketch.hllhistory")
 
-  def clearHllHistoryCache(): Unit = {
-    hllHistoryCache.values.foreach(_._1.unpersist(false))
-    hllHistoryCache.clear()
-  }
+  def clearHllHistoryCache(): Unit = hllHistoryCache.clear()
 
   def hllIncremental(spark: SparkSession, dir: String): DataFrame = {
     val m = 1024
@@ -299,7 +295,7 @@ object SketchOps {
     def registersOf(d: DataFrame) = hllRegisters(
       d.select(explode(tokens(col("text"))).as("word"))
         .select(rollingHash(col("word")).as("h")), "h", m)
-    val (stored, cut) = graft.Caching.registryGet(hllHistoryCache,
+    val (stored, cut) = hllHistoryCache.get(
         s"${graft.Fingerprint.dirKey(spark, dir)}|${graft.Artifacts.contextTag}") {
       val c = docs
         .agg(floor(max(col("doc_id")) * 0.9).cast("long"))

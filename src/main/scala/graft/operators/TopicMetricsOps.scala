@@ -65,18 +65,12 @@ object TopicMetricsOps {
     * space; generic callers (EP pipelines over arbitrary cluster frames)
     * stay on the per-query path.
     */
-  private val classTfCache = scala.collection.concurrent.TrieMap
-    .empty[String, DataFrame]
-  graft.Caching.nameRegistry(classTfCache, "topicmetrics.classtf")
+  private val classTfCache = graft.Caching.Registry[DataFrame]("topicmetrics.classtf")
 
-  def clearClassTfCache(): Unit = {
-    classTfCache.values.foreach(_.unpersist(false))
-    classTfCache.clear()
-  }
+  def clearClassTfCache(): Unit = classTfCache.clear()
 
   private def langClassTf(spark: SparkSession, dir: String): DataFrame =
-    graft.Caching.registryGet(classTfCache,
-        s"${graft.Fingerprint.dirKey(spark, dir)}|uni") {
+    classTfCache.get(s"${graft.Fingerprint.dirKey(spark, dir)}|uni") {
       val tf = classTfOf(Tables.documents(spark, dir), "lang",
         tokens(col("text"))).persist()
       tf.count() // materialize before the building query's scope ends
@@ -84,8 +78,7 @@ object TopicMetricsOps {
     }
 
   private def langClassTfBigrams(spark: SparkSession, dir: String): DataFrame =
-    graft.Caching.registryGet(classTfCache,
-        s"${graft.Fingerprint.dirKey(spark, dir)}|bi") {
+    classTfCache.get(s"${graft.Fingerprint.dirKey(spark, dir)}|bi") {
       val staged = Tables.documents(spark, dir)
         .select(col("lang"), tokens(col("text")).as("toks"))
       val tf = classTfOf(staged, "lang",
@@ -641,19 +634,13 @@ object TopicMetricsOps {
     * scan per invocation just to re-derive it. The coherence cores'
     * presence/window scans stay live — they ARE each face's measurement.
     */
-  private val topWordsCache = scala.collection.concurrent.TrieMap
-    .empty[String, DataFrame]
-  graft.Caching.nameRegistry(topWordsCache, "topicmetrics.topwords")
+  private val topWordsCache = graft.Caching.Registry[DataFrame]("topicmetrics.topwords")
 
-  def clearTopWordsCache(): Unit = {
-    topWordsCache.values.foreach(_.unpersist(false))
-    topWordsCache.clear()
-  }
+  def clearTopWordsCache(): Unit = topWordsCache.clear()
 
   private def corpusTopWords(spark: SparkSession, dir: String,
                              n: Int): DataFrame =
-    graft.Caching.registryGet(topWordsCache,
-        s"${graft.Fingerprint.dirKey(spark, dir)}|$n") {
+    topWordsCache.get(s"${graft.Fingerprint.dirKey(spark, dir)}|$n") {
       val top = topWordsOfTokens(
         tokenizedDocs(Tables.documents(spark, dir), "text"), n).persist()
       top.count() // materialize before the building query's scope ends

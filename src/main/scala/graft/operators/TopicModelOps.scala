@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.ml.clustering.{KMeans, LDA}
 import org.apache.spark.ml.feature.{CountVectorizer, CountVectorizerModel, PCA}
 import org.apache.spark.ml.functions.{array_to_vector, vector_to_array}
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -43,30 +43,22 @@ object TopicModelOps {
     * frames under it — grows with the distinct (dir, k, maxIter) key space.
     * A bounded harness run never sees more than a handful of keys; a
     * long-lived SERVICE that cycles corpora must call `clearModelCache()`
-    * between corpora (Bench/Verify call it at teardown).
+    * between corpora (Bench/Verify clear every registry at teardown).
     */
-  private val cache = scala.collection.concurrent.TrieMap.empty[String, Any]
-  graft.Caching.nameRegistry(cache, "topicmodel.fits")
+  private val cache =
+    graft.Caching.Registry[Any]("topicmodel.fits", graft.Caching.ModelRegistryMaxEntries)
   // ModelRegistryMaxEntries, not the default: this registry's per-corpus
   // working set is ≥ 9 keys (base lda/ldaT + four grid fits + km/kmNoise +
   // example/reduce variants) — an 8-entry cap thrashes every bench sweep,
   // re-fitting the 5:20 LDA that ldaTopicCoherence reuses (measured 2.93 →
   // 6.43 s median in r15; back under 3 s with the sized cap + LRU).
   private def cached[T](key: String)(f: => T): T =
-    graft.Caching.registryGet(cache, key,
-      graft.Caching.ModelRegistryMaxEntries)(f).asInstanceOf[T]
+    cache.get(key)(f).asInstanceOf[T]
 
   /** Evict every cached fit and unpersist the frames it pins (the escape
     * hatch for service lifetimes — see the registry contract above).
     */
-  def clearModelCache(): Unit = {
-    cache.values.foreach {
-      case df: Dataset[_] => df.unpersist(false)
-      case (vecs: Dataset[_], _, _) => vecs.unpersist(false)
-      case _ => ()
-    }
-    cache.clear()
-  }
+  def clearModelCache(): Unit = cache.clear()
 
   /** Number of live registry entries (spec + monitoring surface). */
   def modelCacheSize: Int = cache.size

@@ -299,9 +299,8 @@ object VocabOps {
     * loop is a deterministic seeded fit; Bench/Verify clear at teardown).
     * Entries are driver-side tuples only — no pinned frames.
     */
-  private val bpeCache = scala.collection.concurrent.TrieMap
-    .empty[String, Seq[(Int, String, String, String, Long)]]
-  graft.Caching.nameRegistry(bpeCache, "vocab.bpe")
+  private val bpeCache =
+    graft.Caching.Registry[Seq[(Int, String, String, String, Long)]]("vocab.bpe")
 
   def clearBpeCache(): Unit = bpeCache.clear()
 
@@ -313,8 +312,7 @@ object VocabOps {
 
   private def trainedMerges(spark: SparkSession, dir: String,
                             k: Int): Seq[(Int, String, String, String, Long)] =
-    graft.Caching.registryGet(bpeCache,
-        s"${graft.Fingerprint.dirKey(spark, dir)}|$k")(
+    bpeCache.get(s"${graft.Fingerprint.dirKey(spark, dir)}|$k")(
       bpeTrainLocal(collectDict(topDict(spark, dir)), k))
 
   /** Query: 8 BPE merges learned from the top-200-word dictionary of the

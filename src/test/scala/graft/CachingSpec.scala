@@ -2,10 +2,12 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-/** The persist-registry contract the harnesses rely on: caches tracked
-  * inside a `scoped` block are gone when the block exits (no storage growth
-  * across a Bench/Verify query loop), and a scope cannot release another
-  * scope's frames.
+/** The cache contracts the harnesses rely on: caches tracked inside a
+  * `scoped` block are gone when the block exits (no storage growth across a
+  * Bench/Verify query loop), and a scope cannot release another scope's
+  * frames; a `Caching.Registry` builds each key once, stays bounded, and
+  * `Caching.clearAll()` releases every registry. (The `registryGet:` test
+  * names pin `Registry.get`.)
   */
 class CachingSpec extends SparkSuite {
 
@@ -75,72 +77,68 @@ class CachingSpec extends SparkSuite {
   test("registryGet: bounded per-map — past RegistryMaxEntries the oldest " +
     "entry is evicted and its frame unpersisted") {
     import spark.implicits._
-    val reg = scala.collection.concurrent.TrieMap
-      .empty[String, org.apache.spark.sql.DataFrame]
+    val reg = Caching.Registry[org.apache.spark.sql.DataFrame]("spec.cap")
     def build(i: Int) = {
       val df = Seq(i.toLong).toDF("v").persist()
       df.count()
       df
     }
     val frames = (0 to Caching.RegistryMaxEntries).map { i =>
-      i -> Caching.registryGet(reg, s"corpus$i")(build(i))
+      i -> reg.get(s"corpus$i")(build(i))
     }.toMap
     // one over the cap: corpus0 (oldest) must be gone and unpersisted
     assert(reg.size === Caching.RegistryMaxEntries)
-    assert(!reg.contains("corpus0"))
+    assert(reg.peek("corpus0").isEmpty)
     assert(frames(0).storageLevel ===
       org.apache.spark.storage.StorageLevel.NONE)
     // the survivors stay cached and hit without rebuilding
     assert(frames(Caching.RegistryMaxEntries).storageLevel.useMemory)
     var rebuilt = false
-    val hit = Caching.registryGet(reg, "corpus1") { rebuilt = true; build(1) }
+    val hit = reg.get("corpus1") { rebuilt = true; build(1) }
     assert(!rebuilt && (hit eq frames(1)))
     // a key rebuilt after an explicit clear re-enters at the queue TAIL:
     // filling the map again must evict older survivors first, not it
     reg.clear()
-    val again = Caching.registryGet(reg, "corpus1")(build(1))
+    val again = reg.get("corpus1")(build(1))
     (100 until 100 + Caching.RegistryMaxEntries - 1).foreach { i =>
-      Caching.registryGet(reg, s"corpus$i")(build(i))
+      reg.get(s"corpus$i")(build(i))
     }
-    assert(reg.contains("corpus1"))
-    Caching.registryGet(reg, "one-more")(build(999))
-    assert(!reg.contains("corpus1")) // now it IS the oldest
+    assert(reg.peek("corpus1").isDefined)
+    reg.get("one-more")(build(999))
+    assert(reg.peek("corpus1").isEmpty) // now it IS the oldest
     assert(again.storageLevel === org.apache.spark.storage.StorageLevel.NONE)
-    reg.values.foreach(_.unpersist(false))
     reg.clear()
   }
 
   test("registryGet: LRU-on-access — a hot key re-read each sweep survives " +
     "its family's colder keys cycling past the cap") {
     import spark.implicits._
-    val reg = scala.collection.concurrent.TrieMap
-      .empty[String, org.apache.spark.sql.DataFrame]
+    val reg = Caching.Registry[org.apache.spark.sql.DataFrame]("spec.lru")
     def build(i: Int) = {
       val df = Seq(i.toLong).toDF("v").persist()
       df.count()
       df
     }
     // fill to cap: hot is the OLDEST by build order
-    Caching.registryGet(reg, "hot")(build(0))
+    reg.get("hot")(build(0))
     (1 until Caching.RegistryMaxEntries).foreach { i =>
-      Caching.registryGet(reg, s"cold$i")(build(i))
+      reg.get(s"cold$i")(build(i))
     }
     // the sweep re-reads hot (a hit) …
     var rebuilt = false
-    Caching.registryGet(reg, "hot") { rebuilt = true; build(0) }
+    reg.get("hot") { rebuilt = true; build(0) }
     assert(!rebuilt)
     // … then a new cold key arrives: under FIFO hot would be evicted
     // (oldest build); under LRU the least-recently-READ cold1 goes instead
-    Caching.registryGet(reg, "coldNew")(build(100))
-    assert(reg.contains("hot"), "LRU must keep the recently-read key")
-    assert(!reg.contains("cold1"), "LRU must evict the least-recently-read key")
-    reg.values.foreach(_.unpersist(false))
+    reg.get("coldNew")(build(100))
+    assert(reg.peek("hot").isDefined, "LRU must keep the recently-read key")
+    assert(reg.peek("cold1").isEmpty, "LRU must evict the least-recently-read key")
     reg.clear()
   }
 
   test("registryGet: distinct keys build CONCURRENTLY (per-key latch, " +
     "not a per-map build lock); duplicate keys still build once") {
-    val reg = scala.collection.concurrent.TrieMap.empty[String, String]
+    val reg = Caching.Registry[String]("spec.concurrent")
     val builds = new java.util.concurrent.atomic.AtomicInteger(0)
     // rendezvous INSIDE the two builds: each build can only proceed once
     // BOTH are in flight — if the implementation serialized builds per
@@ -162,7 +160,7 @@ class CachingSpec extends SparkSuite {
     val threads = keys.map { k =>
       new Thread(() => {
         start.await()
-        val v = Caching.registryGet(reg, k)(slowBuild(k))
+        val v = reg.get(k)(slowBuild(k))
         assert(v === s"built:$k")
       })
     }
@@ -178,14 +176,14 @@ class CachingSpec extends SparkSuite {
   test("registryGet: a joiner blocked on a FAILING build retries with its " +
     "own builder and the retried value is published (no silent per-caller " +
     "rebuilds, no unpublished persisted frame)") {
-    val reg = scala.collection.concurrent.TrieMap.empty[String, String]
+    val reg = Caching.Registry[String]("spec.joiner")
     val creatorIn = new java.util.concurrent.CountDownLatch(1)
     val joinerJoined = new java.util.concurrent.CountDownLatch(1)
     val retried = new java.util.concurrent.atomic.AtomicInteger(0)
     @volatile var joinerGot: String = null
     val creator = new Thread(() => {
       intercept[RuntimeException] {
-        Caching.registryGet(reg, "flaky2") {
+        reg.get("flaky2") {
           creatorIn.countDown()
           // hold the build until the joiner is provably blocked on it
           joinerJoined.await(30, java.util.concurrent.TimeUnit.SECONDS)
@@ -197,7 +195,7 @@ class CachingSpec extends SparkSuite {
     val joiner = new Thread(() => {
       creatorIn.await()
       joinerJoined.countDown()
-      joinerGot = Caching.registryGet(reg, "flaky2") {
+      joinerGot = reg.get("flaky2") {
         retried.incrementAndGet(); "joiner value"
       }
     })
@@ -207,33 +205,33 @@ class CachingSpec extends SparkSuite {
     assert(retried.get === 1, "the joiner's own builder must run exactly once")
     // the retried value is PUBLISHED: a third lookup is a pure hit
     var rebuilt = false
-    val hit = Caching.registryGet(reg, "flaky2") { rebuilt = true; "x" }
+    val hit = reg.get("flaky2") { rebuilt = true; "x" }
     assert(!rebuilt && hit === "joiner value")
     reg.clear()
   }
 
   test("registryGet: a failed build is not cached — the next caller retries") {
-    val reg = scala.collection.concurrent.TrieMap.empty[String, String]
+    val reg = Caching.Registry[String]("spec.flaky")
     var attempts = 0
     intercept[RuntimeException] {
-      Caching.registryGet(reg, "flaky") { attempts += 1; sys.error("boom") }
+      reg.get("flaky") { attempts += 1; sys.error("boom") }
     }
-    assert(!reg.contains("flaky"))
-    val v = Caching.registryGet(reg, "flaky") { attempts += 1; "ok" }
+    assert(reg.peek("flaky").isEmpty)
+    val v = reg.get("flaky") { attempts += 1; "ok" }
     assert(v === "ok" && attempts === 2)
     reg.clear()
   }
 
   test("registryGet: a FATAL build error reaches joiners WITHOUT a retry " +
     "and does not trap later callers (holder retired on the fatal path)") {
-    val reg = scala.collection.concurrent.TrieMap.empty[String, String]
+    val reg = Caching.Registry[String]("spec.fatal")
     val creatorIn = new java.util.concurrent.CountDownLatch(1)
     val joinerJoined = new java.util.concurrent.CountDownLatch(1)
     val joinerBuilt = new java.util.concurrent.atomic.AtomicInteger(0)
     @volatile var creatorGot: Throwable = null
     @volatile var joinerGot: Throwable = null
     val creator = new Thread(() => {
-      try Caching.registryGet(reg, "fatal1") {
+      try reg.get("fatal1") {
         creatorIn.countDown()
         joinerJoined.await(30, java.util.concurrent.TimeUnit.SECONDS)
         Thread.sleep(50)
@@ -243,7 +241,7 @@ class CachingSpec extends SparkSuite {
     val joiner = new Thread(() => {
       creatorIn.await()
       joinerJoined.countDown()
-      try Caching.registryGet(reg, "fatal1") {
+      try reg.get("fatal1") {
         joinerBuilt.incrementAndGet(); "joiner value"
       } catch { case t: Throwable => joinerGot = t }
     })
@@ -262,18 +260,18 @@ class CachingSpec extends SparkSuite {
       "the wrapper must carry the creator's fatal as its cause")
     assert(joinerBuilt.get === 0, "the joiner's builder must NOT run")
     // the holder was retired on the fatal path: a fresh caller rebuilds
-    val v = Caching.registryGet(reg, "fatal1")("recovered")
+    val v = reg.get("fatal1")("recovered")
     assert(v === "recovered")
     reg.clear()
   }
 
   test("registryGet: an interrupted build restores the thread's interrupt " +
     "flag (the build's InterruptedException is not swallowed)") {
-    val reg = scala.collection.concurrent.TrieMap.empty[String, String]
+    val reg = Caching.Registry[String]("spec.intr1")
     @volatile var thrown: Throwable = null
     @volatile var flagRestored = false
     val t = new Thread(() => {
-      try Caching.registryGet(reg, "intr1") {
+      try reg.get("intr1") {
         throw new InterruptedException("synthetic interrupt")
       } catch { case e: Throwable =>
         thrown = e
@@ -283,19 +281,19 @@ class CachingSpec extends SparkSuite {
     t.start(); t.join(60000)
     assert(thrown.isInstanceOf[InterruptedException])
     assert(flagRestored, "the interrupt status must survive registryGet")
-    assert(!reg.contains("intr1"))
+    assert(reg.peek("intr1").isEmpty)
     reg.clear()
   }
 
   test("registryGet: a creator's interrupt reaches a JOINER wrapped, with " +
     "the joiner's own interrupt flag left clear") {
-    val reg = scala.collection.concurrent.TrieMap.empty[String, String]
+    val reg = Caching.Registry[String]("spec.intr2")
     val creatorIn = new java.util.concurrent.CountDownLatch(1)
     val joinerJoined = new java.util.concurrent.CountDownLatch(1)
     @volatile var joinerGot: Throwable = null
     @volatile var joinerFlag = true
     val creator = new Thread(() => {
-      try Caching.registryGet(reg, "intr2") {
+      try reg.get("intr2") {
         creatorIn.countDown()
         joinerJoined.await(30, java.util.concurrent.TimeUnit.SECONDS)
         Thread.sleep(50)
@@ -305,7 +303,7 @@ class CachingSpec extends SparkSuite {
     val joiner = new Thread(() => {
       creatorIn.await()
       joinerJoined.countDown()
-      try Caching.registryGet(reg, "intr2")("joiner value")
+      try reg.get("intr2")("joiner value")
       catch { case t: Throwable =>
         joinerGot = t
         joinerFlag = Thread.currentThread().isInterrupted
@@ -325,32 +323,34 @@ class CachingSpec extends SparkSuite {
   test("registryGet: per-registry hit/miss/eviction counters account for " +
     "the traffic (the mid-sweep thrash adjudicator)") {
     import spark.implicits._
-    val reg = scala.collection.concurrent.TrieMap
-      .empty[String, org.apache.spark.sql.DataFrame]
-    Caching.nameRegistry(reg, "spec.counters")
+    val reg = Caching.Registry[org.apache.spark.sql.DataFrame]("spec.counters")
     def build(i: Int) = {
       val df = Seq(i.toLong).toDF("v").persist()
       df.count()
       df
     }
     (0 to Caching.RegistryMaxEntries).foreach { i => // one past cap: 1 evict
-      Caching.registryGet(reg, s"k$i")(build(i))
+      reg.get(s"k$i")(build(i))
     }
-    Caching.registryGet(reg, s"k${Caching.RegistryMaxEntries}")(build(0)) // hit
+    reg.get(s"k${Caching.RegistryMaxEntries}")(build(0)) // hit
     val line = Caching.registryStatsReport().linesIterator
       .find(_.startsWith("spec.counters")).getOrElse("")
     assert(line.contains(s"misses=${Caching.RegistryMaxEntries + 1}"), line)
     assert(line.contains("hits=1"), line)
     assert(line.contains("evictions=1"), line)
-    reg.values.foreach(_.unpersist(false))
+    // peek reads without counting; clear releases without counting evictions
+    assert(reg.peek("k1").isDefined)
+    reg.clear()
+    assert(reg.stats === (("spec.counters", 1L,
+      Caching.RegistryMaxEntries + 1L, 1L)))
     reg.clear()
   }
 
   test("registryGet: per-registry cap override — the model registry holds " +
     "a working set larger than the default cap") {
     import spark.implicits._
-    val reg = scala.collection.concurrent.TrieMap
-      .empty[String, org.apache.spark.sql.DataFrame]
+    val reg = Caching.Registry[org.apache.spark.sql.DataFrame](
+      "spec.modelcap", Caching.ModelRegistryMaxEntries)
     def build(i: Int) = {
       val df = Seq(i.toLong).toDF("v").persist()
       df.count()
@@ -358,15 +358,39 @@ class CachingSpec extends SparkSuite {
     }
     val n = Caching.RegistryMaxEntries + 4 // over the default, under the model cap
     (0 until n).foreach { i =>
-      Caching.registryGet(reg, s"fit$i", Caching.ModelRegistryMaxEntries)(build(i))
+      reg.get(s"fit$i")(build(i))
     }
     assert(reg.size === n, "no eviction below the per-registry cap")
     var rebuilt = false
-    Caching.registryGet(reg, "fit0", Caching.ModelRegistryMaxEntries) {
+    reg.get("fit0") {
       rebuilt = true; build(0)
     }
     assert(!rebuilt, "the whole working set must stay resident")
-    reg.values.foreach(_.unpersist(false))
     reg.clear()
+  }
+
+  test("clearAll empties every registry and releases the storage a PQ, a " +
+    "Word2Vec and a postings face persisted") {
+    val dir = SparkSpec.FixtureDir
+    def persisted = spark.sparkContext.getPersistentRDDs.size
+    Caching.clearAll()
+    val before = persisted
+    // a PQ face, a Word2Vec face and a DataFrame-registry (postings) face
+    Seq("sim_ivfpq_ann", "w2v_neighbors", "search_bm25").foreach { q =>
+      Caching.scoped {
+        SparkEntry.queries(q)(spark, dir).write.format("noop")
+          .mode("overwrite").save()
+      }
+      Caching.releaseAll()
+    }
+    val filled = Caching.allRegistries.filter(_.size > 0).map(_.name).toSet
+    assert(Set("pq.codebooks", "embedders.w2v", "retrieval.postings")
+      .subsetOf(filled), filled)
+    assert(persisted > before, "the faces must have persisted registry storage")
+    Caching.clearAll()
+    Caching.allRegistries.foreach { r =>
+      assert(r.size === 0, s"registry ${r.name} survived clearAll")
+    }
+    assert(persisted === before, "clearAll must release the faces' storage")
   }
 }

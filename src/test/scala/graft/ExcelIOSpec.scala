@@ -97,7 +97,7 @@ class ExcelIOSpec extends SparkSuite {
     // the reference repo's actual input artifact (read-only): ~5k rows of
     // inlineStr cells written by a foreign writer, no sharedStrings part
     val raw = ExcelIO.readXlsx(spark,
-      "/root/reference/RAW_DATA/2025_6_28_22_56_49_4600_channel_download_ai광고.xlsx")
+      SparkSpec.referenceFile("RAW_DATA/2025_6_28_22_56_49_4600_channel_download_ai광고.xlsx"))
     assert(Seq("제목", "시작 날짜", "정제데이터").forall(raw.columns.contains))
     assert(raw.count() == 5058)
     val prepped = graft.pipeline.PreprocessPipeline.prepareCrawl(raw)

@@ -11,8 +11,11 @@ import graft.pipeline.{ExcelIO, PreprocessPipeline}
   */
 class GoldenSpec extends SparkSuite {
 
-  private val RawXlsx =
-    "/root/reference/RAW_DATA/2025_6_28_22_56_49_4600_channel_download_ai광고.xlsx"
+  // defs, not vals: resolving a path fails the test when the reference
+  // root is absent, and a class-level val would abort the whole suite
+  private def RawXlsx = SparkSpec.referenceFile(
+    "RAW_DATA/2025_6_28_22_56_49_4600_channel_download_ai광고.xlsx")
+  private def Stopwords = SparkSpec.referenceFile("stopwords.txt")
 
   test("EP1 on the real crawl workbook reproduces pre_dataframe.xlsx exactly: 5058 -> 4793 rows") {
     // the reference's committed Results/pre_dataframe.xlsx holds 4,793 data
@@ -32,7 +35,7 @@ class GoldenSpec extends SparkSuite {
     import java.nio.file.{Files, Paths}
     val out = Files.createTempDirectory("graft-ep1").toString
     graft.pipeline.PreprocessMain.run(spark, RawXlsx, "crawl",
-      Some("/root/reference/stopwords.txt"), out, top = 100)
+      Some(Stopwords), out, top = 100)
     val pre = graft.pipeline.ReportSink.readSheet(spark, out, "pre_dataframe")
     assert(pre.count() === 4793L) // pre_dataframe.xlsx parity
     val wf = graft.pipeline.ReportSink.readSheet(spark, out, "word_frequency")
@@ -48,7 +51,7 @@ class GoldenSpec extends SparkSuite {
     assert(freqs.zip(freqs.tail).forall { case (a, b) => a >= b })
     // no stopword survives the filter
     val stopSet = PreprocessPipeline
-      .loadStopwords(spark, "/root/reference/stopwords.txt").toSet
+      .loadStopwords(spark, Stopwords).toSet
     assert(!wf.exists(r => stopSet.contains(r.getString(0))))
     assert(graft.pipeline.ReportSink.readSheet(spark, out, "stopwords")
       .count() === 1104L) // stopwords_list.xlsx parity
@@ -58,8 +61,7 @@ class GoldenSpec extends SparkSuite {
   test("stopword manager reproduces stopwords_list.xlsx exactly: 1104 distinct entries") {
     // the reference commits Results/stopwords_list.xlsx with 1,104 rows —
     // the distinct non-blank lines of its 1,381-line stopwords.txt
-    val words = PreprocessPipeline.loadStopwords(spark,
-      "/root/reference/stopwords.txt")
+    val words = PreprocessPipeline.loadStopwords(spark, Stopwords)
     assert(words.length === 1104)
     assert(words === words.sorted, "reference sorts its stopword report")
   }
@@ -82,7 +84,7 @@ class GoldenSpec extends SparkSuite {
     // distinct — D2's defining invariant — ranks are dense from 1, and
     // weights descend with rank inside every topic.
     val art = ExcelIO.readXlsx(spark,
-      "/root/reference/Results/중복없는_토픽키워드.xlsx")
+      SparkSpec.referenceFile("Results/중복없는_토픽키워드.xlsx"))
     assert(art.columns.toSeq ===
       Seq("Topic", "Keyword Rank", "Keyword", "Weight"))
     val rows = art.select(

@@ -49,7 +49,7 @@ class QualityBandSpec extends SparkSuite {
     // the bands were written FOR this data: the reference's real crawl
     // workbook, prepped by the EP1 pipeline (GoldenSpec pins the ingest)
     val raw = graft.pipeline.ExcelIO.readXlsx(spark,
-      "/root/reference/RAW_DATA/2025_6_28_22_56_49_4600_channel_download_ai광고.xlsx")
+      SparkSpec.referenceFile("RAW_DATA/2025_6_28_22_56_49_4600_channel_download_ai광고.xlsx"))
     val docs = graft.pipeline.PreprocessPipeline.prepareCrawl(raw)
       .select(col("cleaned_text")).cache()
     val topics = TopicModelOps.ldaTopics(spark, docs, "cleaned_text",
