@@ -15,10 +15,12 @@ import org.apache.spark.sql.{DataFrame, Dataset}
   * AnalysisRunner callers) wrap each query in `scoped { … }` — frames
   * tracked on the calling thread inside the block are unpersisted when the
   * block exits, so one query's release can never evict another in-flight
-  * query's caches in a concurrent service. Frames tracked from OTHER
-  * threads spawned inside a scope (e.g. the grid-search driver futures)
-  * fall back to the process-global scope; sequential harnesses drain that
-  * with `releaseAll()` after each query.
+  * query's caches in a concurrent service. Work forked with `forkJoin`
+  * runs under the forking thread's scope, so its frames release with the
+  * caller's. Frames tracked on threads that outlive any scope (a service's
+  * pool workers, code outside every `scoped` block) fall back to the
+  * process-global scope; sequential harnesses drain that with
+  * `releaseAll()` after each query.
   *
   * Build-once registries. Deterministic fits and stored-index shapes
   * (fitted topic models, postings, signature tables, IVF/PQ worlds, …)
@@ -55,8 +57,8 @@ object Caching {
   }
 
   private val global = new Scope
-  // DynamicVariable = per-thread scope stack; threads the pool created before
-  // a scope opened (shared ExecutionContext workers) resolve to `global`.
+  // DynamicVariable = per-thread scope stack; threads a pool created before
+  // a scope opened resolve to `global`.
   private val current = new scala.util.DynamicVariable[Scope](global)
 
   /** Persist `df` and register it with the active scope. */
@@ -88,9 +90,41 @@ object Caching {
     finally s.release()
   }
 
+  /** Run independent `tasks` concurrently and return their results in task
+    * order — the engine's one idiom for overlapping Spark actions that the
+    * driver would otherwise issue one after another.
+    *
+    * Each task runs on a short-lived thread of its own, so nested use never
+    * waits on a shared pool. The thread runs under the caller's cache scope
+    * (frames it tracks release with the caller's `scoped` block) and
+    * inherits the caller's Spark local properties and active session. There
+    * is no parallelism knob: Spark's scheduler already bounds the running
+    * tasks by the cores.
+    *
+    * Waits for every task, even after one fails, then rethrows the first
+    * failure in task order, unwrapped — so no forked action is still
+    * running when this returns or rethrows a task's failure.
+    */
+  def forkJoin[T](tasks: Seq[() => T]): Seq[T] = {
+    val scope = current.value
+    val results = new Array[Either[Throwable, T]](tasks.size)
+    // constructed on the caller's thread: that is where a Thread copies its
+    // inheritable thread-locals (Spark's local properties, active session)
+    val threads = tasks.zipWithIndex.map { case (task, i) =>
+      new Thread(() => {
+        results(i) =
+          try Right(current.withValue(scope)(task()))
+          catch { case e: Throwable => Left(e) }
+      }, s"graft-fork-$i")
+    }
+    threads.foreach(_.start())
+    threads.foreach(_.join()) // join = happens-before: `results` is visible
+    results.toSeq.map(_.fold(e => throw e, identity))
+  }
+
   /** Unpersist every frame in the process-global scope — the catch-all for
-    * frames tracked outside any `scoped` block (or from pre-existing pool
-    * threads inside one). Sequential harnesses call this between queries.
+    * frames tracked outside any `scoped` block (or on pool threads created
+    * before one opened). Sequential harnesses call this between queries.
     */
   def releaseAll(): Unit = global.release()
 
@@ -159,7 +193,7 @@ object Caching {
     * briefly (never across a build). Duplicate keys build once (joiners
     * block on the creator's latch), but DISTINCT keys build concurrently.
     * This preserves the grid-search "embarrassingly parallel across k"
-    * property (the four driver futures in TopicModelOps.ldaGridSearch fit
+    * property (the four forked tasks in TopicModelOps.ldaGridSearch fit
     * different k keys at the same time).
     *
     * Bounded by construction: the registry holds at most `cap` entries —

@@ -81,23 +81,17 @@ object PqOps {
     val dim = corpus.select(size(col("nv"))).head().getInt(0)
     val ds = dim / PqM
     lastPqDs = ds
-    // the M subspace fits are independent seeded KMeans runs — concurrent
-    // Spark job groups from the driver (the lda_grid pattern): run serially
+    // the M subspace fits are independent seeded KMeans runs — forked so
+    // their Spark jobs run side by side (the lda_grid pattern): run serially
     // they dominated the PQ queries (each small fit pays ~20 iterations of
     // fixed job overhead; 8 in sequence measured ~10 s at sf0.1)
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val futures = (0 until PqM).map { m =>
-      Future {
-        val sub = corpus.select(
-          array_to_vector(slice(col("nv"), m * ds + 1, ds)).as("v"))
-        val km = new KMeans().setK(cents).setSeed(TopicModelOps.Seed + m)
-          .setFeaturesCol("v").setPredictionCol("cid").fit(sub)
-        km.clusterCenters.zipWithIndex.map { case (c, i) => (m, i, c.toArray) }
-      }
-    }
-    val rows = futures.flatMap(Await.result(_, Duration.Inf))
+    val rows = graft.Caching.forkJoin((0 until PqM).map { m => () =>
+      val sub = corpus.select(
+        array_to_vector(slice(col("nv"), m * ds + 1, ds)).as("v"))
+      val km = new KMeans().setK(cents).setSeed(TopicModelOps.Seed + m)
+        .setFeaturesCol("v").setPredictionCol("cid").fit(sub)
+      km.clusterCenters.zipWithIndex.map { case (c, i) => (m, i, c.toArray) }
+    }).flatten
     val codebooks = rows.toDF("m", "cid", "centroid")
     val subs = corpus.select(col("vec_id"),
       posexplode(transform(sequence(lit(0), lit(PqM - 1)),

@@ -377,17 +377,14 @@ object TopicModelOps {
   /** LDA topic-count grid search scored by u_mass coherence (M5). */
   def ldaGridSearch(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
     // one tokenized corpus feeds every grid point's u_mass presence scan
     val toks = graft.Caching.track(
       TopicMetricsOps.tokenizedDocs(Tables.documents(spark, dir), "text"))
-    // the k's are independent seeded fits — run them as concurrent Spark
-    // job groups from the driver (the reference's grid loop is sequential;
-    // LDA_Analysis.py:179-248)
-    val futures = Seq(2, 3, 5, 8).map { k => Future { gridPoint(spark, dir, toks, k) } }
-    val rows = futures.map(Await.result(_, Duration.Inf))
+    // the k's are independent seeded fits — forked so their Spark jobs run
+    // side by side, each under this query's cache scope (the reference's
+    // grid loop is sequential; LDA_Analysis.py:179-248)
+    val rows = graft.Caching.forkJoin(
+      Seq(2, 3, 5, 8).map { k => () => gridPoint(spark, dir, toks, k) })
     rows.toDF("k", "umass").withColumn("best",
       (col("umass") === max(col("umass")).over(Window.partitionBy())).cast("int"))
   }
@@ -412,29 +409,39 @@ object TopicModelOps {
       .agg(round(avg(col("umass")), 4))
       .collect()(0).getDouble(0)
 
-  /** Grid search over an ARBITRARY document frame — the CLI path (the
-    * fixture-keyed ldaGridSearch above reuses the fitted-model registry
-    * instead). One vectorization and one tokenization feed every k; the
-    * seeded fits run as concurrent driver futures like ldaGridSearch.
+  /** One document frame's LDA inputs, built once for every consumer: the
+    * CountVectorizer features (`vectorize`) with their vocabulary, and the
+    * tokenized (doc, toks) corpus the coherence scans read. The EP3 report
+    * and its k-grid both fit and score over these.
     */
-  def gridSearchOver(spark: SparkSession, docs: DataFrame, textCol: String,
+  final case class LdaCorpus(vecs: DataFrame, vocab: Array[String],
+                             toks: DataFrame)
+
+  /** `docs`' LDA inputs, both frames tracked in the caller's cache scope —
+    * which must outlive every consumer of the corpus.
+    */
+  def ldaCorpus(docs: DataFrame, textCol: String): LdaCorpus = {
+    val (vecs, vocab) = vectorize(docs, textCol)
+    LdaCorpus(graft.Caching.track(vecs), vocab,
+      graft.Caching.track(TopicMetricsOps.tokenizedDocs(docs, textCol)))
+  }
+
+  /** Grid search over an ARBITRARY document frame's `ldaCorpus` — the CLI
+    * path (the fixture-keyed ldaGridSearch above reuses the fitted-model
+    * registry instead). The caller's corpus feeds every k, so the grid adds
+    * no vectorization or tokenization of its own; the seeded fits are
+    * forked like ldaGridSearch's.
+    */
+  def gridSearchOver(spark: SparkSession, corpus: LdaCorpus,
                      ks: Seq[Int] = Seq(2, 3, 5, 8),
                      maxIter: Int = 10): DataFrame = {
     import spark.implicits._
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val (vecs0, vocab) = vectorize(docs, textCol)
-    val vecs = graft.Caching.track(vecs0)
-    val toks = graft.Caching.track(
-      TopicMetricsOps.tokenizedDocs(docs, textCol))
-    val futures = ks.map { k => Future {
+    val rows = graft.Caching.forkJoin(ks.map { k => () =>
       val model = new LDA().setK(k).setSeed(Seed).setMaxIter(maxIter)
         .setOptimizeDocConcentration(true)
-        .setFeaturesCol("features").fit(vecs)
-      (k, meanUmass(toks, topicWordsDF(spark, model, vocab)))
-    } }
-    val rows = futures.map(Await.result(_, Duration.Inf))
+        .setFeaturesCol("features").fit(corpus.vecs)
+      (k, meanUmass(corpus.toks, topicWordsDF(spark, model, corpus.vocab)))
+    })
     rows.toDF("k", "umass").withColumn("best",
       (col("umass") === max(col("umass")).over(Window.partitionBy())).cast("int"))
   }

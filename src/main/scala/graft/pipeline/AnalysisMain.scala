@@ -87,29 +87,37 @@ object AnalysisMain {
     // the reference's fail-fast column diagnostic (LDA_Analysis.py:122-126)
     PreprocessPipeline.requireColumns(docs, Seq(column))
     println(s"[analysis] $k topics over $data ($column) -> $out")
-    AnalysisRunner.runLdaAnalysis(spark, docs, column, out, k, maxIter,
-      format = format)
-    // the reference's PNG figures, as deterministic SVGs
-    ChartSink.writeWordFrequencyChart(
-      graft.operators.WordFreqOps.topWords(docs, column, 30),
-      s"$out/word_frequency.svg")
-    // coherence-vs-k curve over a real grid of seeded fits — the reference
-    // draws this every run (LDA_Analysis.py:614-677)
-    graft.Caching.scoped {
-      ChartSink.writeCoherenceCurve(
-        graft.operators.TopicModelOps.gridSearchOver(spark, docs, column)
-          .select("k", "umass"),
-        s"$out/lda_coherence_curve.svg")
-    }
-    // figures drawn from the report's own sheets (parquet read-back)
-    if (format == "parquet") {
-      ChartSink.writeSimilarityHeatmap(
-        ReportSink.readSheet(spark, out, "overlap"),
-        s"$out/topic_overlap.svg", title = "Topic keyword overlap")
-      ChartSink.writeHistogramChart(
-        ReportSink.readSheet(spark, out, "dominant"),
-        s"$out/dominant_topics.svg", title = "Dominant topic distribution")
-    }
+    // one vectorization + tokenization feeds the report AND the grid; this
+    // scope holds it until both are done
+    val corpus = graft.operators.TopicModelOps.ldaCorpus(docs, column)
+    // the report, the word bars and the grid are independent seeded
+    // actions — forked so their Spark jobs overlap instead of queueing
+    graft.Caching.forkJoin(Seq(
+      () => {
+        AnalysisRunner.ldaReport(spark, docs, corpus, column, out, k, maxIter,
+          topN = 10, format)
+        // figures drawn from the report's own sheets (parquet read-back)
+        if (format == "parquet") {
+          ChartSink.writeSimilarityHeatmap(
+            ReportSink.readSheet(spark, out, "overlap"),
+            s"$out/topic_overlap.svg", title = "Topic keyword overlap")
+          ChartSink.writeHistogramChart(
+            ReportSink.readSheet(spark, out, "dominant"),
+            s"$out/dominant_topics.svg", title = "Dominant topic distribution")
+        }
+      },
+      // the reference's PNG figures, as deterministic SVGs
+      () => ChartSink.writeWordFrequencyChart(
+        graft.operators.WordFreqOps.topWords(docs, column, 30),
+        s"$out/word_frequency.svg"),
+      // coherence-vs-k curve over a real grid of seeded fits — the
+      // reference draws this every run (LDA_Analysis.py:614-677)
+      () => graft.Caching.scoped {
+        ChartSink.writeCoherenceCurve(
+          graft.operators.TopicModelOps.gridSearchOver(spark, corpus)
+            .select("k", "umass"),
+          s"$out/lda_coherence_curve.svg")
+      }))
     // one browsable page embedding every figure (the reference's
     // interactive-HTML analog, as deterministic static HTML)
     ChartSink.writeHtmlReport(out, s"LDA analysis — $k topics")

@@ -25,10 +25,21 @@ object AnalysisRunner {
                      outDir: String, k: Int = 5, maxIter: Int = 20,
                      topN: Int = 10, format: String = "parquet"): Unit =
       graft.Caching.scoped {
-    import spark.implicits._
     PreprocessPipeline.requireColumns(docs, Seq(textCol))
-    val (vecs0, vocab) = TopicModelOps.vectorize(docs, textCol)
-    val vecs = graft.Caching.track(vecs0)
+    ldaReport(spark, docs, TopicModelOps.ldaCorpus(docs, textCol), textCol,
+      outDir, k, maxIter, topN, format)
+  }
+
+  /** The EP3 report over `docs`' prebuilt `corpus` — for callers that feed
+    * the same corpus to other consumers (AnalysisMain's k-grid) and release
+    * it from their own scope once every consumer is done.
+    */
+  private[pipeline] def ldaReport(spark: SparkSession, docs: DataFrame,
+                                  corpus: TopicModelOps.LdaCorpus, textCol: String,
+                                  outDir: String, k: Int, maxIter: Int,
+                                  topN: Int, format: String): Unit =
+      graft.Caching.scoped {
+    val TopicModelOps.LdaCorpus(vecs, vocab, toks) = corpus
     val model = new org.apache.spark.ml.clustering.LDA()
       .setK(k).setSeed(TopicModelOps.Seed).setMaxIter(maxIter)
       // alpha='auto' parity; eta stays fixed at 1/k — see TopicModelOps.fittedLda
@@ -45,8 +56,6 @@ object AnalysisRunner {
     // the corpus is tokenized once and feeds both measures' presence scans
     val topicWords = topics
       .select(col("topic").as("cls"), col("term").as("word"), col("rank"))
-    val toks = graft.Caching.track(
-      TopicMetricsOps.tokenizedDocs(docs, textCol))
     val perTopicCoherence = TopicMetricsOps.umassByClassOfTokens(toks, topicWords)
       .select(col("cls").as("topic"), col("umass"))
       .join(TopicMetricsOps.npmiByClassOfTokens(toks, topicWords)

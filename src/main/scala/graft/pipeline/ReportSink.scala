@@ -9,9 +9,13 @@ import org.apache.spark.sql.DataFrame
   * report stays one logical artifact (preprocessing.py:552-569,
   * LDA_Analysis.py:553-565 analogue).
   *
-  * Sheets are written sequentially; each `coalesce(1)` is deliberate —
-  * report tables are small aggregates and a single file per sheet is the
-  * readable artifact. Never use this sink for data-scale tables.
+  * Parquet and csv sheets are written concurrently, one forked write per
+  * sheet (`Caching.forkJoin`): each sheet is an independent action of a few
+  * one-task jobs, which on its own leaves most cores idle. The manifest is
+  * written only after every sheet succeeded. Each
+  * `coalesce(1)` is deliberate — report tables are small aggregates and a
+  * single file per sheet is the readable artifact. Never use this sink for
+  * data-scale tables.
   */
 object ReportSink {
 
@@ -33,13 +37,15 @@ object ReportSink {
         // reference's pd.ExcelWriter — report-scale tables only
         ExcelIO.writeWorkbook(sheets, s"$outDir/report.xlsx")
       case "parquet" | "csv" =>
-        sheets.foreach { case (name, df) =>
+        sheets.foreach { case (name, _) =>
           require(name.matches("[\\w가-힣 .-]+"), s"unsafe sheet name: $name")
+        }
+        graft.Caching.forkJoin(sheets.map { case (name, df) => () =>
           val w = df.coalesce(1).write.mode("overwrite")
           val path = s"$outDir/${dirName(name)}"
           if (format == "parquet") w.parquet(path)
           else w.option("header", "true").option("encoding", "UTF-8").csv(path)
-        }
+        })
       case other => throw new IllegalArgumentException(s"format: $other")
     }
     val manifest = sheets.map { case (n, _) => s""""$n": "${dirName(n)}"""" }

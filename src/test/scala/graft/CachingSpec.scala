@@ -4,8 +4,9 @@ import org.apache.spark.sql.functions._
 
 /** The cache contracts the harnesses rely on: caches tracked inside a
   * `scoped` block are gone when the block exits (no storage growth across a
-  * Bench/Verify query loop), and a scope cannot release another scope's
-  * frames; a `Caching.Registry` builds each key once, stays bounded, and
+  * Bench/Verify query loop), a scope cannot release another scope's
+  * frames, and work forked with `forkJoin` releases with its caller's
+  * scope; a `Caching.Registry` builds each key once, stays bounded, and
   * `Caching.clearAll()` releases every registry. (The `registryGet:` test
   * names pin `Registry.get`.)
   */
@@ -50,6 +51,52 @@ class CachingSpec extends SparkSuite {
       }
       assert(outer.storageLevel.useMemory, "outer frame must survive inner release")
     }
+  }
+
+  test("forkJoin: a forked task's tracked frame releases with the caller's " +
+    "scope and never lands in the global one") {
+    import spark.implicits._
+    val globalBefore = Caching.trackedCount // outside any scope: the global scope
+    var df: org.apache.spark.sql.DataFrame = null
+    Caching.scoped {
+      df = Caching.forkJoin(Seq(() => {
+        val d = Caching.track(Seq(1, 2, 3).toDF("x"))
+        d.count()
+        d
+      })).head
+      assert(Caching.trackedCount === 1, "the task's frame belongs to the caller's scope")
+      assert(df.storageLevel.useMemory)
+    }
+    assert(!df.storageLevel.useMemory, "scope exit must unpersist the forked task's frame")
+    assert(Caching.trackedCount === globalBefore, "the global scope must not change")
+  }
+
+  test("forkJoin: results come back in task order, each task seeing the " +
+    "caller's Spark local properties") {
+    val sc = spark.sparkContext
+    sc.setLocalProperty("graft.spec.fork", "caller")
+    try {
+      // later tasks finish first: the order follows the task list
+      val out = Caching.forkJoin((0 until 4).map { i => () =>
+        Thread.sleep((4 - i) * 60L)
+        (i, sc.getLocalProperty("graft.spec.fork"))
+      })
+      assert(out === (0 until 4).map(i => (i, "caller")))
+    } finally sc.setLocalProperty("graft.spec.fork", null)
+  }
+
+  test("forkJoin: the first failing task's own exception reaches the caller " +
+    "only after every other task has finished") {
+    val finished = new java.util.concurrent.atomic.AtomicInteger
+    val first = new IllegalStateException("first in task order")
+    val thrown = intercept[IllegalStateException] {
+      Caching.forkJoin(Seq(
+        () => { Thread.sleep(150); throw first },
+        () => throw new IllegalStateException("fails sooner, later in task order"),
+        () => { Thread.sleep(400); finished.incrementAndGet() }))
+    }
+    assert(thrown eq first, "rethrown unwrapped, first in task order")
+    assert(finished.get === 1, "the slow task must finish before the caller sees the failure")
   }
 
   test("registerRdd frees a bare persisted RDD on scope exit") {
