@@ -556,8 +556,8 @@ object SparkEntry {
       oracle.stripPrefix("WITH ")
   }
 
-  /** Shared sliding-window coherence CTE chain (mirror of
-    * TopicMetricsOps.windowPresence/pairProbabilities) for window size w:
+  /** Shared sliding-window coherence CTE chain (the SQL form of the window
+    * counts TopicMetricsOps.coCounts returns) for window size w:
     * yields tw / tot / pw / pij / pairs CTEs over the global top-10 words. */
   private def coherenceCtes(w: Int): String = {
     val k = w - 1

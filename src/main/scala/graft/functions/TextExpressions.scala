@@ -72,21 +72,6 @@ object TextExpressions {
       copy(child = newChild)
   }
 
-  case class WindowCover(left: Expression, right: Expression, w: Int)
-      extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-    override def dataType: DataType = ArrayType(LongType, containsNull = false)
-    override def nullSafeEval(ps: Any, t: Any): Any =
-      TextKernels.windowCover(
-        ps.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-        t.asInstanceOf[Int], w)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev,
-        (p, t) => s"graft.functions.TextKernels.windowCover($p, $t, $w)")
-    override protected def withNewChildrenInternal(
-        newLeft: Expression, newRight: Expression): WindowCover =
-      copy(left = newLeft, right = newRight)
-  }
-
   case class LetterTokenCount(child: Expression) extends UnaryExpression {
     override def dataType: DataType = LongType
     override def nullSafeEval(toks: Any): Any =
@@ -97,33 +82,6 @@ object TextExpressions {
         c => s"graft.functions.TextKernels.letterTokenCount($c)")
     override protected def withNewChildInternal(newChild: Expression): LetterTokenCount =
       copy(child = newChild)
-  }
-
-  case class IntervalTotal(child: Expression) extends UnaryExpression {
-    override def dataType: DataType = LongType
-    override def nullSafeEval(iv: Any): Any =
-      TextKernels.intervalTotal(
-        iv.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev,
-        c => s"graft.functions.TextKernels.intervalTotal($c)")
-    override protected def withNewChildInternal(newChild: Expression): IntervalTotal =
-      copy(child = newChild)
-  }
-
-  case class IntervalIntersect(left: Expression, right: Expression)
-      extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-    override def dataType: DataType = LongType
-    override def nullSafeEval(a: Any, b: Any): Any =
-      TextKernels.intervalIntersect(
-        a.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-        b.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev,
-        (a, b) => s"graft.functions.TextKernels.intervalIntersect($a, $b)")
-    override protected def withNewChildrenInternal(
-        newLeft: Expression, newRight: Expression): IntervalIntersect =
-      copy(left = newLeft, right = newRight)
   }
 
   // Column-API wrappers.
@@ -137,14 +95,6 @@ object TextExpressions {
     GraftBridge.column(TfMap(GraftBridge.expression(toks)))
   def markerHitsK(toks: Column): Column =
     GraftBridge.column(MarkerHits(GraftBridge.expression(toks)))
-  def windowCoverK(ps: Column, t: Column, w: Int): Column =
-    GraftBridge.column(WindowCover(GraftBridge.expression(ps),
-      GraftBridge.expression(t), w))
   def letterTokenCountK(toks: Column): Column =
     GraftBridge.column(LetterTokenCount(GraftBridge.expression(toks)))
-  def intervalTotalK(iv: Column): Column =
-    GraftBridge.column(IntervalTotal(GraftBridge.expression(iv)))
-  def intervalIntersectK(a: Column, b: Column): Column =
-    GraftBridge.column(IntervalIntersect(GraftBridge.expression(a),
-      GraftBridge.expression(b)))
 }

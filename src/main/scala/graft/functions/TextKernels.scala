@@ -226,16 +226,15 @@ object TextKernels {
   // windows [max(1, p-w+1), min(p, max(t-w+1, 1))]. The kernels below
   // carry the UNION of those per-occurrence ranges as a packed
   // [lo1,hi1,lo2,hi2,…] long array, so window-containment counts become
-  // interval arithmetic instead of an exploded (doc, word, window) table.
+  // interval arithmetic instead of an enumeration of (word, window) hits.
 
   /** Merged coverage intervals of sorted occurrence positions (packed). */
-  def windowCover(sortedPos: ArrayData, t: Int, w: Int): ArrayData = {
-    val ps = sortedPos.toIntArray()
-    val out = new scala.collection.mutable.ArrayBuffer[Long](ps.length * 2)
+  def windowCover(sortedPos: Array[Int], t: Int, w: Int): Array[Long] = {
+    val out = new scala.collection.mutable.ArrayBuffer[Long](sortedPos.length * 2)
     val hiCap = math.max(t - w + 1, 1)
     var i = 0
-    while (i < ps.length) {
-      val p = ps(i)
+    while (i < sortedPos.length) {
+      val p = sortedPos(i)
       val lo = math.max(1, p - w + 1).toLong
       val hi = math.min(p, hiCap).toLong
       if (out.nonEmpty && lo <= out(out.length - 1) + 1) {
@@ -243,13 +242,11 @@ object TextKernels {
       } else { out += lo; out += hi }
       i += 1
     }
-    org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-      .fromPrimitiveArray(out.toArray)
+    out.toArray
   }
 
   /** Total window count covered by a packed interval array. */
-  def intervalTotal(iv: ArrayData): Long = {
-    val a = iv.toLongArray()
+  def intervalTotal(a: Array[Long]): Long = {
     var s = 0L; var i = 0
     while (i < a.length) { s += a(i + 1) - a(i) + 1; i += 2 }
     s
@@ -258,8 +255,7 @@ object TextKernels {
   /** Size of the intersection of two packed interval arrays (both sorted,
     * disjoint within themselves) — the shared-window count of a word pair.
     */
-  def intervalIntersect(ivA: ArrayData, ivB: ArrayData): Long = {
-    val a = ivA.toLongArray(); val b = ivB.toLongArray()
+  def intervalIntersect(a: Array[Long], b: Array[Long]): Long = {
     var i = 0; var j = 0; var s = 0L
     while (i < a.length && j < b.length) {
       val lo = math.max(a(i), b(j))

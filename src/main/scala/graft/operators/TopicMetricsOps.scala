@@ -1,11 +1,17 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, DoubleType, LongType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.Tables
 import graft.functions.TextFunctions._
+import graft.functions.TextKernels
 
 /** Topic-quality metrics as pure DataFrame programs — the deterministic,
   * oracle-checkable half of the reference's topic-modeling suite:
@@ -15,15 +21,19 @@ import graft.functions.TextFunctions._
   *     W(t,c) = tf(t,c) · ln(1 + A / f(t)), A = mean tokens per class.
   *   - topic diversity (LDA_Analysis.py:310-338, BERTopic_Analysis.py:427-458;
   *     A6): distinct / total over the per-topic top keywords.
-  *   - u_mass coherence (LDA_Analysis.py:286-308; M4): mean over ordered word
-  *     pairs of ln((D(wi,wj)+1)/D(wj)) on document co-occurrence counts.
+  *   - topic coherence (LDA_Analysis.py:286-308; M4): u_mass, c_npmi,
+  *     c_uci and c_v, all scored on the driver from one `coCounts` pass.
   *   - cross-topic keyword dedup (BERTopic_Analysis.py:693-717; D2): first
   *     topic in rank order claims each keyword, survivors re-ranked.
   *
   * The fixture "classes" are the documents table's lang column — on a real
   * corpus the same functions run over any cluster/topic assignment column.
-  * Shuffle profile: one explode+groupBy per metric, all joins on tiny keys;
-  * the per-class top-k is a Window over ≤ classes·vocab rows.
+  * Shuffle profile: the c-TF-IDF family is one explode+groupBy, joins on
+  * tiny keys, and a per-class top-k Window over ≤ classes·vocab rows. The
+  * coherence family has no shuffle: `coCounts` is one aggregate job whose
+  * per-partition result is a fixed-size count array (sized by the ≤ 500
+  * topic words and their within-topic pairs), and every measure is driver
+  * arithmetic over those counts, returned as a driver-local frame.
   */
 object TopicMetricsOps {
 
@@ -112,8 +122,10 @@ object TopicMetricsOps {
                        k: Int): DataFrame =
     ctfidfRank(classTermScoresOf(docs, classCol, terms), k)
 
-  /** The shared top-k window over a class-term score frame. */
-  private def ctfidfRank(scores: DataFrame, k: Int): DataFrame = {
+  /** Top-k keywords per class of a class-term score frame (the shared
+    * window behind every c-TF-IDF keyword face).
+    */
+  def ctfidfRank(scores: DataFrame, k: Int): DataFrame = {
     val w = Window.partitionBy("cls").orderBy(col("score").desc, col("word"))
     scores
       .withColumn("rank", row_number().over(w))
@@ -174,383 +186,351 @@ object TopicMetricsOps {
   def dedupKeywordsByLang(spark: SparkSession, dir: String): DataFrame =
     dedupKeywords(ctfidfByLang(spark, dir), 5)
 
-  /** Tokenized corpus staging frame (doc, toks) — tokenize ONCE and feed
-    * every coherence measure from it (the HOF-staging pattern,
-    * AssemblyOps.scala:43-47). Callers scoring more than one measure should
-    * `Caching.track` this frame and pass it to the `*OfTokens` cores; the
-    * docs-based wrappers below build it per call for single-measure queries.
+  /** Tokenized corpus staging frame (toks), one row per non-empty
+    * document — tokenize ONCE and feed every coherence measure from it.
+    * Callers scoring several topic-word lists over one corpus should
+    * `Caching.track` this frame and pass it to `coherenceByClass`; the
+    * docs-based wrappers below build it per call.
     */
   def tokenizedDocs(docs: DataFrame, textCol: String): DataFrame =
-    docs.select(monotonically_increasing_id().as("doc"),
-      tokens(col(textCol)).as("toks"))
+    docs.select(tokens(col(textCol)).as("toks"))
       .filter(size(col("toks")) > 0)
 
-  /** u_mass coherence of a ranked word list over a document corpus:
-    * mean over pairs (rank_i > rank_j) of ln((D(wi,wj)+1) / D(wj)), with
-    * D = document frequency on distinct-token sets. `topWords` must be small
-    * (it is broadcast); the corpus side is one explode + two tiny groupBys.
+  /** The most (cls, word, rank) rows a coherence scoring collects to the
+    * driver: K ≤ 50 topics × 10 words (DEPLOY, "What stays on the driver").
+    */
+  val MaxTopicWords = 500
+
+  /** A (cls, word, rank) topic-word list on the driver, with the Spark type
+    * of its class column.
+    */
+  final case class TopicWords(clsType: DataType, rows: Seq[(Any, String, Int)]) {
+    /** Each class's word pairs (wi, wj) with rank(wi) > rank(wj) — the pairs
+      * every coherence measure averages over — classes in ascending order.
+      */
+    def pairsByClass: Seq[(Any, Seq[(String, String)])] =
+      rows.groupBy(_._1).toSeq.sortWith((a, b) => clsLess(a._1, b._1))
+        .map { case (cls, ws) =>
+          cls -> (for (i <- ws; j <- ws if i._3 > j._3) yield (i._2, j._2))
+        }
+  }
+
+  object TopicWords {
+    /** `topicWords`' rows on the driver. A list over `MaxTopicWords` rows
+      * fails here, after at most one row past the bound left the cluster.
+      */
+    def collect(topicWords: DataFrame): TopicWords = {
+      val rows = topicWords
+        .select(col("cls"), col("word"), col("rank").cast("int"))
+        .limit(MaxTopicWords + 1).collect()
+      require(rows.length <= MaxTopicWords,
+        s"topic-word list exceeds the driver bound of $MaxTopicWords " +
+          "(cls, word, rank) rows (K ≤ 50 topics × 10 words)")
+      TopicWords(topicWords.schema("cls").dataType,
+        rows.toSeq.map(r => (r.get(0), r.getString(1), r.getInt(2))))
+    }
+  }
+
+  /** Spark's ascending order on the class keys in use: strings by their
+    * UTF-8 bytes, integral ids by value.
+    */
+  private def clsLess(a: Any, b: Any): Boolean = (a, b) match {
+    case (x: String, y: String) =>
+      UTF8String.fromString(x).compareTo(UTF8String.fromString(y)) < 0
+    case (x: Number, y: Number) => x.longValue < y.longValue
+  }
+
+  /** Co-occurrence counts of a topic-word list over a tokenized corpus —
+    * everything u_mass, c_npmi, c_uci and c_v read. `words` are the
+    * distinct topic words, `pairs` the requested within-class pairs as
+    * (a, b) indices into `words`, a < b. D counts the non-empty documents
+    * holding the word (both words); C counts the boolean sliding windows of
+    * the kernel's window size holding them (step 1; a document shorter than
+    * the window is one window); `nWindows` counts every window. Words or
+    * pairs outside the request count 0, as does a word paired with itself.
+    */
+  final class CoCounts(words: Array[String], pairs: Array[(Int, Int)],
+                       docs: Array[Long], windows: Array[Long],
+                       pairDocs: Array[Long], pairWindows: Array[Long],
+                       val nWindows: Long) {
+    private val wordIx = words.zipWithIndex.toMap
+    private val pairIx = pairs.zipWithIndex.toMap
+    private def pairOf(a: String, b: String): Option[Int] =
+      for (i <- wordIx.get(a); j <- wordIx.get(b);
+           p <- pairIx.get((i min j, i max j))) yield p
+    def d(w: String): Long = wordIx.get(w).fold(0L)(docs(_))
+    def c(w: String): Long = wordIx.get(w).fold(0L)(windows(_))
+    def d(a: String, b: String): Long = pairOf(a, b).fold(0L)(pairDocs(_))
+    def c(a: String, b: String): Long = pairOf(a, b).fold(0L)(pairWindows(_))
+  }
+
+  /** THE coherence kernel: one pass over the tokenized (toks) corpus —
+    * one Spark job — that returns fixed-size counts for `topicWords`' words
+    * and within-class pairs. Each partition folds its documents into one
+    * long array of 2·|words| + 2·|pairs| + 1 slots (at the driver bound,
+    * ≤ 500 words and ≤ K·10·9/2 pairs), and only those arrays reach the
+    * driver: the accumulator scales with the topic lists, never with the
+    * vocabulary or the corpus. Window counts come from each word's merged
+    * coverage intervals (TextKernels.windowCover): C(w) is their total and
+    * C(a, b) the size of their intersection — exactly the number of distinct
+    * windows that hold the word(s).
+    */
+  def coCounts(toks: DataFrame, topicWords: TopicWords,
+               windowSize: Int): CoCounts = {
+    val words = topicWords.rows.map(_._2).distinct.sorted.toArray
+    val ix = words.zipWithIndex.toMap
+    val pairs = topicWords.pairsByClass.flatMap(_._2)
+      .collect { case (a, b) if a != b => (ix(a) min ix(b), ix(a) max ix(b)) }
+      .distinct.sorted.toArray
+    // partners(a): (b, slot) of each requested pair (a, b), packed flat
+    val partners = Array.tabulate(words.length)(a =>
+      pairs.indices.filter(pairs(_)._1 == a)
+        .flatMap(p => Seq(pairs(p)._2, p)).toArray)
+    val nW = words.length; val nP = pairs.length
+    val sums = toks.select(col("toks")).queryExecution.toRdd
+      .mapPartitions(rows =>
+        Iterator.single(foldDocs(rows, words, partners, nP, windowSize)))
+      .fold(new Array[Long](2 * nW + 2 * nP + 1)) { (acc, part) =>
+        var i = 0
+        while (i < acc.length) { acc(i) += part(i); i += 1 }
+        acc
+      }
+    new CoCounts(words, pairs, sums.slice(0, nW), sums.slice(nW, 2 * nW),
+      sums.slice(2 * nW, 2 * nW + nP), sums.slice(2 * nW + nP, 2 * nW + 2 * nP),
+      sums(2 * nW + 2 * nP))
+  }
+
+  /** One partition's coCounts slots: D(w) ‖ C(w) ‖ D(a,b) ‖ C(a,b) ‖ windows. */
+  private def foldDocs(rows: Iterator[InternalRow], words: Array[String],
+                       partners: Array[Array[Int]], nP: Int,
+                       w: Int): Array[Long] = {
+    val nW = words.length
+    val sums = new Array[Long](2 * nW + 2 * nP + 1)
+    val lookup = new java.util.HashMap[UTF8String, Integer]()
+    words.indices.foreach(i => lookup.put(UTF8String.fromString(words(i)), i))
+    val seenIn = Array.fill(nW)(-1) // last document holding each word
+    val positions = Array.fill(nW)(new scala.collection.mutable.ArrayBuilder.ofInt)
+    val cover = new Array[Array[Long]](nW)
+    val present = new Array[Int](nW)
+    var doc = 0
+    rows.foreach { row =>
+      val toks = if (row.isNullAt(0)) null else row.getArray(0)
+      val t = if (toks == null) 0 else toks.numElements()
+      if (t > 0) {
+        var m = 0; var i = 0
+        while (i < t) {
+          val hit = lookup.get(toks.getUTF8String(i))
+          if (hit != null) {
+            val a = hit.intValue
+            if (seenIn(a) != doc) {
+              seenIn(a) = doc; positions(a).clear(); present(m) = a; m += 1
+            }
+            positions(a) += i + 1
+          }
+          i += 1
+        }
+        var k = 0
+        while (k < m) {
+          val a = present(k)
+          cover(a) = TextKernels.windowCover(positions(a).result(), t, w)
+          sums(a) += 1
+          sums(nW + a) += TextKernels.intervalTotal(cover(a))
+          k += 1
+        }
+        k = 0
+        while (k < m) {
+          val a = present(k); val ps = partners(a)
+          var q = 0
+          while (q < ps.length) {
+            val b = ps(q)
+            if (seenIn(b) == doc) {
+              sums(2 * nW + ps(q + 1)) += 1
+              sums(2 * nW + nP + ps(q + 1)) +=
+                TextKernels.intervalIntersect(cover(a), cover(b))
+            }
+            q += 2
+          }
+          k += 1
+        }
+        sums(2 * nW + 2 * nP) += math.max(t - w + 1, 1)
+        doc += 1
+      }
+    }
+    sums
+  }
+
+  private val Eps = 1e-12
+
+  /** gensim's sliding window for c_npmi and c_uci. */
+  private val NpmiWindow = 10
+
+  /** Spark SQL's round(x, 4): HALF_UP on the double's decimal form. */
+  private def round4(x: Double): Double =
+    if (x.isNaN || x.isInfinite) x
+    else java.math.BigDecimal.valueOf(x)
+      .setScale(4, java.math.RoundingMode.HALF_UP).doubleValue
+
+  /** round(avg(xs), 4) — None (SQL null) over no rows. */
+  private def roundedMean(xs: Seq[Double]): Option[Double] =
+    if (xs.isEmpty) None else Some(round4(xs.sum / xs.size))
+
+  /** Window probabilities of one word pair. The logs are StrictMath's, as
+    * in Spark SQL's ln.
+    */
+  private final case class WindowPair(wi: String, wj: String,
+                                      pij: Double, pi: Double, pj: Double) {
+    def pmi: Double = StrictMath.log((pij + Eps) / (pi * pj))
+    def npmi: Double = pmi / -StrictMath.log(pij + Eps)
+  }
+
+  /** One class's scored pairs: the u_mass pair scores ln((D(wi,wj)+1)/D(wj))
+    * over the pairs whose wj occurs in the corpus, and the window
+    * probabilities of the pairs whose words both occur.
+    */
+  private final case class ClassPairs(cls: Any, umass: Seq[Double],
+                                      window: Seq[WindowPair])
+
+  /** Every class of `topicWords` scored from ONE coCounts pass over `toks`. */
+  private def scoreClasses(toks: DataFrame, topicWords: DataFrame,
+                           windowSize: Int): (TopicWords, Seq[ClassPairs]) = {
+    val tw = TopicWords.collect(topicWords)
+    val cc = coCounts(toks, tw, windowSize)
+    val n = cc.nWindows.toDouble
+    tw -> tw.pairsByClass.map { case (cls, pairs) =>
+      ClassPairs(cls,
+        pairs.collect { case (wi, wj) if cc.d(wj) > 0 =>
+          StrictMath.log((cc.d(wi, wj) + 1.0) / cc.d(wj)) },
+        pairs.collect { case (wi, wj) if cc.d(wi) > 0 && cc.d(wj) > 0 =>
+          WindowPair(wi, wj, cc.c(wi, wj) / n, cc.c(wi) / n, cc.c(wj) / n) })
+    }
+  }
+
+  /** A driver-local frame (a LocalRelation: no job to plan or collect). */
+  private def localFrame(spark: SparkSession, fields: Seq[StructField],
+                         rows: Seq[Row]): DataFrame =
+    spark.createDataFrame(rows.asJava, StructType(fields))
+
+  private def countField(name: String) = StructField(name, LongType, nullable = false)
+  private def scoreField(name: String) = StructField(name, DoubleType)
+
+  /** Per-class u_mass and C_NPMI of (cls, word, rank) topic-word lists, all
+    * classes from ONE corpus pass (`coCounts`) — the reference scores K
+    * topics with K sequential gensim passes per measure
+    * (LDA_Analysis.py:286-308). Returns the driver-local
+    * (cls, n_pairs, umass, c_npmi), ordered by cls, one row per class with
+    * at least one u_mass pair:
+    *   - u_mass (M4): mean over pairs (rank_i > rank_j) of
+    *     ln((D(wi,wj)+1) / D(wj)) on document counts. A corpus-absent wj
+    *     drops the pair; a corpus-absent wi keeps it at ln(1/D(wj)).
+    *     n_pairs counts these pairs.
+    *   - C_NPMI (Röder et al. 2015's boolean-sliding-window family, the
+    *     reference's gensim c_npmi): P(w), P(wi,wj) are window-containment
+    *     probabilities over windows of `NpmiWindow` tokens, and the score is
+    *     the mean over the pairs whose words both occur of
+    *     NPMI = ln((P(ij)+ε) / (P(i)·P(j))) / -ln(P(ij)+ε), ε = 1e-12;
+    *     null when no pair qualifies.
+    */
+  def coherenceByClass(toks: DataFrame, topicWords: DataFrame): DataFrame = {
+    val (tw, classes) = scoreClasses(toks, topicWords, NpmiWindow)
+    localFrame(toks.sparkSession,
+      Seq(StructField("cls", tw.clsType), countField("n_pairs"), scoreField("umass"),
+        scoreField("c_npmi")),
+      classes.filter(_.umass.nonEmpty).map(c =>
+        Row(c.cls, c.umass.size.toLong, roundedMean(c.umass).get,
+          roundedMean(c.window.map(_.npmi)).getOrElse(null))))
+  }
+
+  /** The class-averaged u_mass of a topic model's word lists — the k-grid's
+    * score: round(avg(umass), 4) over the per-class rounded scores.
+    */
+  def meanUmass(toks: DataFrame, topicWords: DataFrame): Double = {
+    val (_, classes) = scoreClasses(toks, topicWords, NpmiWindow)
+    roundedMean(classes.filter(_.umass.nonEmpty)
+      .map(c => roundedMean(c.umass).get)).getOrElse(Double.NaN)
+  }
+
+  /** u_mass coherence of one ranked word list (word, rank) over a document
+    * corpus: (n_pairs, umass), no row when the list has no pair.
     */
   def umassCoherence(docs: DataFrame, textCol: String,
                      topWords: DataFrame): DataFrame =
-    umassByClass(docs, textCol, topWords.withColumn("cls", lit(0)))
+    coherenceByClass(tokenizedDocs(docs, textCol),
+      topWords.withColumn("cls", lit(0)))
       .select(col("n_pairs"), col("umass"))
-
-  /** Per-class u_mass over (cls, word, rank) topic-word lists — every class
-    * scored from ONE corpus scan (the reference scores K topics with K
-    * sequential gensim passes, LDA_Analysis.py:286-308; here the class key
-    * rides the presence join so K never multiplies the scan count).
-    * Returns (cls, n_pairs, umass) ordered by cls.
-    */
-  def umassByClass(docs: DataFrame, textCol: String,
-                   topicWords: DataFrame): DataFrame =
-    umassByClassOfTokens(tokenizedDocs(docs, textCol), topicWords)
-
-  /** u_mass core over a pre-tokenized (doc, toks) corpus — empty docs carry
-    * no presence rows, so filtering them upstream leaves every D() count
-    * unchanged.
-    *
-    * The corpus-side work is CLASS-INDEPENDENT: D(w) and D(wi,wj) are
-    * document counts, so presence, the marginals, and the canonical
-    * unordered pair counts are computed once over the DISTINCT topic words;
-    * each class then averages the global pair scores its rank-ordered pair
-    * list selects. K topics sharing words (LDA top words are the corpus's
-    * frequent words) never multiply the presence or pair-join size by K.
-    */
-  def umassByClassOfTokens(toks: DataFrame, topicWords: DataFrame): DataFrame =
-    coherenceCore(toks, topicWords, windowSize = 10, withNpmi = false)
-      .select(col("cls"), col("n_pairs"), col("umass"))
 
   /** Query: per-language u_mass of each class's top-10 c-TF-IDF keywords —
     * the grouped-coherence path under an exact SQL oracle.
     */
   def umassByLang(spark: SparkSession, dir: String): DataFrame =
-    umassByClass(Tables.documents(spark, dir), "text",
+    coherenceByClass(tokenizedDocs(Tables.documents(spark, dir), "text"),
       ctfidfByLang(spark, dir).select(col("cls"), col("word"), col("rank")))
+      .select(col("cls"), col("n_pairs"), col("umass"))
 
-  /** C_NPMI coherence (Röder et al. 2015's boolean-sliding-window family,
-    * the c_npmi the reference computes via gensim, LDA_Analysis.py:286-308):
-    * virtual documents are all token windows of `windowSize` (step 1; short
-    * docs contribute one window), P(w) and P(wi,wj) are window-containment
-    * probabilities, and the topic score is the mean over unordered pairs of
-    *   NPMI = ln((P(ij)+ε) / (P(i)·P(j))) / -ln(P(ij)+ε),  ε = 1e-12.
-    *
-    * Shape at scale: one posexplode of topic-word HITS only (broadcast
-    * semi-join against the topic words first, so corpus size × window size
-    * never materializes — only hit count × window size), then two tiny
-    * groupBys and a K² pair join.
+  /** C_NPMI coherence of one ranked word list (word, rank):
+    * (n_pairs, c_npmi) over the pairs whose words both occur, no row when
+    * none does.
     */
   def npmiCoherence(docs: DataFrame, textCol: String, topWords: DataFrame,
-                    windowSize: Int = 10): DataFrame =
-    npmiByClass(docs, textCol, topWords.withColumn("cls", lit(0)), windowSize)
-      .select(col("n_pairs"), col("c_npmi"))
+                    windowSize: Int = NpmiWindow): DataFrame =
+    npmiOfTokens(tokenizedDocs(docs, textCol), topWords, windowSize)
 
-  /** Per-class C_NPMI over (cls, word, rank) topic-word lists — all classes
-    * from one corpus scan (window presence carries the class key).
-    * Returns (cls, n_pairs, c_npmi) ordered by cls.
-    */
-  def npmiByClass(docs: DataFrame, textCol: String, topicWords: DataFrame,
-                  windowSize: Int = 10): DataFrame =
-    npmiByClassOfTokens(graft.Caching.track(tokenizedDocs(docs, textCol)),
-      topicWords, windowSize)
-
-  /** C_NPMI core over a pre-tokenized (doc, toks) corpus. `toks` is consumed
-    * twice (window totals + presence) — callers must persist it.
-    */
-  def npmiByClassOfTokens(toks: DataFrame, topicWords: DataFrame,
-                          windowSize: Int = 10): DataFrame = {
-    val eps = 1e-12
-    pairProbabilitiesOfTokens(toks, topicWords, windowSize)
-      .withColumn("npmi",
-        log((col("p_ij") + eps) / (col("p_i") * col("p_j")))
-          / -log(col("p_ij") + eps))
-      .groupBy(col("cls"))
-      .agg(count(lit(1)).as("n_pairs"), round(avg(col("npmi")), 4).as("c_npmi"))
-      .orderBy("cls")
-  }
-
-  /** Query: C_NPMI coherence of the global top-10 words (window 10) — one
-    * shared tokenization feeds the top-word count and the window presence.
-    */
-  def npmiTop10(spark: SparkSession, dir: String): DataFrame = {
-    val toks = tokenizedDocs(Tables.documents(spark, dir), "text")
-    npmiByClassOfTokens(toks,
-      corpusTopWords(spark, dir, 10).withColumn("cls", lit(0)))
-      .select(col("n_pairs"), col("c_npmi"))
-  }
-
-  /** C_UCI coherence: mean PMI (not normalized) over pairs, same boolean
-    * sliding window (Röder's C_UCI; gensim c_uci, LDA_Analysis.py:286-308).
-    * Shares all machinery with npmiCoherence except the pair score.
-    */
-  def uciCoherence(docs: DataFrame, textCol: String, topWords: DataFrame,
-                   windowSize: Int = 10): DataFrame =
-    uciCoherenceOfTokens(graft.Caching.track(tokenizedDocs(docs, textCol)),
-      topWords, windowSize)
-
-  /** C_UCI core over a pre-tokenized (doc, toks) corpus. */
-  def uciCoherenceOfTokens(toks: DataFrame, topWords: DataFrame,
-                           windowSize: Int = 10): DataFrame =
-    pairProbabilitiesOfTokens(toks, topWords.withColumn("cls", lit(0)),
+  private def npmiOfTokens(toks: DataFrame, topWords: DataFrame,
+                           windowSize: Int): DataFrame = {
+    val (_, classes) = scoreClasses(toks, topWords.withColumn("cls", lit(0)),
       windowSize)
-      .withColumn("pmi",
-        log((col("p_ij") + 1e-12) / (col("p_i") * col("p_j"))))
-      .agg(count(lit(1)).as("n_pairs"), round(avg(col("pmi")), 4).as("c_uci"))
+    localFrame(toks.sparkSession, Seq(countField("n_pairs"), scoreField("c_npmi")),
+      classes.filter(_.window.nonEmpty).map(c =>
+        Row(c.window.size.toLong, roundedMean(c.window.map(_.npmi)).get)))
+  }
 
-  /** Query: C_UCI coherence of the global top-10 words — the corpus is
-    * tokenized ONCE and feeds both the top-word count and the presence scan.
+  /** Query: C_NPMI coherence of the global top-10 words (window 10). */
+  def npmiTop10(spark: SparkSession, dir: String): DataFrame =
+    npmiOfTokens(tokenizedDocs(Tables.documents(spark, dir), "text"),
+      corpusTopWords(spark, dir, 10), NpmiWindow)
+
+  /** Query: C_UCI coherence of the global top-10 words — mean PMI (not
+    * normalized) over pairs, same boolean sliding window of 10 (Röder's
+    * C_UCI; gensim c_uci, LDA_Analysis.py:286-308). One row:
+    * (n_pairs, c_uci).
     */
   def uciTop10(spark: SparkSession, dir: String): DataFrame = {
-    val toks = tokenizedDocs(Tables.documents(spark, dir), "text")
-    uciCoherenceOfTokens(toks, corpusTopWords(spark, dir, 10))
+    val (_, classes) = scoreClasses(
+      tokenizedDocs(Tables.documents(spark, dir), "text"),
+      corpusTopWords(spark, dir, 10).withColumn("cls", lit(0)), NpmiWindow)
+    val pairs = classes.flatMap(_.window)
+    localFrame(spark, Seq(countField("n_pairs"), scoreField("c_uci")),
+      Seq(Row(pairs.size.toLong, roundedMean(pairs.map(_.pmi)).getOrElse(null))))
   }
 
-  /** C_V coherence (Röder's best-performing measure; gensim c_v): NPMI
-    * context vectors from a 110-token boolean sliding window, s_one_set
-    * segmentation — each word's vector v_i = (NPMI(i,j))_j (diagonal uses
-    * P_ii = P_i) against the topic vector V = Σ v_i; score = mean cosine.
-    * Entirely DataFrame-expressed: the K×K matrix lives as (wi, wj, s) rows.
+  /** C_V coherence (Röder's best-performing measure; gensim c_v) of one
+    * ranked word list (word, rank): NPMI context vectors from a 110-token
+    * boolean sliding window, s_one_set segmentation — each word's vector
+    * v_i = (NPMI(i,j))_j over its pairs (diagonal: P_ii = P_i) against the
+    * topic vector V = Σ v_i; score = mean cosine. One row: (n_words, c_v).
     */
-  def cvCoherence(docs: DataFrame, textCol: String, topWords: DataFrame,
-                  windowSize: Int = 110): DataFrame =
-    cvCoherenceOfTokens(graft.Caching.track(tokenizedDocs(docs, textCol)),
-      topWords, windowSize)
-
-  /** C_V core over a pre-tokenized (doc, toks) corpus. */
   def cvCoherenceOfTokens(toks: DataFrame, topWords: DataFrame,
                           windowSize: Int = 110): DataFrame = {
-    val eps = 1e-12
-    def npmiOf(pij: org.apache.spark.sql.Column, pi: org.apache.spark.sql.Column,
-               pj: org.apache.spark.sql.Column) =
-      log((pij + eps) / (pi * pj)) / -log(pij + eps)
-    val probs = graft.Caching.track(
-      pairProbabilitiesOfTokens(toks, topWords.withColumn("cls", lit(0)),
-        windowSize).drop("cls"))
-    val tri = probs.select(col("wi"), col("wj"),
-      npmiOf(col("p_ij"), col("p_i"), col("p_j")).as("s"))
-    val sym = tri.union(tri.select(col("wj"), col("wi"), col("s")))
-    val marg = probs.select(col("wi").as("word"), col("p_i").as("p"))
-      .union(probs.select(col("wj"), col("p_j")))
-      .distinct()
-    val diag = marg.select(col("word").as("wi"), col("word").as("wj"),
-      npmiOf(col("p"), col("p"), col("p")).as("s"))
-    val all = graft.Caching.track(sym.union(diag))
-    val v = all.groupBy("wj").agg(sum("s").as("vj"))
-    val di = all.join(broadcast(v), "wj")
-      .groupBy("wi")
-      .agg(sum(col("s") * col("vj")).as("dot"), sum(col("s") * col("s")).as("ni2"))
-    val vn = v.agg(sum(col("vj") * col("vj")).as("vn2"))
-    di.crossJoin(broadcast(vn))
-      .withColumn("cos", col("dot") / (sqrt(col("ni2")) * sqrt(col("vn2"))))
-      .agg(count(lit(1)).as("n_words"), round(avg(col("cos")), 4).as("c_v"))
+    val (_, classes) = scoreClasses(toks, topWords.withColumn("cls", lit(0)),
+      windowSize)
+    val probs = classes.flatMap(_.window)
+    val tri = probs.map(p => (p.wi, p.wj, p.npmi))
+    val marg = (probs.map(p => p.wi -> p.pi) ++ probs.map(p => p.wj -> p.pj)).distinct
+    val all = tri ++ tri.map { case (i, j, s) => (j, i, s) } ++
+      marg.map { case (w, p) => (w, w, WindowPair(w, w, p, p, p).npmi) }
+    val v = all.groupMapReduce(_._2)(_._3)(_ + _)
+    val vn = math.sqrt(v.values.map(x => x * x).sum)
+    val cos = all.groupBy(_._1).values.toSeq.map { row =>
+      row.map { case (_, j, s) => s * v(j) }.sum /
+        (math.sqrt(row.map(e => e._3 * e._3).sum) * vn)
+    }
+    localFrame(toks.sparkSession, Seq(countField("n_words"), scoreField("c_v")),
+      Seq(Row(cos.size.toLong, roundedMean(cos).getOrElse(null))))
   }
 
-  /** Query: C_V coherence of the global top-10 words (window 110) — one
-    * shared tokenization feeds the top-word count and the window presence.
-    */
-  def cvTop10(spark: SparkSession, dir: String): DataFrame = {
-    val toks = tokenizedDocs(Tables.documents(spark, dir), "text")
-    cvCoherenceOfTokens(toks, corpusTopWords(spark, dir, 10))
-  }
-
-  /** Window-containment probabilities for every unordered pair of topic
-    * words (shared core of the sliding-window coherence family).
-    */
-  def pairProbabilities(docs: DataFrame, textCol: String, topWords: DataFrame,
-                        windowSize: Int): DataFrame =
-    pairProbabilitiesByClass(docs, textCol,
-      topWords.withColumn("cls", lit(0)), windowSize).drop("cls")
-
-  /** Grouped wrapper: window-containment probabilities per (cls, pair)
-    * from raw documents — tokenizes, then defers to the interval-based
-    * core below.
-    */
-  def pairProbabilitiesByClass(docs: DataFrame, textCol: String,
-                               topicWords: DataFrame,
-                               windowSize: Int): DataFrame =
-    pairProbabilitiesOfTokens(
-      graft.Caching.track(tokenizedDocs(docs, textCol)), topicWords, windowSize)
-
-  /** Grouped core over a pre-tokenized (doc, toks) corpus — callers scoring
-    * several measures stage (and persist) the tokenization once.
-    *
-    * Window-containment probabilities are CLASS-INDEPENDENT (P(w) and
-    * P(wi,wj) are window counts), so the counts run once over the DISTINCT
-    * topic words; the per-class pair list then joins the global counts —
-    * K topics sharing words never multiply the corpus-side cost.
-    *
-    * Shape: window containment is carried as per-(doc, word) MERGED
-    * interval arrays (TextKernels.windowCover) instead of an exploded
-    * (doc, word, window) table — P(w) is the interval total and P(wi,wj)
-    * a kernel interval-intersection on the per-doc pair join. This removes
-    * both former heavy shuffles (the ~window-size-times-larger presence
-    * distinct and its (doc, ws) sort-merge self-join); the per-doc pair
-    * rows partial-aggregate map-side down to ≤ |words|² keys. Counts are
-    * identical by construction: |union of covered windows| and
-    * |intersection of two unions| are exactly the old distinct-row counts.
-    */
-  def pairProbabilitiesOfTokens(toks: DataFrame, topicWords: DataFrame,
-                                windowSize: Int): DataFrame = {
-    import graft.functions.TextExpressions.{intervalIntersectK, intervalTotalK, windowCoverK}
-    val words = topicWords.select("word").distinct()
-    val totals = toks.agg(
-      sum(greatest(size(col("toks")) - (windowSize - 1), lit(1))).as("n_windows"))
-    val hits = toks
-      .select(col("doc"), size(col("toks")).as("t"),
-        posexplode(col("toks")).as(Seq("pos0", "word")))
-      .join(broadcast(words), "word")
-    val perWord = graft.Caching.track(hits
-      .groupBy(col("doc"), col("word"))
-      .agg(max(col("t")).as("t"),
-        sort_array(collect_list(col("pos0") + 1)).as("ps"))
-      .select(col("doc"), col("word"),
-        windowCoverK(col("ps"), col("t"), windowSize).as("iv")))
-    val pw = perWord.groupBy(col("word"))
-      .agg(sum(intervalTotalK(col("iv"))).as("cw"))
-    // canonical unordered pair counts (wa < wb); co-occurrence is symmetric
-    val pij = perWord.as("a")
-      .join(perWord.as("b"),
-        col("a.doc") === col("b.doc") && col("a.word") < col("b.word"))
-      .select(col("a.word").as("wa"), col("b.word").as("wb"),
-        intervalIntersectK(col("a.iv"), col("b.iv")).as("x"))
-      .filter(col("x") > 0)
-      .groupBy(col("wa"), col("wb"))
-      .agg(sum(col("x")).as("cij"))
-    val pairs = topicWords.as("i")
-      .join(topicWords.as("j"),
-        col("i.cls") === col("j.cls") && col("i.rank") > col("j.rank"))
-      .select(col("i.cls").as("cls"), col("i.word").as("wi"), col("j.word").as("wj"))
-    pairs
-      .withColumn("wa", least(col("wi"), col("wj")))
-      .withColumn("wb", greatest(col("wi"), col("wj")))
-      .join(broadcast(pij), Seq("wa", "wb"), "left")
-      .drop("wa", "wb")
-      .join(broadcast(pw.select(col("word").as("wi"), col("cw").as("ci"))), "wi")
-      .join(broadcast(pw.select(col("word").as("wj"), col("cw").as("cj"))), "wj")
-      .crossJoin(broadcast(totals))
-      .withColumn("p_ij",
-        coalesce(col("cij"), lit(0L)).cast("double") / col("n_windows"))
-      .withColumn("p_i", col("ci").cast("double") / col("n_windows"))
-      .withColumn("p_j", col("cj").cast("double") / col("n_windows"))
-  }
-
-  /** Fused u_mass + c_npmi over ONE shared hits frame (r17, the
-    * lda_topic_coherence residual): the two cores consumed the same
-    * tokenized corpus but each ran its own explode, (doc, word) groupBy,
-    * marginal aggregate and per-doc self-join — yet u_mass's presence set
-    * IS perWord's key set (a word is document-present iff it has
-    * positions), u_mass's D(wi,wj) is the self-join's row count where
-    * npmi's C(wi,wj) is its interval-intersection sum, and both marginals
-    * group the same frame. One explode, one groupBy, one self-join, one
-    * marginal agg — bit-equal outputs by construction:
-    *   - dij = count over co-present doc pairs (every joined row);
-    *   - cij = sum(x) over the same rows (the separate core's x>0 filter
-    *     only drops zero addends — intervals are non-negative);
-    *   - the wj marginal joins INNER (both measures require it), the wi
-    *     marginal LEFT: a corpus-absent wi nulls the npmi column (avg
-    *     skips nulls — matching the separate npmi core's inner join)
-    *     while u_mass keeps the pair, exactly the separate cores' n_pairs
-    *     semantics.
-    * Returns (cls, n_pairs, umass, c_npmi) ordered by cls; n_pairs is the
-    * u_mass core's count, as the combined face reports it.
-    */
-  def umassNpmiByClassOfTokens(toks: DataFrame, topicWords: DataFrame,
-                               windowSize: Int = 10): DataFrame =
-    coherenceCore(toks, topicWords, windowSize, withNpmi = true)
-
-  /** THE document-coherence core (r18, VERDICT r17 #7 — one core instead
-    * of two): every u_mass / fused-u_mass+npmi face shares this one
-    * implementation; `withNpmi` gates the positional MACHINERY, never the
-    * shared scaffolding, so the two modes cannot drift semantically:
-    *   - withNpmi = false: perWord is the cheap distinct-token presence
-    *     frame (one explode, no positional collect, no interval kernels)
-    *     — the exact plan the separate u_mass core ran, because u_mass
-    *     only needs EXISTENCE per (doc, word);
-    *   - withNpmi = true: perWord carries window-cover intervals; dij is
-    *     the same self-join's row count, cij its interval-intersection
-    *     sum, and the window totals + npmi columns append to the shared
-    *     tail.
-    * Shared either way: the topic-word distinct, the rank-ordered pair
-    * list, wa/wb canonicalization, the dij left-join + wj marginal
-    * inner-join (both modes require wj corpus presence), the u_mass
-    * pair_score, and the per-class aggregate. Join parity notes of the
-    * r17 fused core hold verbatim: the wi marginal joins LEFT (a
-    * corpus-absent wi nulls the npmi column — avg skips nulls — while
-    * u_mass keeps the pair); the umass-only mode's extra (constant-zero)
-    * cij/ci columns are never read by its projection.
-    */
-  private def coherenceCore(toks: DataFrame, topicWords: DataFrame,
-                            windowSize: Int, withNpmi: Boolean): DataFrame = {
-    import graft.functions.TextExpressions.{intervalIntersectK, intervalTotalK, windowCoverK}
-    val words = topicWords.select("word").distinct()
-    val perWord = graft.Caching.track(
-      if (withNpmi)
-        toks.select(col("doc"), size(col("toks")).as("t"),
-            posexplode(col("toks")).as(Seq("pos0", "word")))
-          .join(broadcast(words), "word")
-          .groupBy(col("doc"), col("word"))
-          .agg(max(col("t")).as("t"),
-            sort_array(collect_list(col("pos0") + 1)).as("ps"))
-          .select(col("doc"), col("word"),
-            windowCoverK(col("ps"), col("t"), windowSize).as("iv"))
-      else
-        toks.select(col("doc"), explode(array_distinct(col("toks"))).as("word"))
-          .join(broadcast(words), "word")) // (doc, word) hits only, each once
-    val marg =
-      if (withNpmi)
-        perWord.groupBy(col("word"))
-          .agg(count(lit(1)).as("d"), sum(intervalTotalK(col("iv"))).as("cw"))
-      else
-        perWord.groupBy(col("word")).agg(count(lit(1)).as("d"))
-          .withColumn("cw", lit(0L))
-    // canonical unordered pair frame (wa < wb); D and C are symmetric
-    val joined = perWord.as("a")
-      .join(perWord.as("b"), col("a.doc") === col("b.doc") &&
-        col("a.word") < col("b.word"))
-    val pairAgg =
-      if (withNpmi)
-        joined.select(col("a.word").as("wa"), col("b.word").as("wb"),
-            intervalIntersectK(col("a.iv"), col("b.iv")).as("x"))
-          .groupBy(col("wa"), col("wb"))
-          .agg(count(lit(1)).as("dij"), sum(col("x")).as("cij"))
-      else
-        joined.groupBy(col("a.word").as("wa"), col("b.word").as("wb"))
-          .agg(count(lit(1)).as("dij"))
-          .withColumn("cij", lit(0L))
-    val pairs = topicWords.as("i")
-      .join(topicWords.as("j"),
-        col("i.cls") === col("j.cls") && col("i.rank") > col("j.rank"))
-      .select(col("i.cls").as("cls"), col("i.word").as("wi"), col("j.word").as("wj"))
-    val eps = 1e-12
-    val base = pairs
-      .withColumn("wa", least(col("wi"), col("wj")))
-      .withColumn("wb", greatest(col("wi"), col("wj")))
-      .join(broadcast(pairAgg), Seq("wa", "wb"), "left")
-      .join(broadcast(marg.select(col("word").as("wi"), col("cw").as("ci"))),
-        Seq("wi"), "left")
-      .join(broadcast(marg.select(col("word").as("wj"), col("cw").as("cj"),
-        col("d").as("dj"))), "wj")
-      .withColumn("pair_score",
-        log((coalesce(col("dij"), lit(0L)) + lit(1.0)) / col("dj")))
-    val scored =
-      if (withNpmi) {
-        val totals = toks.agg(sum(greatest(
-          size(col("toks")) - (windowSize - 1), lit(1))).as("n_windows"))
-        base.crossJoin(broadcast(totals))
-          .withColumn("p_ij",
-            coalesce(col("cij"), lit(0L)).cast("double") / col("n_windows"))
-          .withColumn("p_i", col("ci").cast("double") / col("n_windows"))
-          .withColumn("p_j", col("cj").cast("double") / col("n_windows"))
-          .withColumn("npmi",
-            log((col("p_ij") + eps) / (col("p_i") * col("p_j")))
-              / -log(col("p_ij") + eps))
-      } else base
-    val aggs = Seq(count(lit(1)).as("n_pairs"),
-        round(avg(col("pair_score")), 4).as("umass")) ++
-      (if (withNpmi) Seq(round(avg(col("npmi")), 4).as("c_npmi")) else Nil)
-    scored.groupBy(col("cls"))
-      .agg(aggs.head, aggs.tail: _*)
-      .orderBy("cls")
-  }
+  /** Query: C_V coherence of the global top-10 words (window 110). */
+  def cvTop10(spark: SparkSession, dir: String): DataFrame =
+    cvCoherenceOfTokens(tokenizedDocs(Tables.documents(spark, dir), "text"),
+      corpusTopWords(spark, dir, 10))
 
   /** SO1 — pairwise Jaccard overlap of per-class keyword sets (the topic
     * overlap matrix, LDA_Analysis.py:341-348). K×K output, K tiny.
@@ -570,15 +550,10 @@ object TopicMetricsOps {
     keywordOverlapMatrix(ctfidfByLang(spark, dir))
 
   /** F9/J3 — topic similarity matrix: cosine between the classes' full
-    * term-score vectors (sparse, joined on the shared term dimension;
-    * LDA_Analysis.py:367-411's topic×topic cosine).
+    * term-score vectors of a class-term score frame (sparse, joined on the
+    * shared term dimension; LDA_Analysis.py:367-411's topic×topic cosine).
     */
-  def classSimilarityMatrix(docs: DataFrame, classCol: String,
-                            textCol: String): DataFrame =
-    classSimilarityMatrixOfScores(
-      classTermScores(docs, classCol, textCol))
-
-  private def classSimilarityMatrixOfScores(scoresIn: DataFrame): DataFrame = {
+  def classSimilarityMatrixOfScores(scoresIn: DataFrame): DataFrame = {
     val scores = graft.Caching.track(scoresIn
       .select(col("cls"), col("word"), col("score")))
     val norms = scores.groupBy("cls")
@@ -647,14 +622,9 @@ object TopicMetricsOps {
       top
     }
 
-  /** Query: u_mass coherence of the global top-10 words — one shared
-    * tokenization feeds the top-word count and the document presence.
-    */
-  def umassTop10(spark: SparkSession, dir: String): DataFrame = {
-    val toks = graft.Caching.track(
-      tokenizedDocs(Tables.documents(spark, dir), "text"))
-    umassByClassOfTokens(toks,
+  /** Query: u_mass coherence of the global top-10 words. */
+  def umassTop10(spark: SparkSession, dir: String): DataFrame =
+    coherenceByClass(tokenizedDocs(Tables.documents(spark, dir), "text"),
       corpusTopWords(spark, dir, 10).withColumn("cls", lit(0)))
       .select(col("n_pairs"), col("umass"))
-  }
 }

@@ -337,13 +337,6 @@ object TopicModelOps {
       .orderBy("cls", "rank")
   }
 
-  /** Query: per-topic u_mass + c_npmi of the shared k=5 LDA fit — every
-    * topic scored from one corpus scan per measure via the grouped coherence
-    * core (rows-only: the topic-word lists come from the trained model).
-    * The corpus is tokenized ONCE and the persisted (doc, toks) frame feeds
-    * both measures' presence scans — the second tokenize+scan pass was the
-    * query's dominant cost.
-    */
   /** (cls, word, rank) frame of a fitted model's per-topic top words —
     * describeTopics order, deterministic for a seeded fit. K·topN rows.
     */
@@ -357,6 +350,11 @@ object TopicModelOps {
     }.toSeq.toDF("cls", "word", "rank")
   }
 
+  /** Query: per-topic u_mass + c_npmi of the shared k=5 LDA fit — every
+    * topic and both measures from one corpus pass
+    * (TopicMetricsOps.coherenceByClass; rows-only: the topic-word lists
+    * come from the trained model).
+    */
   def ldaTopicCoherence(spark: SparkSession, dir: String): DataFrame = {
     val (_, vocab, model) = fittedLda(spark, dir, 5, 20)
     val topicWords = topicWordsDF(spark, model, vocab)
@@ -364,20 +362,18 @@ object TopicModelOps {
     // the fit is the SAME presence/pair SQL the c-TF-IDF coherence queries
     // already verify, just sourced from the fitted word lists
     graft.Artifacts.save("lda_topic_words")(topicWords)
-    val toks = graft.Caching.track(
-      TopicMetricsOps.tokenizedDocs(Tables.documents(spark, dir), "text"))
-    // fused core (r17): both measures from one hits frame / one self-join —
-    // the separate cores re-derived identical presence and pair frames
-    TopicMetricsOps.umassNpmiByClassOfTokens(toks, topicWords)
+    // both measures, every topic, from one corpus pass; ordered by topic
+    TopicMetricsOps.coherenceByClass(
+      TopicMetricsOps.tokenizedDocs(Tables.documents(spark, dir), "text"),
+      topicWords)
       .select(col("cls").as("topic"), col("n_pairs"), col("umass"),
         col("c_npmi"))
-      .orderBy("topic")
   }
 
   /** LDA topic-count grid search scored by u_mass coherence (M5). */
   def ldaGridSearch(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    // one tokenized corpus feeds every grid point's u_mass presence scan
+    // one tokenized corpus feeds every grid point's u_mass pass
     val toks = graft.Caching.track(
       TopicMetricsOps.tokenizedDocs(Tables.documents(spark, dir), "text"))
     // the k's are independent seeded fits — forked so their Spark jobs run
@@ -401,17 +397,12 @@ object TopicModelOps {
     // each grid point's word lists export for the oracle, which re-runs
     // the u_mass scoring + argmax downstream over all k's in one query
     graft.Artifacts.save(s"lda_grid_words_$k")(topicWords)
-    (k, meanUmass(toks, topicWords))
+    (k, TopicMetricsOps.meanUmass(toks, topicWords))
   }
-
-  private def meanUmass(toks: DataFrame, topicWords: DataFrame): Double =
-    TopicMetricsOps.umassByClassOfTokens(toks, topicWords)
-      .agg(round(avg(col("umass")), 4))
-      .collect()(0).getDouble(0)
 
   /** One document frame's LDA inputs, built once for every consumer: the
     * CountVectorizer features (`vectorize`) with their vocabulary, and the
-    * tokenized (doc, toks) corpus the coherence scans read. The EP3 report
+    * tokenized (toks) corpus the coherence pass reads. The EP3 report
     * and its k-grid both fit and score over these.
     */
   final case class LdaCorpus(vecs: DataFrame, vocab: Array[String],
@@ -440,7 +431,8 @@ object TopicModelOps {
       val model = new LDA().setK(k).setSeed(Seed).setMaxIter(maxIter)
         .setOptimizeDocConcentration(true)
         .setFeaturesCol("features").fit(corpus.vecs)
-      (k, meanUmass(corpus.toks, topicWordsDF(spark, model, corpus.vocab)))
+      (k, TopicMetricsOps.meanUmass(corpus.toks,
+        topicWordsDF(spark, model, corpus.vocab)))
     })
     rows.toDF("k", "umass").withColumn("best",
       (col("umass") === max(col("umass")).over(Window.partitionBy())).cast("int"))

@@ -51,16 +51,10 @@ object AnalysisRunner {
     val kw = graft.Caching.track(topics.select(col("topic").cast("string").as("cls"),
       col("rank"), col("term").as("word")))
 
-    // all K topics scored in ONE corpus scan per measure (the old driver
-    // loop re-scanned the corpus 2·K times, once per topic per measure);
-    // the corpus is tokenized once and feeds both measures' presence scans
-    val topicWords = topics
-      .select(col("topic").as("cls"), col("term").as("word"), col("rank"))
-    val perTopicCoherence = TopicMetricsOps.umassByClassOfTokens(toks, topicWords)
-      .select(col("cls").as("topic"), col("umass"))
-      .join(TopicMetricsOps.npmiByClassOfTokens(toks, topicWords)
-        .select(col("cls").as("topic"), col("c_npmi")), "topic")
-      .orderBy("topic")
+    // all K topics, both measures, from ONE pass over the shared corpus
+    val perTopicCoherence = TopicMetricsOps.coherenceByClass(toks,
+        topics.select(col("topic").as("cls"), col("term").as("word"), col("rank")))
+      .select(col("cls").as("topic"), col("umass"), col("c_npmi"))
 
     // F7 — the reference's "keyword1, keyword2, …" report strings with
     // 4-decimal weights (LDA_Analysis.py:482,523-524)
@@ -111,16 +105,16 @@ object AnalysisRunner {
     // every keyword-derived sheet, as the reference does
     // (BERTopic_Analysis.py:395,438-439,474-475,549-550,695-697)
     val denoised = clustered.filter(col("cluster") =!= -1)
-    val kw = graft.Caching.track(
-      TopicMetricsOps.ctfidfKeywords(denoised, "cluster", textCol, 10))
+    // one class-term table feeds the keyword rank and the similarity matrix
+    val scores = TopicMetricsOps.classTermScores(denoised, "cluster", textCol)
+    val kw = graft.Caching.track(TopicMetricsOps.ctfidfRank(scores, 10))
     ReportSink.write(outDir, Seq(
       "keywords" -> kw,
       "keywords_dedup" -> TopicMetricsOps.dedupKeywords(kw, 5,
         withScore = true),
       "sizes" -> clustered.groupBy("cluster").agg(count(lit(1)).as("n_docs")),
       "diversity" -> TopicMetricsOps.topicDiversity(kw),
-      "similarity" -> TopicMetricsOps.classSimilarityMatrix(
-        denoised, "cluster", textCol),
+      "similarity" -> TopicMetricsOps.classSimilarityMatrixOfScores(scores),
       "examples" -> TopicExtrasOps.jaccardExamples(
         denoised, kw, idCol, textCol, "cluster", 3),
       "interpretation" -> TopicExtrasOps.interpretKeywords(kw),

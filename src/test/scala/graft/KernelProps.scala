@@ -144,8 +144,6 @@ object KernelProps extends Properties("HashKernels") {
 
   // ---- window-coverage interval kernels vs brute-force window sets ----
   import graft.functions.TextKernels
-  private def ints(xs: Seq[Int]): ArrayData =
-    UnsafeArrayData.fromPrimitiveArray(xs.toArray)
   private def bruteWindows(ps: Seq[Int], t: Int, w: Int): Set[Long] =
     ps.flatMap(p => math.max(1, p - w + 1).toLong to
       math.min(p, math.max(t - w + 1, 1)).toLong).toSet
@@ -158,11 +156,10 @@ object KernelProps extends Properties("HashKernels") {
 
   property("windowCover union == brute-force covered-window set") =
     forAll(docGen) { case (ps, t, w) =>
-      val iv = TextKernels.windowCover(ints(ps), t, w).toLongArray()
+      val iv = TextKernels.windowCover(ps.toArray, t, w)
       val expanded = iv.grouped(2).flatMap(a => a(0) to a(1)).toSet
       expanded == bruteWindows(ps, t, w) &&
-        TextKernels.intervalTotal(
-          TextKernels.windowCover(ints(ps), t, w)) == expanded.size.toLong
+        TextKernels.intervalTotal(iv) == expanded.size.toLong
     }
 
   property("intervalIntersect == brute-force set intersection size") =
@@ -170,8 +167,8 @@ object KernelProps extends Properties("HashKernels") {
       // same doc: same t and w for both words
       val psB2 = psB.filter(_ <= tA)
       (psB2.nonEmpty) ==> {
-        val a = TextKernels.windowCover(ints(psA), tA, w)
-        val b = TextKernels.windowCover(ints(psB2), tA, w)
+        val a = TextKernels.windowCover(psA.toArray, tA, w)
+        val b = TextKernels.windowCover(psB2.toArray, tA, w)
         TextKernels.intervalIntersect(a, b) ==
           (bruteWindows(psA, tA, w) & bruteWindows(psB2, tA, w)).size.toLong
       }

@@ -102,8 +102,7 @@ class TopicMetricsSpec extends SparkSuite {
         TopicMetricsOps.topFrequentWords(df, "text", 3)).collect()(0).getDouble(1)
     assert(um(co) > um(dis))
   }
-  test("fused u_mass+c_npmi core is bit-equal to the separate cores " +
-    "(r17 fusion contract), including a corpus-absent topic word") {
+  test("one-pass u_mass+c_npmi: an absent word keeps only its u_mass") {
     import graft.operators.TopicMetricsOps._
     val corpus = Seq(
       "aa bb cc dd ee aa bb",
@@ -111,26 +110,34 @@ class TopicMetricsSpec extends SparkSuite {
       "bb dd ff hh aa",
       "cc cc dd ee aa bb cc"
     ).toDF("text")
-    val toks = Caching.track(tokenizedDocs(corpus, "text"))
-    // two classes; class 1 includes "zz" which never occurs in the corpus
-    // (the join-parity edge: u_mass keeps the pair when only wj is needed,
-    // npmi nulls it — see the fused core's scaladoc)
+    // two classes; class 1 includes "zz", which never occurs in the corpus
     val topicWords = Seq(
       (0, "aa", 1), (0, "bb", 2), (0, "cc", 3),
       (1, "dd", 1), (1, "ee", 2), (1, "zz", 3)
     ).toDF("cls", "word", "rank")
-    val fused = umassNpmiByClassOfTokens(toks, topicWords)
+    val got = coherenceByClass(tokenizedDocs(corpus, "text"), topicWords)
       .collect().map(r => (r.getInt(0), r.getLong(1), r.getDouble(2), r.getDouble(3)))
-    val um = umassByClassOfTokens(toks, topicWords)
-      .collect().map(r => (r.getInt(0), r.getLong(1), r.getDouble(2)))
-    val np = npmiByClassOfTokens(toks, topicWords)
-      .collect().map(r => (r.getInt(0), r.getDouble(2))).toMap
-    assert(fused.map(f => (f._1, f._2, f._3)).toSeq === um.toSeq,
-      "u_mass columns (incl. n_pairs with the absent-word pair kept) must match")
-    fused.foreach { case (cls, _, _, cnpmi) =>
-      assert(cnpmi === np(cls), s"c_npmi for class $cls must match the separate core")
-    }
-    Caching.releaseAll()
+    // every doc is shorter than the 10-token window: 4 windows, C = D
+    // class 0: D(aa)=4, D(bb)=D(cc)=3, D(bb,aa)=D(cc,aa)=3, D(cc,bb)=2;
+    //   u_mass pairs ln(4/4), ln(4/4), ln(3/3); npmi 0, 0, ln(.5/.5625)/-ln(.5)
+    // class 1: D(dd)=D(ee)=3, D(ee,dd)=2, zz absent. u_mass keeps (zz,dd) and
+    //   (zz,ee) at ln(1/D(wj)): (ln(3/3) + 2·ln(1/3))/3; c_npmi keeps (ee,dd) only
+    val npmiHalf = math.log(0.5 / 0.5625) / -math.log(0.5)
+    def r4(x: Double) = BigDecimal(x).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
+    assert(got.toSeq === Seq(
+      (0, 3L, 0.0, r4(npmiHalf / 3)),
+      (1, 3L, r4(2 * math.log(1.0 / 3) / 3), r4(npmiHalf))))
+  }
+
+  test("a topic-word list over the driver bound fails, naming the bound") {
+    import graft.operators.TopicMetricsOps._
+    val toks = tokenizedDocs(Seq("aa bb cc").toDF("text"), "text")
+    val tooMany = (1 to MaxTopicWords + 1)
+      .map(i => ((i - 1) / 10, s"w$i", (i - 1) % 10 + 1)).toDF("cls", "word", "rank")
+    val e = intercept[IllegalArgumentException](coherenceByClass(toks, tooMany))
+    assert(e.getMessage.contains(s"driver bound of $MaxTopicWords"))
+    // at the bound the list is scored (no listed word occurs: no pair row)
+    assert(coherenceByClass(toks, tooMany.filter(col("cls") < 50)).collect().isEmpty)
   }
 
 }

@@ -17,8 +17,13 @@ alike. Each tree builds itself on its first run.
 For every metric the workload reports (the end-to-end ones of
 BENCHMARK.json, or the per-layer ones with --trace 1) it prints each
 side's median, quartiles and IQR/median, the change of the median in %,
-and how many pairs the current tree won. `--json PATH` also writes every
-run's metrics. Exits 1 if any run failed or failed its checks.
+and how many pairs the current tree won. It then prints, for every timed
+call, each side's median over the pairs of the run's own median latency,
+read from the run's record (`.bench_build/records/`, its `samples`), so
+an untraced A/B still shows which call moved: `query_p90_ms` is a
+Harrell-Davis mix of a run's slowest calls. `--json PATH` also writes
+every run's metrics and per-call medians. Exits 1 if any run failed or
+failed its checks.
 """
 import argparse
 import json
@@ -38,6 +43,15 @@ def export_rev(rev, dest):
     archive = subprocess.run(["git", "archive", "--format=tar", rev], cwd=ROOT,
                              stdout=subprocess.PIPE, check=True).stdout
     subprocess.run(["tar", "-x", "-C", dest], input=archive, check=True)
+
+
+def call_medians(tree, workload, seed, trace):
+    """Median latency in ms of each timed call of the run just recorded in `tree`."""
+    path = os.path.join(tree, ".bench_build", "records",
+                        f"{workload}-seed{seed}-trace{trace}.json")
+    with open(path) as f:
+        samples = json.load(f)["samples"]
+    return {name: statistics.median(xs) * 1e3 for name, xs in samples.items() if xs}
 
 
 def run_once(tree, workload, seed, seconds, trace):
@@ -83,6 +97,7 @@ def main():
     base_tree = os.path.join(tmp, "base")
     os.makedirs(base_tree)
     runs = {"base": [], "current": []}
+    calls = {"base": [], "current": []}
     failures = []
     try:
         export_rev(a.base, base_tree)
@@ -98,6 +113,8 @@ def main():
                 if failure:
                     failures.append(f"pair {seed} {side}: {failure}")
                 runs[side].append(None if failure else values)
+                calls[side].append(None if failure else
+                                   call_medians(trees[side], a.workload, seed, a.trace))
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 
@@ -121,12 +138,24 @@ def main():
         beyond = " >IQR" if abs(cq[1] - bq[1]) > bq[2] - bq[0] else ""
         print(f"{name + ' (' + units.get(name, '?') + ')':44} {fmt(bq):>40} {fmt(cq):>40} "
               f"{change:+7.1f}% {wins:>3}/{len(pairs)}{beyond}")
+    call_pairs = [(b, c) for b, c in zip(calls["base"], calls["current"]) if b and c]
+    call_names = sorted(set().union(*(set(b) & set(c) for b, c in call_pairs))) \
+        if call_pairs else []
+    print(f"\n{'timed call, median of the run medians':44} {'base ms':>10} {'current ms':>10}"
+          f" {'change':>8} {'wins':>6}")
+    for name in call_names:
+        b = statistics.median(p[0][name] for p in call_pairs)
+        c = statistics.median(p[1][name] for p in call_pairs)
+        wins = sum(p[1][name] < p[0][name] for p in call_pairs)
+        change = (c - b) / b * 100 if b else 0.0
+        print(f"{name:44} {b:10.1f} {c:10.1f} {change:+7.1f}% {wins:>3}/{len(call_pairs)}")
     for fl in failures:
         print(f"FAILED {fl}")
     if a.json:
         with open(a.json, "w") as f:
             json.dump({"base": a.base, "workload": a.workload, "trace": a.trace,
-                       "runs": runs, "failures": failures}, f, indent=1, sort_keys=True)
+                       "runs": runs, "calls": calls, "failures": failures}, f,
+                      indent=1, sort_keys=True)
     return 1 if failures else 0
 
 
