@@ -1,36 +1,18 @@
 package graft
 import org.apache.spark.sql.SparkSession
 object Bench {
-  /** Pre-clock pause after each System.gc() — see the protocol note in
-    * `run`. Overridable for A/B protocol measurements.
-    */
-  val GcSettleMs: Long = {
-    val raw = sys.env.getOrElse("SPARK_GRAFT_GC_SETTLE_MS", "100")
-    // a bare .toLong here surfaced a typo as an opaque
-    // ExceptionInInitializerError with no hint of which knob was bad
-    try raw.toLong catch {
-      case _: NumberFormatException =>
-        System.err.println(
-          s"[bench] SPARK_GRAFT_GC_SETTLE_MS='$raw' is not a number; " +
-            "using default 100 ms")
-        100L
-    }
-  }
+  /** Pre-clock pause after each System.gc() — see the note in `run`. */
+  private val GcSettleMs = 100L
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val timedRuns = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // pinned like every other main: the NTZ->LTZ relabel in Tables is only
-      // wall-clock-preserving under UTC; a direct `sbt run` on a non-UTC
-      // host would otherwise shift event timestamps (ADVICE r8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // SPARK_GRAFT_BENCH_ONLY=q1,q2 restricts to named queries — focused A/B
+    // timing runs that print one [time] line per face
+    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").map(_.trim).toSeq)
+    val ordered = SparkEntry.selectFaces(only).fold(
+      e => { System.err.println(s"[bench] $e"); sys.exit(2) }, identity)
+    val spark = SparkEntry.localSession()
     // faces that threw in any pass: they get no time sample and stay out
     // of every median and the total
     val failed = scala.collection.mutable.Set.empty[String]
@@ -44,13 +26,10 @@ object Bench {
       // pauses to whatever small query runs next — r03 medians showed a
       // 1.2 s query at 22.7 s purely from sweep interference. Skipped on
       // the (untimed) warmup pass: ~80 extra gc calls buy nothing there.
-      // The post-gc SETTLE (r16, the harness audit's lever): System.gc()
-      // returns while G1's concurrent phases are still running, and at the
-      // driver-matched 89 GB heap those phases landed inside the next
-      // query's clock often enough to need 16 solo adjudications in the
-      // r15 sweep (vs 1 at HEAP=20). A fixed pre-clock pause lets the
-      // concurrent cycle drain on idle cores — untimed, ~54 s of wall
-      // across a 180-query 3-run sweep.
+      // The post-gc settle: System.gc() returns while G1's concurrent
+      // phases are still running, and on a large heap those phases landed
+      // inside the next query's clock. A fixed pre-clock pause lets the
+      // concurrent cycle drain on idle cores, untimed.
       if (gc) { System.gc(); Thread.sleep(GcSettleMs) }
       val t0 = System.nanoTime()
       val ok =
@@ -71,33 +50,15 @@ object Bench {
     }
     // One warmup pass (pays JIT + the cross-query fitted-model cache), then
     // `timedRuns` timed passes; report the per-query MEDIAN — single-pass
-    // times on local[32] swing several× on sub-5 s queries run-to-run.
+    // times swing several× on sub-5 s queries run-to-run.
     // Each timed pass runs in a DIFFERENT seeded-shuffle order (seed = run
     // index — deterministic across invocations, different neighbors within
-    // one record): with a FIXED order, a heavy query's residual state (GC
+    // one run): with a FIXED order, a heavy query's residual state (GC
     // debt, page cache, JIT deopt) lands on the same successor in every
-    // pass, so that successor's MEDIAN inherits the placement artifact —
-    // three consecutive rounds (r10–r12) shipped a headline number a judge
-    // had to hand-adjudicate with solo runs. Shuffled passes make a
-    // median-of-3 placement artifact require the same neighbor twice by
-    // chance, and the solo re-adjudication below catches what slips past.
-    // SPARK_GRAFT_BENCH_ONLY=q1,q2 restricts to named queries — focused A/B
-    // timing runs; the full sweep (and its committed record) never sets it
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
-    // A typo'd name would otherwise be silently dropped — a fully-misspelled
-    // list runs zero queries and prints an empty (but valid-looking) result
-    only.foreach { names =>
-      val unknown = names -- SparkEntry.queries.keySet
-      if (unknown.nonEmpty) {
-        System.err.println(
-          s"[bench] unknown SPARK_GRAFT_BENCH_ONLY entries: ${unknown.toSeq.sorted.mkString(", ")}")
-        sys.exit(2)
-      }
-    }
-    val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-    // the warm-up pass IS the cold point for registry-backed faces (first
+    // pass, so that successor's MEDIAN inherits the placement artifact.
+    // Shuffled passes make a median-of-3 placement artifact require the
+    // same neighbor twice by chance.
+    // The warm-up pass IS the cold point for registry-backed faces (first
     // call pays the deterministic fit; later calls hit the registry)
     val cold = ordered.flatMap { case (name, fn) =>
       run(name, fn, gc = false).map(name -> _)
@@ -110,149 +71,20 @@ object Bench {
       val s = xs.sorted
       if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2.0
     }
-    val sweep = ordered.filterNot { case (name, _) => failed(name) }
+    val results = ordered.filterNot { case (name, _) => failed(name) }
       .map { case (name, _) => name -> median(samples.map(_(name))) }.toMap
-    // Solo re-adjudication — the record adjudicates ITSELF instead of a
-    // judge re-running suspects by hand: any query whose sweep median
-    // exceeds its previous committed record by >1.5× (or, with no prior,
-    // whose own sweep spread spans >1.5× with a >2 s median) re-runs
-    // SOLO — fresh warmup + 3 timed runs with nothing before it — and the
-    // record carries BOTH numbers. A sweep/solo gap means placement
-    // artifact (the plan is fine); solo ≈ sweep means a real regression.
-    val prevFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_PREV", "BENCH_SELF.json")
-    val prev: Map[String, Double] =
-      try {
-        val txt = new String(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get(prevFile)), "UTF-8")
-        val qBlock = txt.split("\"queries\"", 2).lift(1)
-          .flatMap(_.split("\\}", 2).headOption).getOrElse("")
-        "\"([A-Za-z0-9_]+)\"\\s*:\\s*([0-9.Ee+-]+)".r.findAllMatchIn(qBlock)
-          .map(m => m.group(1) -> m.group(2).toDouble).toMap
-      } catch { case _: Exception => Map.empty }
-    val suspects = ordered.collect {
-      case (name, fn)
-        if sweep.contains(name) && {
-          val m = sweep(name)
-          val runs = samples.map(_(name))
-          prev.get(name).exists(p => m > 1.5 * p && m > 1.0) ||
-            (prev.isEmpty && m > 2.0 && m > 1.5 * runs.min)
-        } => (name, fn)
-    }
-    val solo = suspects.flatMap { case (name, fn) =>
-      run(name, fn, gc = false) // solo warmup (cache refill after scoped release)
-      val xs = (1 to timedRuns).flatMap(_ => run(name, fn))
-      if (failed(name)) None else Some(name -> median(xs))
-    }.toMap
-    val results = sweep -- failed
-    if (solo.nonEmpty)
-      System.err.println(s"[bench] solo re-adjudicated: " + solo.toSeq.sorted
-        .map { case (n, s) => f"$n sweep=${results(n)}%.2f solo=$s%.2f" }
-        .mkString("; "))
     if (only.nonEmpty) results.toSeq.sortBy(_._1).foreach { case (q, med) =>
       val ts = samples.map(_(q)).sorted
       System.err.println(f"[time] $q: cold ${cold(q)}%.2f s, median $med%.2f s " +
         s"(runs ${ts.map(t => f"$t%.2f").mkString(", ")})")
     }
-    // per-query spread across the timed runs: with single-number medians a
-    // real 2x regression in a heavy query is indistinguishable from
-    // environment noise (topic_cv swung 2.3 -> 9.8 -> 4.0 s across rounds
-    // with zero code changes); min/median/max makes the noise band visible
-    val spread = results.keys.toSeq.map { name =>
-      val xs = samples.map(_(name)).sorted
-      name -> (xs.head, median(xs), xs.last)
-    }
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val total = if (results.nonEmpty) results.values.sum else 0.0
     println(s"""{"metric":"total","value":$total,"unit":"sec","runs":$timedRuns,"queries":$qs,"sf":"$sfDir"}""")
-    // Complete per-query record, committed each round: the driver captures
-    // only the stdout tail, which truncates past ~64 queries ("parsed":null
-    // in BENCH_r05.json lost 23 timings) — this file is the full account.
-    // default is cwd-relative so any checkout location works; the env var
-    // overrides for out-of-tree runs
-    val selfFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_SELF.json")
-    val slowest = results.toSeq.sortBy(-_._2).headOption
-    val sortedQs = results.toSeq.sortBy(_._1)
-      .map { case (k, v) => s"""  "$k": $v""" }.mkString("{\n", ",\n", "\n}")
-    // environment fingerprint: numbers from different environments are NOT
-    // comparable (the r7/r8 records disagreed ~18% across the board purely
-    // from where they ran) — record where THIS one came from
-    def r1(x: Double) = math.round(x * 1000) / 1000.0
-    // HOST-SPEED probe (r18): the static fingerprint (cpus/heap/jvm) is
-    // identical across a VM whose underlying host got slower — the r18
-    // fence measured untouched faces 25-35% above their r17 bands on an
-    // idle machine with a byte-identical static env. One fixed-work
-    // single-thread loop, run after the sweep (untimed territory), makes
-    // that drift adjudicable from the committed record: compare
-    // cpu_probe_ms across rounds before comparing face medians.
-    val cpuProbeMs = {
-      val t0 = System.nanoTime()
-      var x = 0x9E3779B97F4A7C15L
-      var i = 0
-      while (i < 200000000) {
-        x = x * 6364136223846793005L + 1442695040888963407L
-        x ^= x >>> 33
-        i += 1
-      }
-      if (x == 42L) System.err.print("") // defeat dead-code elimination
-      math.round((System.nanoTime() - t0) / 1e6)
-    }
-    val env =
-      s"""{"host_cpus": ${Runtime.getRuntime.availableProcessors},
-         | "spark_master": "local[$cpus]",
-         | "cpu_probe_ms": $cpuProbeMs,
-         | "gc_settle_ms": $GcSettleMs,
-         | "heap_gb": ${r1(Runtime.getRuntime.maxMemory / 1073741824.0)},
-         | "jvm": "${System.getProperty("java.version")}",
-         | "spark": "${spark.version}",
-         | "os": "${System.getProperty("os.name")} ${System.getProperty("os.version")}"}"""
-        .stripMargin.replace("\n", "")
-    val spreadQs = spread.sortBy(_._1)
-      .map { case (k, (mn, md, mx)) => s"""  "$k": [${r1(mn)}, ${r1(md)}, ${r1(mx)}]""" }
-      .mkString("{\n", ",\n", "\n}")
-    // HEAD fingerprint: tools/bench_bands.py refuses to fence boards from
-    // different commits (a cross-HEAD merge would record a "noise band"
-    // that silently includes real code deltas — ADVICE r17)
-    val headCommit =
-      try scala.sys.process.Process(Seq("git", "rev-parse", "HEAD")).!!.trim
-      catch { case _: Exception => "unknown" }
-    // committed per-registry account (VERDICT r17 #6): the cap-thrash
-    // adjudicator must live in the record, not in stderr-log survival
-    val regStats = Caching.registryStatsSnapshot()
-      .map { case (n, h, m, e) =>
-        s"""  "$n": {"hits": $h, "misses": $m, "evictions": $e}""" }
-      .mkString("{\n", ",\n", "\n}")
-    val soloQs = solo.toSeq.sortBy(_._1)
-      .map { case (k, s) =>
-        s"""  "$k": {"sweep": ${r1(results(k))}, "solo": ${r1(s)}}""" }
-      .mkString("{\n", ",\n", "\n}")
-    val failedJson = failed.toSeq.sorted.map(n => "\"" + n + "\"").mkString("[", ", ", "]")
-    val self =
-      s"""{
-         |"sf": "$sfDir",
-         |"runs": $timedRuns,
-         |"order": "seeded shuffle per timed run (seed = run index); medians cannot inherit a fixed neighbor",
-         |"head_commit": "$headCommit",
-         |"env": $env,
-         |"registry_stats": $regStats,
-         |"n_queries": ${results.size},
-         |"failed": $failedJson,
-         |"total_sec": $total,
-         |"slowest": {"query": "${slowest.fold("")(_._1)}", "sec": ${slowest.fold(0.0)(_._2)}},
-         |"solo_adjudicated": $soloQs,
-         |"queries": $sortedQs,
-         |"spread_min_median_max": $spreadQs
-         |}""".stripMargin
-    // a filtered A/B run must not clobber the committed full record
-    if (only.isEmpty)
-      try java.nio.file.Files.writeString(java.nio.file.Paths.get(selfFile), self)
-      catch { case e: Exception =>
-        System.err.println(s"[bench] could not write $selfFile: ${e.getMessage}")
-      }
-    // per-registry hit/miss/eviction account for the sweep (VERDICT r16 #3:
-    // "did the LRU evict a hot entry mid-sweep" adjudicates from this line,
-    // not from re-running) — evictions > 0 on a registry a slow face rides
-    // means cap thrash; 0 means the face's cost is its own work
+    // per-registry hit/miss/eviction account for the sweep: evictions > 0
+    // on a registry a slow face rides means cap thrash; 0 means the face's
+    // cost is its own work
     System.err.println("[bench] registry stats:\n" + Caching.registryStatsReport())
     if (failed.nonEmpty)
       System.err.println(s"[bench] failed: ${failed.toSeq.sorted.mkString(", ")}")

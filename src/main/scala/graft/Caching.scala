@@ -387,10 +387,9 @@ object Caching {
   /** Release every registry's values — the one harness teardown. */
   def clearAll(): Unit = registries.forEach(_.clear())
 
-  /** Structured per-registry counters, sorted by name — the committed-
-    * record surface (Bench embeds this in BENCH_SELF as `registry_stats`,
-    * VERDICT r17 #6: adjudicating "did a cap thrash" must not depend on
-    * stderr-log survival).
+  /** Structured per-registry counters (name, hits, misses, evictions),
+    * sorted by name: the form a harness diffs around a timed window
+    * (perfbench's `caching.*` layer metrics are such deltas).
     */
   def registryStatsSnapshot(): Seq[(String, Long, Long, Long)] =
     allRegistries.map(_.stats).sortBy(_._1)

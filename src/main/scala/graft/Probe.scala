@@ -1,33 +1,25 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
 
 /** Plan-inspection main: dumps the formatted physical plan of every
-  * SparkEntry query (or the ones named as args after the fixture dir).
+  * SparkEntry query (or the ones named as args after the fixture and
+  * output dirs; an unknown name exits 2).
   * The review artifact for pushdown / broadcast / codegen checks:
   *
-  *   MAIN=graft.Probe tools/run_verify.sh /root/testdata/sf0.01 > plans.txt
+  *   MAIN=graft.Probe tools/run_verify.sh <sfDir> <outDir> [face...] > plans.txt
   */
 object Probe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    // tools/run_verify.sh always passes an outDir second arg — only treat
-    // args that actually name queries as a selection
-    val selected = args.drop(1).filter(SparkEntry.queries.contains).toSeq
-    val names =
-      if (selected.nonEmpty) selected else SparkEntry.queries.keys.toSeq.sorted
-    names.foreach { q =>
+    // args(1) is the outDir tools/run_verify.sh always passes (unused
+    // here); any further args name the faces to plan
+    val faces = SparkEntry.selectFaces(Some(args.drop(2).toSeq).filter(_.nonEmpty)).fold(
+      e => { System.err.println(s"[probe] $e"); sys.exit(2) }, identity)
+    val spark = SparkEntry.localSession("ERROR")
+    faces.foreach { case (q, fn) =>
       println(s"===== $q =====")
-      try println(SparkEntry.queries(q)(spark, dir)
-        .queryExecution.explainString(FormattedMode))
+      try println(fn(spark, dir).queryExecution.explainString(FormattedMode))
       catch { case e: Throwable => println(s"(failed to plan: ${e.getMessage})") }
     }
     spark.stop()

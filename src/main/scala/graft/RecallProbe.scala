@@ -19,13 +19,7 @@ import graft.operators.SimilarityOps
   */
 object RecallProbe {
   def main(args: Array[String]): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = SparkEntry.localSession("ERROR")
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val nQ = args.drop(1).headOption.map(_.toInt).getOrElse(50)
 

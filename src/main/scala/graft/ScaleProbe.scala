@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
 
 /** Scale-up probe: replicates the documents/embeddings fixtures N× (with
@@ -16,14 +16,9 @@ object ScaleProbe {
     // SPARK_GRAFT_SCALE_PARTITIONS overrides the shuffle width for
     // partition-sizing A/Bs (the |Q|-sweep's reduce side at q2048 holds
     // ~100M groups — 32 partitions under-provision it; see DEPLOY)
-    val parts = sys.env.getOrElse("SPARK_GRAFT_SCALE_PARTITIONS", "32")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", parts)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = SparkEntry.localSession("ERROR")
+    sys.env.get("SPARK_GRAFT_SCALE_PARTITIONS")
+      .foreach(spark.conf.set("spark.sql.shuffle.partitions", _))
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val factor = args.drop(1).headOption.map(_.toInt).getOrElse(10)
     val tmp = java.nio.file.Files.createTempDirectory("graft-scale").toString

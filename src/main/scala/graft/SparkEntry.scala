@@ -18,6 +18,25 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     WordFreqOps.topWordsQuery(spark, "/root/testdata/sf0.001")
 
+  /** The local session every main runs on. `SPARK_GRAFT_CPUS` sets the
+    * cores (default: every available processor) and shuffle partitions
+    * equal them; `SPARK_GRAFT_MASTER` overrides the `local[cores]` master.
+    * The session time zone is pinned to UTC: the NTZ→LTZ relabel in
+    * `Tables` preserves wall-clock time only under UTC.
+    */
+  def localSession(logLevel: String = "WARN"): SparkSession = {
+    val cores = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
+    val spark = SparkSession.builder()
+      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cores]"))
+      .config("spark.sql.shuffle.partitions", cores)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel(logLevel)
+    spark
+  }
+
   // Shared SQL fragments, kept in one place so Spark + oracle stay in sync.
   /** DuckDB rendering of TextFunctions.normalized. */
   private val NORM =
@@ -747,6 +766,22 @@ object SparkEntry {
   private def bandRowsSql(bands: Int): String =
     s"""SELECT vec_id, j AS band, bands[CAST(j + 1 AS INT)] AS band_val
        |  FROM sk, range(0, $bands) t(j)""".stripMargin
+
+  /** The faces a run covers, sorted by name: every `queries` entry when
+    * `only` is None, else the named ones. Any name that is not a face is
+    * an error that names it and lists the faces, so a misspelled list
+    * cannot run (and pass) with zero faces.
+    */
+  def selectFaces(only: Option[Iterable[String]])
+      : Either[String, Seq[(String, (SparkSession, String) => DataFrame)]] = {
+    val all = queries
+    val named = only.map(_.toSet)
+    val unknown = named.fold(Seq.empty[String])(n => (n -- all.keySet).toSeq.sorted)
+    if (unknown.nonEmpty)
+      Left(s"unknown face name(s): ${unknown.mkString(", ")}; faces are: " +
+        all.keys.toSeq.sorted.mkString(", "))
+    else Right(all.toSeq.filter(q => named.forall(_(q._1))).sortBy(_._1))
+  }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // --- relational suite (SURVEY.md §2.2–2.7) ---

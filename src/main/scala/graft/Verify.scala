@@ -1,19 +1,16 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // SPARK_GRAFT_QUERIES=a,b,c restricts the dump (and the oracle JSON) to
+    // the named queries — focused local re-checks don't pay the full sweep.
+    val faces = SparkEntry.selectFaces(
+      sys.env.get("SPARK_GRAFT_QUERIES").map(_.split(",").map(_.trim).toSeq)
+    ).fold(e => { System.err.println(s"[verify] $e"); sys.exit(2) }, identity)
+    val spark = SparkEntry.localSession()
     new java.io.File(outDir).mkdirs()
     // Model-artifact exports land in a SIBLING of outDir (the driver
     // enumerates outDir's children as query outputs, so nothing extra may
@@ -23,11 +20,6 @@ object Verify {
     Artifacts.enable(
       new java.io.File(s"${outDir.stripSuffix("/")}_artifacts")
         .getAbsolutePath)
-    // SPARK_GRAFT_QUERIES=a,b,c restricts the dump (and the oracle JSON) to
-    // the named queries — focused local re-checks don't pay the full sweep.
-    val only = sys.env.get("SPARK_GRAFT_QUERIES")
-      .map(_.split(",").map(_.trim).toSet)
-    def selected(name: String): Boolean = only.forall(_.contains(name))
     // storage-watermark sampler: peak of the block manager's cached bytes
     // (RDD + SQL cache blocks), polled at 200 ms — the registry-ceiling
     // evidence the r15 VERDICT asked to record
@@ -57,7 +49,7 @@ object Verify {
     }, "graft-storage-watermark")
     sampler.setDaemon(true)
     sampler.start()
-    val failed = SparkEntry.queries.toSeq.filter(q => selected(q._1)).flatMap {
+    val failed = faces.flatMap {
       case (name, fn) =>
         try {
           Caching.scoped {
@@ -84,6 +76,7 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
+    val selected = faces.map(_._1).toSet
     val json = SparkEntry.oracleSql.filter(o => selected(o._1))
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)

@@ -138,14 +138,7 @@ object AnalysisMain {
       .map(c => () => c.readLine())
     val k = resolveTopics(opts.get("topics").map(_.toInt), console)
 
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[*]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.SparkEntry.localSession()
     try run(spark, data, column, out, k, maxIter, format)
     finally spark.stop()
   }

@@ -96,14 +96,7 @@ object FullAnalysisMain {
       Some(opts.get("topics").map(_.toInt).getOrElse(DefaultTopics)),
       Option(System.console()).map(c => () => c.readLine()))
 
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[*]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.SparkEntry.localSession()
     try run(spark, data, column, out, topics, maxIter, format)
     finally spark.stop()
   }

@@ -55,14 +55,7 @@ object PreprocessMain {
     val opts = AnalysisMain.parseArgs(args)
     val data = opts.getOrElse("data",
       throw new IllegalArgumentException(s"--data is required\n$Usage"))
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[*]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.SparkEntry.localSession()
     try run(spark, data,
       opts.getOrElse("schema", "crawl"),
       opts.get("stopwords"),

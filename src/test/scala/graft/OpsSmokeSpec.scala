@@ -22,9 +22,23 @@ class OpsSmokeSpec extends SparkSuite {
     }
   }
 
-  test("every oracleSql key has a queries entry") {
-    val missing = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(missing.isEmpty, s"oracleSql without queries: $missing")
+  test("oracleSql and queries name the same faces (every face has a DuckDB oracle)") {
+    val (oracles, faces) = (SparkEntry.oracleSql.keySet, SparkEntry.queries.keySet)
+    assert((oracles -- faces).isEmpty, s"oracleSql without queries: ${oracles -- faces}")
+    assert((faces -- oracles).isEmpty, s"queries without oracleSql: ${faces -- oracles}")
+  }
+
+  test("selectFaces: a face list with one unknown name fails and names it") {
+    val err = SparkEntry.selectFaces(Some(Seq("txt_word_topn", "txt_wrod_topn")))
+    assert(err.isLeft)
+    err.left.foreach { msg =>
+      assert(msg.contains("unknown face name(s): txt_wrod_topn;"), msg)
+      assert(msg.contains("txt_word_topn"), msg) // the known faces are listed
+    }
+    val one = SparkEntry.selectFaces(Some(Seq("txt_word_topn"))).map(_.map(_._1))
+    assert(one == Right(Seq("txt_word_topn")))
+    val all = SparkEntry.selectFaces(None).map(_.map(_._1))
+    assert(all == Right(SparkEntry.queries.keys.toSeq.sorted))
   }
 
   test("entry() flagship matches the txt_word_topn query") {

@@ -4,7 +4,7 @@
 Reads the parquet dumps written by `graft.Verify <sfDir> <outDir>` plus
 `<outDir>/oracle_sql.json`, runs each oracle SQL in DuckDB over the same
 fixture tables, and compares (column names, dtypes, row count, sorted
-values). Exit code 1 if any query mismatches.
+values). Exit code 1 if any query mismatches or the oracle set is empty.
 
 Usage: tools/check_oracle.py [sfDir] [outDir]
 """
@@ -50,6 +50,10 @@ def main() -> int:
 
     with open(f"{out_dir}/oracle_sql.json") as f:
         oracles = json.load(f)
+    if not oracles:
+        # an empty set checks nothing: a run that dumped no face must not pass
+        print(f"FAIL: {out_dir}/oracle_sql.json holds no oracle queries")
+        return 1
 
     failures = []
     for name, sql in sorted(oracles.items()):

@@ -1,7 +1,7 @@
 #!/bin/bash
 # Run graft.Verify (or another main) directly with java — no sbt startup cost.
 # Usage: tools/run_verify.sh [sfDir] [outDir]
-# Env: MAIN=graft.Verify CPUS=8
+# Env: MAIN=graft.Verify SPARK_GRAFT_CPUS=8 HEAP=8
 set -e
 cd "$(dirname "$0")/.."
 SF=${1:-/root/testdata/sf0.01}
