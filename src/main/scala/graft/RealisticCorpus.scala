@@ -274,10 +274,11 @@ object RealisticCorpus {
     * the whole cost — every downstream face then runs the stock operators
     * against a normal corpus directory.
     */
-  def ensure(spark: SparkSession, dir: String): String =
-    materialized.get(Fingerprint.dirKey(spark, dir)) {
-      val key = math.abs(Fingerprint.listingHash(spark, dir))
-      val out = s"${sys.props("java.io.tmpdir")}/graft_realistic_v$Version/$key"
+  def ensure(spark: SparkSession, dir: String): String = {
+    // one listing serves both the registry key and the twin's path
+    val hash = Fingerprint.listingHash(spark, dir)
+    materialized.get(Fingerprint.dirKey(dir, hash)) {
+      val out = s"${sys.props("java.io.tmpdir")}/graft_realistic_v$Version/${math.abs(hash)}"
       val marker = new java.io.File(s"$out/documents.parquet/_SUCCESS")
       if (!marker.isFile) {
         transform(Tables.documents(spark, dir))
@@ -306,4 +307,5 @@ object RealisticCorpus {
       }
       out
     }
+  }
 }

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.GraftBridge
 import org.apache.spark.sql.types._
 
 /** Parquet table loaders over a driver fixture dir (`/root/testdata/sf*`).
@@ -103,10 +104,29 @@ object Tables {
     // read as raw longs; set it for every table so a NANOS regen of any
     // fixture reaches the contract (which then adapts) instead of crashing.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val path = s"$dir/$name.parquet"
-    val raw = spark.read.parquet(path)
-    Expected.get(name).fold(raw)(conform(raw, name, path, _))
+    relations.get(
+        s"${GraftBridge.sessionId(spark)}|${Fingerprint.dirKey(spark, dir)}|$name") {
+      val path = s"$dir/$name.parquet"
+      val raw = spark.read.parquet(path)
+      Expected.get(name).fold(raw)(conform(raw, name, path, _))
+    }
   }
+
+  /** Entries of `relations`: every table of several corpus versions (the
+    * fixture, its realistic twin and a few spec or bench versions) at
+    * about ten tables each.
+    */
+  private val RelationsMaxEntries = 64
+
+  /** The conformed (unpersisted) relation per (session, corpus version,
+    * table). A warm face reuses its file index and resolved schema instead
+    * of re-listing the table, re-reading a footer and running a
+    * schema-inference job on every load. The key's `Fingerprint.dirKey`
+    * moves on any in-place rewrite of the directory, so the next load reads
+    * the new files; a contract failure throws and is not cached.
+    */
+  private val relations =
+    Caching.Registry[DataFrame]("tables.relations", RelationsMaxEntries)
 
   /** Validate `df` against the table contract; adapt timestamp layouts,
     * fail loudly (naming the columns) on anything else.

@@ -22,4 +22,10 @@ object GraftBridge {
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sessionState.functionRegistry.registerFunction(
         org.apache.spark.sql.catalyst.FunctionIdentifier(name), info, builder)
+
+  /** The session's own id (`sessionUUID`): a registry key part for values
+    * bound to one session, such as a resolved DataFrame.
+    */
+  def sessionId(spark: org.apache.spark.sql.SparkSession): String =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionUUID
 }

@@ -41,6 +41,57 @@ class FingerprintSpec extends SparkSuite {
     }
   }
 
+  /** The hash as the recursive `fs.listFiles` walk computes it: the same
+    * seed-7 base-31 fold over the sorted (path, len, mtime) triples.
+    */
+  private def listFilesHash(dir: String): Long = {
+    val P = 1000000007L
+    val path = new org.apache.hadoop.fs.Path(dir)
+    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val entries = scala.collection.mutable.ArrayBuffer.empty[(String, Long, Long)]
+    if (fs.exists(path)) {
+      val it = fs.listFiles(path, true)
+      while (it.hasNext) {
+        val st = it.next()
+        entries += ((st.getPath.toString, st.getLen, st.getModificationTime))
+      }
+    }
+    entries.sortBy(_._1).foldLeft(7L) { case (h, (p, len, mtime)) =>
+      val hp = p.foldLeft(h)((a, c) => (a * 31 + c) % P)
+      ((hp * 31 + len % P) % P * 31 + mtime % P) % P
+    }
+  }
+
+  test("listingHash equals the recursive listFiles fold: nested tree, " +
+    "single file, missing path") {
+    import java.nio.file.{Files, Path}
+    val root = Files.createTempDirectory("fp_parity")
+    def put(rel: String, body: String): Path = {
+      val f = root.resolve(rel)
+      Files.createDirectories(f.getParent)
+      Files.write(f, body.getBytes)
+    }
+    try {
+      put("documents.parquet/part-00000.parquet", "aaaa")
+      put("documents.parquet/.part-00000.parquet.crc", "cc")
+      put("documents.parquet/_SUCCESS", "")
+      put("documents.parquet/._SUCCESS.crc", "c")
+      put("events.parquet/sub/part-00001.parquet", "bbbbbb")
+      put("events.parquet/sub/part-00002.parquet", "b")
+      Files.createDirectories(root.resolve("empty.parquet/nothing"))
+      val single = put("loose.parquet", "dd").toString
+      val missing = root.resolve("absent").toString
+      for (p <- Seq(root.toString, s"$root/documents.parquet", single, missing))
+        assert(Fingerprint.listingHash(spark, p) === listFilesHash(p), p)
+      assert(Fingerprint.listingHash(spark, missing) === 7L)
+      assert(Fingerprint.listingHash(spark, single) !== 7L)
+      assert(Fingerprint.dirKey(spark, SparkSpec.FixtureDir) ===
+        s"${SparkSpec.FixtureDir}@${listFilesHash(SparkSpec.FixtureDir)}")
+    } finally {
+      org.apache.commons.io.FileUtils.deleteDirectory(root.toFile)
+    }
+  }
+
   test("the r14 registries (LM scores, media corpus) re-derive on an " +
     "in-place corpus rewrite") {
     import graft.operators.LmOps

@@ -177,6 +177,75 @@ class TablesSpec extends SparkSuite {
     assert(r.columns.toSeq == Seq("r_regionkey", "r_name", "r_extra"))
   }
 
+  // ---- tables.relations: one resolved relation per (session, version, table)
+
+  /** (hits, misses) of the `tables.relations` registry. */
+  private def relationStats(): (Long, Long) =
+    Caching.registryStatsSnapshot().collectFirst {
+      case ("tables.relations", h, m, _) => (h, m)
+    }.getOrElse(fail("tables.relations is not registered"))
+
+  private def writeDocs(dir: String, ids: Seq[Long]): Unit = {
+    import spark.implicits._
+    ids.map(i => (i, s"text $i", "en", "spec", 6L))
+      .toDF("doc_id", "text", "lang", "source", "n_chars")
+      .coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")
+  }
+
+  private def docIds(dir: String): Seq[Long] =
+    Tables.documents(spark, dir).select("doc_id").collect().map(_.getLong(0))
+      .toSeq.sorted
+
+  test("relations: an unchanged directory serves its second load from the registry") {
+    val dir = tempDir()
+    writeDocs(dir, Seq(1L, 2L))
+    val (h0, m0) = relationStats()
+    val first = Tables.documents(spark, dir)
+    val (h1, m1) = relationStats()
+    val second = Tables.documents(spark, dir)
+    val (h2, m2) = relationStats()
+    assert((h1 - h0, m1 - m0) === ((0L, 1L)))
+    assert((h2 - h1, m2 - m1) === ((1L, 0L)))
+    assert(second eq first)
+  }
+
+  test("relations: a table rewritten in place loads its new rows") {
+    val dir = tempDir()
+    writeDocs(dir, Seq(1L, 2L, 3L))
+    assert(docIds(dir) === Seq(1L, 2L, 3L))
+    writeDocs(dir, Seq(7L, 8L))
+    assert(docIds(dir) === Seq(7L, 8L))
+  }
+
+  test("relations: a drifted layout fails, is not cached, and loads once rewritten") {
+    import spark.implicits._
+    val dir = tempDir()
+    Seq((1L, "text", "en", "web", "not-a-number"))
+      .toDF("doc_id", "text", "lang", "source", "n_chars")
+      .write.parquet(s"$dir/documents.parquet")
+    val e = intercept[IllegalArgumentException] { Tables.documents(spark, dir) }
+    assert(e.getMessage.contains("'n_chars'"))
+    // the failed build is not cached: the same version fails again
+    intercept[IllegalArgumentException] { Tables.documents(spark, dir) }
+    writeDocs(dir, Seq(4L, 5L))
+    assert(docIds(dir) === Seq(4L, 5L))
+  }
+
+  test("relations: a non-UTC session is refused on an already-warm key") {
+    val dir = tempDir()
+    writeDocs(dir, Seq(1L))
+    Tables.documents(spark, dir)
+    val (h0, m0) = relationStats()
+    val before = spark.conf.get("spark.sql.session.timeZone")
+    try {
+      spark.conf.set("spark.sql.session.timeZone", "Asia/Seoul")
+      val e = intercept[IllegalStateException] { Tables.documents(spark, dir) }
+      assert(e.getMessage.contains("Asia/Seoul"))
+    } finally spark.conf.set("spark.sql.session.timeZone", before)
+    assert(relationStats() === ((h0, m0)))
+    assert(docIds(dir) === Seq(1L))
+  }
+
   // ---- live driver fixture: pin every table's post-load layout, so the
   //      NEXT regen of any fixture either adapts or fails THESE tests loudly
   //      instead of silently zeroing a slice of the correctness board.

@@ -7,7 +7,22 @@ cd "$(dirname "$0")/.."
 SF=${1:-/root/testdata/sf0.01}
 OUT=${2:-/tmp/verify_out}
 MAIN=${MAIN:-graft.Verify}
-CP="target/scala-2.13/classes:$(ls /opt/spark/jars/*.jar | tr '\n' ':')"
+CLASSES=target/scala-2.13/classes
+# Never time or check stale classes: refuse when a src/main file is newer
+# than everything under the classes directory. A source touched without a
+# content change compiles to nothing; `touch $CLASSES` then marks the
+# classes current.
+if [ ! -d "$CLASSES" ]; then
+  echo "no compiled classes at $CLASSES: run 'sbt compile' first" >&2
+  exit 2
+fi
+NEWEST=$(find "$CLASSES" -printf '%T@ %p\n' | sort -n | tail -1 | cut -d' ' -f2-)
+STALE=$(find src/main -type f -newer "$NEWEST" -print -quit)
+if [ -n "$STALE" ]; then
+  echo "$STALE is newer than the classes in $CLASSES: run 'sbt compile' first" >&2
+  exit 2
+fi
+CP="$CLASSES:$(ls /opt/spark/jars/*.jar | tr '\n' ':')"
 OPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio \
          java.util java.util.concurrent java.util.concurrent.atomic; do
