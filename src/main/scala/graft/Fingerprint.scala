@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
 /** Content key for the deterministic-fit registries (TopicModelOps, PqOps,
