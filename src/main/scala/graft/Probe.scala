@@ -4,7 +4,8 @@ import org.apache.spark.sql.execution.FormattedMode
 
 /** Plan-inspection main: dumps the formatted physical plan of every
   * SparkEntry query (or the ones named as args after the fixture and
-  * output dirs; an unknown name exits 2).
+  * output dirs; an unknown name exits 2). A face that fails to plan is
+  * listed on stderr and the run exits 1.
   * The review artifact for pushdown / broadcast / codegen checks:
   *
   *   MAIN=graft.Probe tools/run_verify.sh <sfDir> <outDir> [face...] > plans.txt
@@ -17,11 +18,18 @@ object Probe {
     val faces = SparkEntry.selectFaces(Some(args.drop(2).toSeq).filter(_.nonEmpty)).fold(
       e => { System.err.println(s"[probe] $e"); sys.exit(2) }, identity)
     val spark = SparkEntry.localSession("ERROR")
-    faces.foreach { case (q, fn) =>
+    val failed = faces.flatMap { case (q, fn) =>
       println(s"===== $q =====")
-      try println(fn(spark, dir).queryExecution.explainString(FormattedMode))
-      catch { case e: Throwable => println(s"(failed to plan: ${e.getMessage})") }
+      try { println(fn(spark, dir).queryExecution.explainString(FormattedMode)); None }
+      catch { case scala.util.control.NonFatal(e) =>
+        println(s"(failed to plan: ${e.getMessage})")
+        Some(q)
+      }
     }
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[probe] failed: ${failed.mkString(", ")}")
+      sys.exit(1)
+    }
   }
 }

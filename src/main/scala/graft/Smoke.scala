@@ -1,6 +1,6 @@
 package graft
 
-/** Minimal smoke main mirroring the driver's t1 check: entry() rows > 0. */
+/** Minimal smoke main: entry() rows > 0, else it exits 1. */
 object Smoke {
   def main(args: Array[String]): Unit = {
     val spark = SparkEntry.localSession()
@@ -9,5 +9,6 @@ object Smoke {
     df.show(5, truncate = false)
     println(s"[smoke] entry rows = $n (${if (n > 0) "PASS" else "FAIL"})")
     spark.stop()
+    if (n == 0) sys.exit(1)
   }
 }

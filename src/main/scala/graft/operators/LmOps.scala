@@ -126,20 +126,7 @@ object LmOps {
     * per token transition) — the shape a perplexity cut is chosen from.
     * Output bounded by langs × bands regardless of corpus size.
     */
-  def nllBandsQuery(spark: SparkSession, dir: String): DataFrame =
-    nllBandsQuery(spark, dir, broadcastModel = false)
-
-  /** `broadcastModel = true` hash-joins the scoring side against a
-    * broadcast of the vocabulary-bounded logp table instead of the
-    * sort-merge join — removes the (lang, w1, w2) exchange AND sort of the
-    * doc×distinct-bigram instance frame (the n·log n term the r11 slope
-    * measured at 3.3). The trade: the model materializes through the
-    * driver, so it pays when the model fits the broadcast budget — which
-    * a vocabulary-bounded model does by construction. Output-identical;
-    * the ScaleProbe A/B records which side wins at which scale.
-    */
-  def nllBandsQuery(spark: SparkSession, dir: String,
-                    broadcastModel: Boolean): DataFrame = {
+  def nllBandsQuery(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
     // self-scoring: ONE per-doc instance frame feeds BOTH the training
     // counts (re-aggregated, map-side combined) and the scoring join. The
@@ -156,9 +143,10 @@ object LmOps {
     // self-scoring: every scored bigram is in the trained table, so the
     // generic left-join + backoff split (scoreInstances) degenerates to an
     // inner join — stating it as one keeps the two inst consumers'
-    // subtrees identical, so the exchange materializes once (ReuseExchange)
-    inst.join(if (broadcastModel) broadcast(model.logp) else model.logp,
-        Seq("lang", "w1", "w2"))
+    // subtrees identical, so the exchange materializes once (ReuseExchange).
+    // No broadcast hint: a broadcast logp table lost 65.3 vs 37.0 s on a
+    // 30× replica (DEPLOY "lm_nll broadcast A/B").
+    inst.join(model.logp, Seq("lang", "w1", "w2"))
       .groupBy(col("doc_id"), col("lang"))
       // 6-dp pre-round before the band floor and the avg — the same
       // summation-order guard nbClassify uses: cross-engine float sums can

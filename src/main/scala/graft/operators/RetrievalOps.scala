@@ -258,19 +258,6 @@ object RetrievalOps {
       .select(col("word"), col("doc_id"), col("contrib"))
   }
 
-  /** BM25 over an ALREADY-BUILT postings frame — the index-serving shape:
-    * df/dl/avgdl re-derive from the index itself (word- and doc-level
-    * aggregates over fixed-width rows), so a maintained index never needs
-    * the raw text rescanned to serve queries.
-    */
-  /** The scored (query_id, doc_id, score) pairs before top-k selection —
-    * split out so the |Q| scale probe can time scoring and selection
-    * separately.
-    */
-  private[graft] def bm25ScoredPairs(tf: DataFrame,
-                                     queryPred: Column => Column): DataFrame =
-    scoredPairsOfEnriched(tf, bm25Enriched(tf), queryPred)
-
   private def scoredPairsOfEnriched(tf: DataFrame, enriched: DataFrame,
                                     queryPred: Column => Column): DataFrame = {
     val qterms = tf.filter(queryPred(col("doc_id")))
@@ -282,9 +269,14 @@ object RetrievalOps {
       .agg(sum(col("contrib")).as("score"))
   }
 
+  /** BM25 over an ALREADY-BUILT postings frame — the index-serving shape:
+    * df/dl/avgdl re-derive from the index itself (word- and doc-level
+    * aggregates over fixed-width rows), so a maintained index never needs
+    * the raw text rescanned to serve queries.
+    */
   def bm25FromPostings(tf: DataFrame,
                        queryPred: Column => Column, k: Int): DataFrame =
-    bm25Rank(bm25ScoredPairs(tf, queryPred), k)
+    bm25Rank(scoredPairsOfEnriched(tf, bm25Enriched(tf), queryPred), k)
 
   private def bm25Rank(scored: DataFrame, k: Int): DataFrame = {
     val w = Window.partitionBy(col("query_id"))
@@ -301,65 +293,6 @@ object RetrievalOps {
                          queryPred: Column => Column, k: Int): DataFrame =
     bm25Rank(scoredPairsOfEnriched(corpusPostings(spark, dir),
       corpusEnriched(spark, dir), queryPred), k)
-
-  /** Vocabulary width up to which the DENSE serving path applies. */
-  val DenseVocabMax = 4096
-
-  /** BM25 top-k through a DENSE vocabulary pivot — the saturated-
-    * vocabulary serving path. The |Q| sweep (DEPLOY) measured the
-    * posting-list plan degenerating when every query matches ~every doc
-    * (this corpus' 30-word vocabulary: min df = 5% of docs, so scored
-    * pairs are |Q|·N by construction and there is NO tail for
-    * WAND-style max-impact pruning to skip — every term's upper bound is
-    * live in every query). In that regime the scoring matrix is dense
-    * and the right plan is the brute-cosine shape: pivot each doc's
-    * per-posting contribs to a |V|-wide vector ONCE, broadcast the 0/1
-    * query vectors, and score with the codegen'd dot kernel — no
-    * matched-row explosion, no 10⁸-group aggregation; the only shuffle
-    * is the per-query top-k. Exact: contribs are strictly positive, so
-    * score > 0 ⟺ ≥ 1 matched term, reproducing the sparse path's
-    * candidate set; zero terms add exactly 0.0 to the fold, so scores
-    * agree with the sparse sum to reordering (4-dp-stable, spec-pinned
-    * parity). Guarded by `DenseVocabMax` — at an open vocabulary the
-    * pivot width explodes and the posting-list plan is right again.
-    */
-  def bm25DenseTopK(tf: DataFrame, queryPred: Column => Column,
-                    k: Int): DataFrame = {
-    import graft.functions.HashExpressions.dotK
-    val enriched = graft.Caching.track(bm25Enriched(tf))
-    val vocab = enriched.select(col("word")).distinct()
-      .orderBy(col("word")).collect().map(_.getString(0))
-    require(vocab.length <= DenseVocabMax,
-      s"dense serving needs a bounded vocabulary (${vocab.length} > $DenseVocabMax) — use bm25FromPostings")
-    val wmap = map(vocab.zipWithIndex
-      .flatMap { case (wd, i) => Seq(lit(wd), lit(i)) }: _*)
-    def pivot(rows: DataFrame, valueCol: Column): DataFrame =
-      rows
-        .withColumn("i", element_at(wmap, col("word")))
-        .withColumn("v", valueCol)
-        .groupBy(col("doc_id"))
-        .agg(map_from_entries(collect_list(struct(col("i"), col("v"))))
-          .as("m"))
-        .withColumn("vec", transform(
-          sequence(lit(0), lit(vocab.length - 1)),
-          i => coalesce(element_at(col("m"), i), lit(0.0))))
-        .select(col("doc_id"), col("vec"))
-    val docVecs = pivot(enriched, col("contrib"))
-    val qVecs = pivot(
-      tf.filter(queryPred(col("doc_id")))
-        .select(col("doc_id"), col("word")).distinct(), lit(1.0))
-      .select(col("doc_id").as("query_id"), col("vec").as("qv"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("doc_id"))
-    docVecs.crossJoin(broadcast(qVecs))
-      .filter(col("doc_id") =!= col("query_id"))
-      .withColumn("score", dotK(col("qv"), col("vec")))
-      .filter(col("score") > 0.0)
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("doc_id"),
-        round(col("score"), 4).as("bm25"))
-  }
 
   /** Query: BM25 top-5 over the documents fixture for the first 8 docs as
     * query probes (postings from the shared registry).
@@ -687,38 +620,23 @@ object RetrievalOps {
     * no aggregation — both the batch face and the streaming face group
     * these rows their own way.
     *
-    * `broadcastTerms` picks the standing-side join strategy — the
-    * alerting regime's scale dial, and the MEASURED verdict (DEPLOY's
-    * percolation A/B, 10× corpus, three-rarest-term standing queries) is
-    * the opposite of the naive "broadcast until memory" intuition:
-    * broadcast and term-partitioned tie at 10³ standing queries (6.2 vs
-    * 5.4 s), then broadcast loses 16× at 10⁴ (96.8 vs 6.1 s) and 33× at
-    * 10⁵ (869.7 vs 26.6 s). The limiter is not the broadcast payload
-    * (3·|standing| rows is tiny) but WHERE the matched-pair explosion
-    * runs: a broadcast join inherits the ingest scan's partitioning, so
-    * the |matches| rows (326M at 10⁵ here) are produced and
-    * partially aggregated by a handful of scan tasks, while the
-    * term-partitioned join's word shuffle spreads exactly the same
-    * explosion across the full shuffle width. Broadcast (default) is
-    * right for bounded standing sets scored inside a stream (the
-    * stream-static shape percolateStream needs); any batch re-score of a
-    * 10⁴+ standing set should pass broadcastTerms = false.
+    * The standing side is broadcast: the shape percolateStream's
+    * stream-static join needs, right for bounded standing sets. A
+    * term-partitioned join wins batch re-scores of 10⁴+ standing queries
+    * (DEPLOY's percolation A/B) and is not built.
     */
   def percolateTermRows(docs: DataFrame, idCol: String, textCol: String,
                         standing: StandingQueries,
-                        keep: Seq[String] = Nil,
-                        broadcastTerms: Boolean = true): DataFrame = {
+                        keep: Seq[String] = Nil): DataFrame = {
     val staged = docs.select(
       (Seq(col(idCol).as("doc_id")) ++ keep.map(col) :+
         tokens(col(textCol)).as("toks")): _*)
-    val termsSide =
-      if (broadcastTerms) broadcast(standing.terms) else standing.terms
     staged
       .withColumn("dl", size(col("toks")))
       .select((Seq(col("doc_id"), col("dl")) ++ keep.map(col) :+
         explode(graft.functions.TextExpressions.tfMapK(col("toks")))
           .as(Seq("word", "tf"))): _*)
-      .join(termsSide, "word")
+      .join(broadcast(standing.terms), "word")
       .withColumn("contrib",
         col("idf") * (col("tf") * (Bm25K1 + 1.0)) /
           (col("tf") + lit(Bm25K1) *
@@ -737,9 +655,8 @@ object RetrievalOps {
   /** Batch (query, doc) percolation scores. */
   def percolateScores(docs: DataFrame, idCol: String, textCol: String,
                       standing: StandingQueries,
-                      keep: Seq[String] = Nil,
-                      broadcastTerms: Boolean = true): DataFrame = {
-    percolateTermRows(docs, idCol, textCol, standing, keep, broadcastTerms)
+                      keep: Seq[String] = Nil): DataFrame = {
+    percolateTermRows(docs, idCol, textCol, standing, keep)
       .groupBy((Seq(col("query_id"), col("doc_id")) ++ keep.map(col)): _*)
       // ORDER-PINNED sum (word-ascending struct fold, the PQ-ADC
       // precedent): the percolate sample scores near-duplicate docs

@@ -496,16 +496,8 @@ object SimilarityOps {
       }
       oversized = residual.filterNot(t => unsplittable.contains(t._1))
     }
-    lastBalanceRounds = round
     (indexed, cents, residual)
   }
-
-  /** Split-loop rounds the last `ivfIndexBalancedReport` ran — the one
-    * quantity in the balanced build that could grow with corpus SKEW
-    * rather than size (each round re-collects the driver-held oversized
-    * set); surfaced for the ScaleProbe decade record.
-    */
-  @volatile private[graft] var lastBalanceRounds: Int = 0
 
   /** IVF-probed approximate top-k: each query scores only the vectors in its
     * `nProbe` nearest lists (by centroid dot product on unit vectors), then
@@ -606,7 +598,7 @@ object SimilarityOps {
     * band agreement is inherently weak) collide with ~94% probability, so
     * candidate volume tracks genuine duplicates plus that floor, and at
     * 100 TB the band columns are a pre-materialized index with b grown as
-    * log2(n) to pin the floor (the ScaleProbe drives exactly that knob).
+    * log2(n) to pin the floor (`dedupBandBits`).
     * `corpus` needs (vec_id, nv, label, bands) — see withBands.
     */
   def lshCosinePairs(corpus: DataFrame, minCosine: Double,
@@ -718,29 +710,6 @@ object SimilarityOps {
     lastDedupBits = bits
     dedupBitsByNs(graft.Artifacts.currentNamespace) = bits
     banded
-  }
-
-  /** Probe gauge: distinct candidate pairs the dedup-tier bands generate
-    * BEFORE cosine verification — the volume the band-width knob must pin.
-    * ScaleProbe measures its growth at 10×/30× with the corpus-scaled
-    * width and with a pinned `bitsOverride` (to show the fixed-width
-    * floor growing as n²/2^bits).
-    */
-  def dedupCandidateVolume(spark: SparkSession, dir: String,
-                           bitsOverride: Option[Int] = None): DataFrame = {
-    val embs = Tables.embeddings(spark, dir)
-    val bits = bitsOverride.getOrElse(dedupBandBits(embs.count()))
-    val corpus = graft.Caching.track(
-      withBands(unitCorpus(embs), DedupBands, bits))
-    val buckets = corpus.select(col("vec_id"),
-      posexplode(col("bands")).as(Seq("band", "band_val")))
-    buckets.as("a")
-      .join(buckets.as("b"),
-        col("a.band") === col("b.band") &&
-          col("a.band_val") === col("b.band_val") &&
-          col("a.vec_id") < col("b.vec_id"))
-      .select(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"))
-      .distinct()
   }
 
   /** Diagnostic twin of the embed pair face's cap (the embedding sibling of

@@ -440,4 +440,38 @@ class CachingSpec extends SparkSuite {
     }
     assert(persisted === before, "clearAll must release the faces' storage")
   }
+
+  test("registry-served faces of the serve mix: warm output equals cold " +
+    "output, cold builds at least one registry, warm builds none") {
+    val dir = SparkSpec.FixtureDir
+    def misses: Map[String, Long] =
+      Caching.registryStatsSnapshot().map(s => s._1 -> s._3).toMap
+    // one call of face q as a frame over its collected rows, and the
+    // registries that missed during the call
+    def run(q: String): (org.apache.spark.sql.DataFrame, Set[String]) = {
+      val before = misses
+      val (schema, rows) = Caching.scoped {
+        val df = SparkEntry.queries(q)(spark, dir)
+        (df.schema, df.collect())
+      }
+      Caching.releaseAll()
+      val missed = misses.collect {
+        case (name, m) if m > before.getOrElse(name, 0L) => name
+      }.toSet
+      (spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema), missed)
+    }
+    Seq("search_bm25", "sim_ivf_ann", "sim_ivfpq_ann", "txt_hll_distinct",
+      "dedup_index_flags", "topic_ctfidf").foreach { q =>
+      Caching.clearAll()
+      val (cold, coldMissed) = run(q)
+      val (warm, warmMissed) = run(q)
+      // txt_hll_distinct is served through tables.relations alone
+      assert(coldMissed.nonEmpty,
+        s"$q built no registry cold: it no longer belongs in this list")
+      assert(warmMissed.isEmpty, s"$q rebuilt $warmMissed warm")
+      assert(cold.exceptAll(warm).isEmpty && warm.exceptAll(cold).isEmpty,
+        s"$q: warm output differs from cold")
+    }
+    Caching.clearAll()
+  }
 }

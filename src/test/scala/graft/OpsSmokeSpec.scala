@@ -41,6 +41,23 @@ class OpsSmokeSpec extends SparkSuite {
     assert(all == Right(SparkEntry.queries.keys.toSeq.sorted))
   }
 
+  test("every MAIN=graft.<Name> recipe in the docs and tools names a main") {
+    import java.nio.file.{Files, Paths}
+    val tools = Files.list(Paths.get("tools")).toArray.map(_.toString)
+      .filter(_.endsWith(".sh"))
+    val docs = Seq("README.md", "DEPLOY.md", ".claude/skills/verify/SKILL.md") ++ tools
+    val recipe = """MAIN=graft\.([A-Za-z0-9_.]*[A-Za-z0-9_])""".r
+    val named = docs.flatMap { f =>
+      recipe.findAllMatchIn(Files.readString(Paths.get(f))).map(f -> _.group(1))
+    }
+    assert(named.nonEmpty, "no recipe found: the pattern or the file list is stale")
+    named.foreach { case (f, name) =>
+      val main = scala.util.Try(Class.forName(s"graft.$name$$")
+        .getMethod("main", classOf[Array[String]]))
+      assert(main.isSuccess, s"$f: MAIN=graft.$name names no main")
+    }
+  }
+
   test("entry() flagship matches the txt_word_topn query") {
     val a = SparkEntry.entry(spark).collect().map(_.toSeq)
     val b = SparkEntry.queries("txt_word_topn")(spark, dir).collect().map(_.toSeq)

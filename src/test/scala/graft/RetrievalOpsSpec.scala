@@ -272,15 +272,6 @@ class RetrievalOpsSpec extends SparkSuite {
     byQ.values.foreach(rows => assert(rows.length <= RetrievalOps.HybridK))
   }
 
-  test("dense bm25 serving path equals the posting-list path exactly") {
-    val tf = RetrievalOps.postings(
-      Tables.documents(spark, SparkSpec.FixtureDir), "doc_id", "text")
-    val sparse = RetrievalOps.bm25FromPostings(tf, _ < 8, k = 5)
-    val dense = RetrievalOps.bm25DenseTopK(tf, _ < 8, k = 5)
-    assert(dense.except(sparse).isEmpty && sparse.except(dense).isEmpty,
-      "the vocabulary-pivot scorer must reproduce the posting-list ranking")
-  }
-
   test("phrase: adjacency required, repeats counted, gaps and reorders rejected") {
     val d = docs(
       0 -> "alpha beta gamma tail words here",
