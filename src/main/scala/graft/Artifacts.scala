@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 
-/** Model-artifact export seam for the correctness gate.
+/** Model-artifact export seam for the correctness gate — write-only.
   *
   * The iterative fits (LDA, KMeans, Word2Vec, the IVF quantizer) are not
   * SQL-expressible, but everything downstream of them — assignment joins,
@@ -13,12 +13,19 @@ import org.apache.spark.sql.DataFrame
   * (reference consumers: /root/reference/LDA_Analysis.py:433-469,
   * /root/reference/BERTopic_Analysis.py:539-665).
   *
+  * Faces only WRITE here; the oracle is the only reader. No face reads an
+  * artifact back, so a face runs the same plan whether exports are on or
+  * off, and the oracle verdict is about the plan that serves. A registry
+  * build never saves from inside its builder: the owning function saves
+  * right after the registry `get`, so a hit exports exactly as a build
+  * does.
+  *
   * Lifecycle: `Verify` enables exports into a sibling of its output dir
-  * before running any query; each fit helper calls `save` as it
-  * materializes; `SparkEntry.oracleSql` (evaluated AFTER the query loop)
-  * embeds `ref(...)` paths into the oracle SQL it dumps. Outside Verify
-  * (Bench, specs, CLI mains) exports are disabled and `save` is a no-op —
-  * the hot path never pays the write.
+  * before running any query; each fit's owner calls `save` on every call;
+  * `SparkEntry.oracleSql` (evaluated AFTER the query loop) embeds
+  * `ref(...)` paths into the oracle SQL it dumps. Outside Verify (Bench,
+  * specs, CLI mains) exports are disabled and `save` is a no-op — the hot
+  * path never pays the write.
   */
 object Artifacts {
 
@@ -28,15 +35,13 @@ object Artifacts {
   // Corpus-flavor namespace: `save` is first-write-wins per name, so two
   // queries running the SAME operator against DIFFERENT corpora (the
   // realistic-twin faces vs the base fixtures) would otherwise collide —
-  // whichever ran first would pin the artifact and every later consumer
-  // (e.g. storedIndex's probe-many read-back) would silently probe the
-  // WRONG corpus' index (found r15: the base ingest gate's dup flags
-  // changed when a _real face ran earlier in the same Verify JVM).
+  // whichever ran first would pin the artifact, and the oracle would
+  // check the other corpus' face against it.
   private val ns = new scala.util.DynamicVariable[String]("")
 
   /** Run `body` with artifact names prefixed `<prefix>/` — the realistic
-    * faces' writes and read-backs stay in their own directory and can
-    * never shadow a base face's artifact (or vice versa).
+    * faces' writes stay in their own directory and can never shadow a
+    * base face's artifact (or vice versa).
     */
   def namespaced[T](prefix: String)(body: => T): T =
     ns.withValue(prefix + "/")(body)
@@ -50,16 +55,6 @@ object Artifacts {
     */
   def currentNamespace: String = ns.value
 
-  /** Cache-key tag for registries whose VALUE depends on the artifact
-    * context (storedIndex returns the artifact-parquet read-back when
-    * exports are on, the in-plan frame when off — memoizing one across
-    * contexts would serve the wrong shape).
-    */
-  def contextTag: String = baseOpt match {
-    case Some(base) => s"export:$base/${ns.value}"
-    case None => "mem"
-  }
-
   /** Route subsequent `save` calls to `<base>/<name>` (fresh registry). */
   def enable(base: String): Unit = {
     written.clear()
@@ -70,8 +65,6 @@ object Artifacts {
     baseOpt = None
     written.clear()
   }
-
-  def enabled: Boolean = baseOpt.isDefined
 
   /** Write `df` once per enable() scope (idempotent across the queries that
     * share a fit); no-op when disabled. The frame is tiny (fit-sized, not
@@ -90,20 +83,13 @@ object Artifacts {
     ()
   }
 
-  /** Filesystem path of a saved artifact, for queries that read their own
-    * persisted table back (build-once/probe-many index shapes). None when
-    * disabled or not yet materialized.
-    */
-  def path(name: String): Option[String] = written.peek(full(name))
-
   /** DuckDB table expression for a saved artifact. Only resolves after the
     * owning query ran (Verify dumps oracle SQL after the query loop); an
     * unresolved ref yields SQL that fails loudly instead of silently
     * comparing against the wrong table. Routed through `full(name)` like
-    * save/path so a ref evaluated inside a `namespaced` scope resolves the
-    * same artifact the scope's save wrote (all three accessors share the
-    * namespace logic; Verify's oracle dump runs in the root namespace, so
-    * base-face refs are unchanged).
+    * save, so a ref evaluated inside a `namespaced` scope resolves the
+    * same artifact the scope's save wrote (Verify's oracle dump runs in
+    * the root namespace, so base-face refs are unchanged).
     */
   def ref(name: String): String =
     written.peek(full(name))

@@ -74,6 +74,16 @@ object Caching {
     df
   }
 
+  /** Persist `df` and materialize it now, owned by no scope — for a
+    * registry builder's frames, which must be cached before the building
+    * query's scope ends and live until the registry releases them.
+    */
+  def materialize(df: DataFrame): DataFrame = {
+    df.persist()
+    df.count()
+    df
+  }
+
   /** Register an already-persisted bare RDD with the active scope — for
     * frames whose storage lives outside the SQL cache manager (the
     * lineage-broken label rounds in DedupOps.propagateLabelsTracked).
@@ -235,7 +245,7 @@ object Caching {
       attempt(key, Registry.JoinerRetryBound)(build)
 
     /** The value under `key` if built — no build, no counters, no LRU
-      * touch (for readers that only ask what exists, e.g. Artifacts.path).
+      * touch (for readers that only ask what exists, e.g. Artifacts.ref).
       */
     def peek(key: String): Option[V] = synchronized(entries.get(key))
 

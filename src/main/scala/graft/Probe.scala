@@ -6,6 +6,10 @@ import org.apache.spark.sql.execution.FormattedMode
   * SparkEntry query (or the ones named as args after the fixture and
   * output dirs; an unknown name exits 2). A face that fails to plan is
   * listed on stderr and the run exits 1.
+  * The plan printed is the STATIC one: adaptive execution is off on
+  * Probe's session, so a runtime choice (a join's build side, a coalesced
+  * partition count) cannot vary from run to run, and two builds' plans
+  * diff cleanly apart from expression ids.
   * The review artifact for pushdown / broadcast / codegen checks:
   *
   *   MAIN=graft.Probe tools/run_verify.sh <sfDir> <outDir> [face...] > plans.txt
@@ -18,6 +22,7 @@ object Probe {
     val faces = SparkEntry.selectFaces(Some(args.drop(2).toSeq).filter(_.nonEmpty)).fold(
       e => { System.err.println(s"[probe] $e"); sys.exit(2) }, identity)
     val spark = SparkEntry.localSession("ERROR")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
     val failed = faces.flatMap { case (q, fn) =>
       println(s"===== $q =====")
       try { println(fn(spark, dir).queryExecution.explainString(FormattedMode)); None }

@@ -259,8 +259,9 @@ object RealisticCorpus {
 
   /** Wrap a (spark, dir) query face so it runs over the realistic twin
     * with artifact exports namespaced under `real/` — a realistic face can
-    * never shadow a base face's artifact (storedIndex-style read-backs
-    * would otherwise probe the wrong corpus' index, first-writer-wins).
+    * never shadow a base face's artifact (saves are first-writer-wins, so
+    * the oracle would otherwise check one corpus' face against the other
+    * corpus' fit).
     */
   def over(op: (SparkSession, String) => DataFrame)
       : (SparkSession, String) => DataFrame =

@@ -355,8 +355,6 @@ object SparkEntry {
        |     ELSE list_transform(range(0, len($l) - ${n - 1}),
        |            i -> ${polyFold(s"list_slice($l, i + 1, i + $n)")}) END"""
       .stripMargin
-  /** Distinct rolling hashes of char 5-shingles of a codepoint-list expr. */
-  private def shingleHashes(cpsExpr: String): String = windowHashSql(cpsExpr, 5)
   /** MinHash signature (k=32) of a hash-list expression. */
   private def minhashSigSql(sh: String): String =
     s"""list_transform(range(1, 33), i ->
@@ -1083,14 +1081,14 @@ object SparkEntry {
     "dedup_span_profile" -> SpanDedupOps.spanProfileQuery,
     "dedup_span_scrub" -> SpanDedupOps.spanScrubQuery,
     // incremental face of the substring tier: delta docs probed against
-    // the FIRST 90%'s stored gram index (Artifacts round-trip, same
-    // build-once/probe-many shape as dedup_incremental); streaming twin
+    // the FIRST 90%'s gram index (same cut as dedup_incremental, exported
+    // via Artifacts for the oracle); streaming twin
     // is StreamOps.spanFlagStream (stream-static semi join, spec-pinned)
     "dedup_span_flags" -> SpanDedupOps.spanFlagsQuery,
     // batch face of StreamOps.indexDupStream: band-collision flags of the
     // delta against the historical index (same 90/10 cut as
     // dedup_incremental; no jaccard re-rank — this is the ingest-time flag).
-    // The bucket probe reads the Artifacts-PERSISTED index exactly like
+    // The bucket probe reads the registry-persisted index exactly like
     // dedup_incremental, so both faces demonstrate build-once/probe-many.
     "dedup_index_flags" -> ((s, d) => {
       import org.apache.spark.sql.functions._
@@ -3932,8 +3930,8 @@ object SparkEntry {
          |FROM scored WHERE est >= 0.5""".stripMargin,
     // index+delta near-dup: the last decile arrives as the new batch and
     // band-joins the PERSISTED signature index of the first 90% (the
-    // build-once/probe-many shape — the index artifact is the table the
-    // Spark probe itself read); cut = metadata boundary, no sort
+    // build-once/probe-many shape — the index artifact is an export of the
+    // frame the Spark probe itself read); cut = metadata boundary, no sort
     "dedup_incremental" ->
       s"""WITH cut AS (
          |  SELECT CAST(floor(max(doc_id) * 0.9) AS BIGINT) AS cut

@@ -43,9 +43,6 @@ object HashFunctions {
   def codepoints(s: Column): Column =
     transform(filter(split(s, ""), c => c =!= ""), c => ascii(c).cast("long"))
 
-  /** Hash each element of a string array (shingles or tokens). */
-  def hashArray(arr: Column): Column = transform(arr, s => rollingHash(s))
-
   /** Distinct rolling hashes of all char n-shingles of a string, computed
     * from ONE codepoint array (no per-shingle substring/regex): shingle i is
     * the seed-7 poly fold over codepoints [i, i+n). Strings shorter than n
@@ -123,13 +120,6 @@ object HashFunctions {
             % lit(1000000007L)) % 2 === 1, 1L).otherwise(-1L))
         acc + when(votes > 0, pow(lit(2.0), b).cast("long")).otherwise(0L)
       })
-
-  /** Byte-band keys of a 32-bit simhash for Hamming-neighbor blocking:
-    * value of byte j, kept scaled by 2^(8j) (equality semantics identical,
-    * avoids integer division). Two values within Hamming distance d < 4
-    * share at least one of the 4 byte bands (pigeonhole).
-    */
-  def simhashByteBands(sh: Column): Column = simhashBands(sh, 4, 8)
 
   /** Generalized band keys: value of the j-th `bandBits`-wide slice, kept
     * scaled by 2^(bandBits·j). The pigeonhole guarantee (Hamming < nBands ⇒

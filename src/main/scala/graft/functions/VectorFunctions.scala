@@ -33,11 +33,6 @@ object VectorFunctions {
     when(n === 0.0, lit(0.0)).otherwise(d / n)
   }
 
-  /** The reference's (s+1)/2 normalization to [0, 1]
-    * (BERTopic_Analysis.py:589).
-    */
-  def cosine01(a: Column, b: Column): Column = (cosine(a, b) + lit(1.0)) / lit(2.0)
-
   /** Jaccard similarity of two array columns treated as sets. */
   def jaccard(a: Column, b: Column): Column = {
     val inter = size(array_intersect(a, b)).cast("double")

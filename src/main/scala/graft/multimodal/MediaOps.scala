@@ -237,9 +237,7 @@ object MediaOps {
     */
   private def cached(key: String)(build: => DataFrame): DataFrame =
     mediaCache.get(key) {
-      val df = build.persist()
-      df.count() // materialize before the building query's scope ends
-      df
+      graft.Caching.materialize(build)
     }
 
   /** The media corpus in the shape the similarity/dedup tier consumes:

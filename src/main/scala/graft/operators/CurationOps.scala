@@ -77,13 +77,10 @@ object CurationOps {
   private[graft] def corpusEvalGrams(spark: SparkSession, dir: String,
                                      n: Int = 13): DataFrame =
     evalGramsCache.get(s"${graft.Fingerprint.dirKey(spark, dir)}|$n") {
-      val g = Tables.documents(spark, dir)
+      graft.Caching.materialize(Tables.documents(spark, dir)
         .filter(SamplingOps.hashBucket(col("doc_id"), 10000) < 500)
         .select(explode(gramHashes(col("text"), n)).as("gram"))
-        .distinct()
-        .persist()
-      g.count() // materialize before the building query's scope ends
-      g
+        .distinct())
     }
 
   /** Bloom-prefiltered contamination probe: when the eval suite is large

@@ -179,22 +179,16 @@ object DedupOps {
   private[operators] def corpusMinhashSigs(spark: SparkSession,
                                            dir: String): DataFrame =
     sigCache.get(s"${graft.Fingerprint.dirKey(spark, dir)}|minhash") {
-      val sigs = minhashSignatures(Tables.documents(spark, dir), "text")
-        .select(col("doc_id"), col("sh_hashes"), col("sig"), col("bands"))
-        .persist()
-      sigs.count() // materialize before the building query's scope ends
-      sigs
+      graft.Caching.materialize(minhashSignatures(Tables.documents(spark, dir), "text")
+        .select(col("doc_id"), col("sh_hashes"), col("sig"), col("bands")))
     }
 
   private[operators] def corpusBandedFps(spark: SparkSession,
                                          dir: String): DataFrame =
     sigCache.get(s"${graft.Fingerprint.dirKey(spark, dir)}|simhash") {
-      val fps = simhashFingerprints(Tables.documents(spark, dir), "text")
+      graft.Caching.materialize(simhashFingerprints(Tables.documents(spark, dir), "text")
         .select(col("doc_id"), col("simhash"),
-          simhashBands(col("simhash"), 4, SimhashBandBits).as("bands"))
-        .persist()
-      fps.count() // materialize before the building query's scope ends
-      fps
+          simhashBands(col("simhash"), 4, SimhashBandBits).as("bands")))
     }
 
   /** Query: MinHash/LSH near-dup pairs over the documents fixture
@@ -287,13 +281,10 @@ object DedupOps {
   private[operators] def corpusGramSets(spark: SparkSession, dir: String,
                                         n: Int = 3): DataFrame =
     sigCache.get(s"${graft.Fingerprint.dirKey(spark, dir)}|grams$n") {
-      val g = Tables.documents(spark, dir)
+      graft.Caching.materialize(Tables.documents(spark, dir)
         .select(col("doc_id"),
           windowHashSet(tokenHashesK(normalized(col("text"))), n).as("grams"))
-        .filter(size(col("grams")) > 0)
-        .persist()
-      g.count() // materialize before the building query's scope ends
-      g
+        .filter(size(col("grams")) > 0))
     }
 
   private[operators] def ngramJaccardOfSets(grams: DataFrame, maxDf: Int,
@@ -757,8 +748,9 @@ object DedupOps {
   /** The stored MinHash index of a corpus — the build-once half of
     * incremental dedup: (old_id, sh_hashes, sig, bands), written once and
     * band-probed by every subsequent batch. At 100 TB this is a bucketed
-    * warehouse table keyed by the band hashes; here it round-trips through
-    * an `Artifacts` parquet so the probe genuinely reads a stored index.
+    * warehouse table keyed by the band hashes; here it is the
+    * registry-persisted frame of `storedIndex`, exported as an `Artifacts`
+    * parquet for the oracle.
     */
   def minhashIndex(docs: DataFrame, idCol: String, textCol: String): DataFrame =
     minhashSignatures(docs, textCol)
@@ -806,10 +798,10 @@ object DedupOps {
     * the first 90% as the indexed corpus — new docs flagged with their best
     * indexed near-match. The cut is a metadata boundary (floor of
     * 0.9 · max id — a real ingest has a watermark; an exact percentile
-    * would cost a full sort for nothing), and the index is persisted via
-    * the Artifacts seam and READ BACK for the probe, so the query
-    * demonstrates the build-once/probe-many shape end to end. floor()
-    * explicitly: a bare long cast truncates in Spark but ROUNDS in DuckDB.
+    * would cost a full sort for nothing), and the probe runs against the
+    * registry-persisted index (build-once/probe-many, `storedIndex`).
+    * floor() explicitly: a bare long cast truncates in Spark but ROUNDS in
+    * DuckDB.
     */
   def incrementalDupProfile(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
@@ -820,44 +812,30 @@ object DedupOps {
 
   /** The shared build-once half of BOTH incremental faces
     * (`dedup_incremental` and the `dedup_index_flags` ingest-flag face): the
-    * first 90% of doc ids indexed, persisted via the Artifacts seam, and
-    * READ BACK so every probe genuinely runs against the stored table.
-    * Returns (stored index, cut). Outside Verify (Artifacts disabled) the
-    * in-plan index is returned — Bench never pays the write.
-    */
-  /** Registry for the stored-index shape: build-once/probe-many IS the
-    * design contract (the index is a written warehouse table), so in
-    * harness sessions without artifact export (Bench) the built index
-    * persists per corpus version instead of re-running the signature scan
-    * for every consumer face — four faces (ingest gate, five-stage gate,
-    * and their realistic twins) probe it per corpus.
+    * first 90% of doc ids indexed and persisted once per corpus version —
+    * build-once/probe-many is the design contract (the index is a stored
+    * table), so four faces (ingest gate, five-stage gate, and their
+    * realistic twins) probe it per corpus without re-running the signature
+    * scan. Returns (stored index, cut); the index also exports via the
+    * Artifacts seam for the oracle, on hits as on builds.
     */
   private val indexCache = graft.Caching.Registry[(DataFrame, Long)]("dedup.index")
 
   def clearIndexCache(): Unit = { indexCache.clear(); indexBucketsCache.clear() }
 
   private[graft] def storedIndex(spark: SparkSession,
-                                 dir: String): (DataFrame, Long) =
-    indexCache.get(
-        s"${graft.Fingerprint.dirKey(spark, dir)}|${graft.Artifacts.contextTag}") {
+                                 dir: String): (DataFrame, Long) = {
+    val (index, cut) = indexCache.get(graft.Fingerprint.dirKey(spark, dir)) {
       val docs = Tables.documents(spark, dir)
       val cut = docs
         .agg(floor(max(col("doc_id")) * 0.9).cast("long"))
         .collect()(0).getLong(0)
-      val index = minhashIndex(docs.filter(col("doc_id") <= cut), "doc_id", "text")
-      graft.Artifacts.save("dedup_index")(index)
-      val stored = graft.Artifacts.path("dedup_index") match {
-        // probe-many: the WRITTEN table is the cache (an extra persist
-        // would hide the file scan behind an InMemoryRelation — the
-        // probes-the-stored-parquet contract is spec-pinned)
-        case Some(p) => spark.read.parquet(p)
-        case None => // no export (bench): persist the in-plan build
-          val f = index.persist()
-          f.count() // materialize before the building query's scope ends
-          f
-      }
-      (stored, cut)
+      (graft.Caching.materialize(
+        minhashIndex(docs.filter(col("doc_id") <= cut), "doc_id", "text")), cut)
     }
+    graft.Artifacts.save("dedup_index")(index)
+    (index, cut)
+  }
 
   /** The stored index's DISTINCT (band, band_hash) bucket table — the
     * probe side of every ingest-time band join (`indexDupBatch`,
@@ -874,15 +852,11 @@ object DedupOps {
 
   private[graft] def storedIndexBuckets(spark: SparkSession,
                                         dir: String): DataFrame =
-    indexBucketsCache.get(
-        s"${graft.Fingerprint.dirKey(spark, dir)}|${graft.Artifacts.contextTag}") {
+    indexBucketsCache.get(graft.Fingerprint.dirKey(spark, dir)) {
       val (stored, _) = storedIndex(spark, dir)
-      val b = stored
+      graft.Caching.materialize(stored
         .select(posexplode(col("bands")).as(Seq("band", "band_hash")))
-        .distinct()
-        .persist()
-      b.count() // materialize before the building query's scope ends
-      b
+        .distinct())
     }
 
   /** Query: duplicate-cluster profile — clusters with >1 member, their size
@@ -912,12 +886,10 @@ object DedupOps {
     labelCache.get(graft.Fingerprint.dirKey(spark, dir)) {
       // bucket explode over the registry-shared signature table — the
       // label build and the pair face hash the corpus once between them
-      val labels = propagateLabels(
+      graft.Caching.materialize(propagateLabels(
         corpusMinhashSigs(spark, dir).select(col("doc_id"),
           posexplode(col("bands")).as(Seq("band", "band_hash"))),
-        ClusterRounds).persist()
-      labels.count() // materialize before the building query's scope ends
-      labels
+        ClusterRounds))
     }
 
   /** Canonical-document selection: given cluster labels and a per-doc

@@ -71,17 +71,6 @@ object DriftOps {
       .limit(15)
   }
 
-  /** k-seed MinHash signature of a slice's DISTINCT token-hash set, as k
-    * (seed, mn) rows: mn_i = min over the set of the i-th affine rehash —
-    * the engine's MinHash family (HashKernels.minhashSig) applied at corpus
-    * granularity. The k-row frame is the whole exchange format between
-    * snapshots.
-    */
-  def corpusSignature(docs: DataFrame, textCol: String, k: Int = 32): DataFrame =
-    signatureOf(docs
-      .select(explode(tokens(col(textCol))).as("word"))
-      .select(rollingHash(col("word")).as("h")).distinct(), k)
-
   private def spark_range(s: SparkSession, n: Int): DataFrame = s.range(n).toDF()
 
   /** Query: token-set resemblance of the en vs de slices — exact Jaccard

@@ -18,7 +18,11 @@ import org.apache.spark.sql.{DataFrame, SaveMode}
   *
   * Both are thin, deliberately: the layout IS Spark's own (hive dirs,
   * bucket metadata in the catalog), so any Spark reader benefits without
-  * custom scan code. LayoutOpsSpec pins the zero-exchange plans.
+  * custom scan code. LayoutOpsSpec pins the zero-exchange plans. They are
+  * writers for a deployment's stored tables: no query face writes or
+  * reads a bucketed copy of its index (the serving faces probe their
+  * registry-persisted frames; DEPLOY measures the bucketed read-back as
+  * neutral-to-negative on the serving probe).
   */
 object LayoutOps {
 
@@ -35,23 +39,6 @@ object LayoutOps {
         .sortWithinPartitions((partCols ++ sortCols).map(df.col): _*)
     arranged.write.partitionBy(partCols: _*).mode(SaveMode.Overwrite).parquet(path)
   }
-
-  /** Stored-index seam: route a build-once/serve-many index frame (BM25
-    * postings, IVF list assignments) through the BUCKETED managed-table
-    * path, so every later key-aligned join/aggregation over the STORED
-    * side reads co-located buckets exchange-free — the measured
-    * postings_df A/B in DEPLOY.md, wired into the tables retrieval
-    * actually serves from. Verify-scoped like the Artifacts oracle seam
-    * it rides alongside: outside Verify the in-plan frame returns
-    * unchanged, so Bench and specs never pay the write.
-    */
-  def storedBucketed(name: String, df: DataFrame, bucketCol: String,
-                     nBuckets: Int = 32): DataFrame =
-    if (!graft.Artifacts.enabled) df
-    else {
-      writeBucketed(df, name, bucketCol, nBuckets, sortCols = Seq(bucketCol))
-      df.sparkSession.table(name)
-    }
 
   /** Bucketed (+ optionally sorted) managed-table write: `nBuckets` files
     * hash-clustered by `bucketCol`, with the bucketing recorded in the

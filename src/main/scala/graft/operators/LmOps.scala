@@ -359,12 +359,9 @@ object LmOps {
         .select(col("lang"), explode(tokens(col("text"))).as("w"))
         .groupBy("lang").agg(countDistinct("w").as("v"))
       val model = modelFromCounts(counts, vocab)
-      val nll = inst.join(model.logp, Seq("lang", "w1", "w2"))
+      graft.Caching.materialize(inst.join(model.logp, Seq("lang", "w1", "w2"))
         .groupBy(col("doc_id"), col("lang"))
-        .agg(round(-sum(col("logp") * col("n")) / sum(col("n")), 6).as("nll"))
-        .persist()
-      nll.count() // materialize before the building query's scope ends
-      nll
+        .agg(round(-sum(col("logp") * col("n")) / sum(col("n")), 6).as("nll")))
     }
 
   /** Per-doc tercile assignment (doc_id, lang, nll, bucket) — the shared
@@ -390,9 +387,7 @@ object LmOps {
       // instead of re-running the tercile windows per consumer (r17:
       // ~0.5 s per funnel run at sf0.1)
       bucketedCache.get(graft.Fingerprint.dirKey(spark, dir)) {
-        val b = pplBucketedUncached(spark, dir, 1.0).persist()
-        b.count() // materialize before the building query's scope ends
-        b
+        graft.Caching.materialize(pplBucketedUncached(spark, dir, 1.0))
       }
     else pplBucketedUncached(spark, dir, thresholdFrac)
 

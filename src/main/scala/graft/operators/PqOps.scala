@@ -184,28 +184,24 @@ object PqOps {
       : (DataFrame, DataFrame, DataFrame, DataFrame, DataFrame, DataFrame, Int) = {
     val t @ (_, lists, cents, codebooks, codes, _, _) =
       cached(s"pq:${graft.Fingerprint.dirKey(spark, dir)}") {
-        // DURABLY persisted (the sim.ivfworld mat pattern, r19): these
+        // DURABLY persisted (Caching.materialize, like sim.ivfworld): these
         // frames ARE the stored PQ index — corpus, coarse assignments and
         // the code table are built once per corpus version in production.
         // The former `Caching.track` registration released them at each
         // query's scope exit, so every later invocation re-ran the KMeans
         // transforms and the code-assignment argmin scan — only the FITS
         // were memoized. Registry eviction / clearFits unpersist.
-        def mat(df: DataFrame): DataFrame = {
-          val p = df.persist()
-          p.count() // materialize before the building query's scope ends
-          p
-        }
-        val corpus = mat(SimilarityOps.unitCorpus(Tables.embeddings(spark, dir)))
+        import graft.Caching.materialize
+        val corpus = materialize(SimilarityOps.unitCorpus(Tables.embeddings(spark, dir)))
         val (indexed, cents0) =
           SimilarityOps.ivfIndex(corpus, SimilarityOps.IvfLists)
-        val lists0 = mat(indexed.select(col("vec_id"), col("list")))
+        val lists0 = materialize(indexed.select(col("vec_id"), col("list")))
         val (codebooks0, codesRaw, ds0) = pqFit(corpus)
-        val codes0 = mat(codesRaw)
+        val codes0 = materialize(codesRaw)
         // the served layout: one row per vector, cids in m order — built
         // once with the index (this IS how a PQ code table is stored)
         (corpus, lists0, cents0, codebooks0, codes0,
-          mat(codesAsArrays(codes0)), ds0)
+          materialize(codesAsArrays(codes0)), ds0)
       }
     graft.Artifacts.save("pq_centroids")(cents)
     graft.Artifacts.save("pq_lists")(lists)

@@ -73,9 +73,7 @@ object RetrievalOps {
 
   private def corpusEnriched(spark: SparkSession, dir: String): DataFrame =
     enrichedCache.get(graft.Fingerprint.dirKey(spark, dir)) {
-      val e = bm25Enriched(corpusPostings(spark, dir)).persist()
-      e.count() // materialize before the building query's scope ends
-      e
+      graft.Caching.materialize(bm25Enriched(corpusPostings(spark, dir)))
     }
 
   /** Registry for the percolation drift gauge's FROZEN standing stats —
@@ -91,10 +89,7 @@ object RetrievalOps {
 
   private def corpusPostings(spark: SparkSession, dir: String): DataFrame =
     postingsCache.get(graft.Fingerprint.dirKey(spark, dir)) {
-      val tf = postings(Tables.documents(spark, dir), "doc_id", "text")
-        .persist()
-      tf.count() // materialize before the building query's scope ends
-      tf
+      graft.Caching.materialize(postings(Tables.documents(spark, dir), "doc_id", "text"))
     }
 
   /** POSITIONAL postings (doc_id, pos, word) from the same one kernel
@@ -330,10 +325,9 @@ object RetrievalOps {
   /** Query: BM25 served FROM the maintained index after the synthetic A→B
     * refresh (same derivation family as `snapshot_diff`: A = first 90% of
     * ids with ids ≡ 0 (mod 97) carrying stale text, B drops ids ≡ 0
-    * (mod 101)). The stored A-index round-trips through parquet
-    * (Artifacts), the refresh touches only the delta, and the served
-    * ranking is provably identical to a from-scratch B index — which is
-    * exactly what the oracle computes.
+    * (mod 101)). The A-index exports via the Artifacts seam, the refresh
+    * touches only the delta, and the served ranking is provably identical
+    * to a from-scratch B index — which is exactly what the oracle computes.
     */
   def bm25IncrementalQuery(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
@@ -350,13 +344,8 @@ object RetrievalOps {
     // serve, which ARE the refresh operator.
     val built = postings(old, "doc_id", "text")
     graft.Artifacts.save("bm25_postings")(built)
-    // the stored table is WORD-bucketed (LayoutOps seam): the df
-    // aggregation every serve pays over the stored side goes
-    // exchange-free (the measured postings_df A/B in DEPLOY.md); the
-    // Artifacts parquet alongside stays the oracle's read
-    val stored = LayoutOps.storedBucketed("bm25_postings_idx", built, "word")
     val maintained = graft.Caching.track(
-      maintainPostings(stored, old, neu, "doc_id", "text").drop("origin"))
+      maintainPostings(built, old, neu, "doc_id", "text").drop("origin"))
     bm25FromPostings(maintained, _ < 8, k = 5)
   }
 
@@ -1027,8 +1016,8 @@ object RetrievalOps {
     * per corpus version, never per query), so the three faces share one
     * codec pass + one quantizer fit per corpus per session — the
     * storedIndex / driftWorlds contract, keyed the same way (corpus
-    * fingerprint × artifact context; the realistic twin's namespaced
-    * context gets its own entry AND its own `real/` artifacts).
+    * fingerprint: the realistic twin's corpus gets its own entry, and its
+    * namespaced saves their own `real/` artifacts).
     */
   private val ragCache =
     graft.Caching.Registry[(DataFrame, DataFrame, DataFrame)]("retrieval.ragindex")
@@ -1036,22 +1025,16 @@ object RetrievalOps {
   def clearRagCache(): Unit = ragCache.clear()
 
   private def ragWorlds(spark: SparkSession, dir: String)
-      : (DataFrame, DataFrame, DataFrame) =
-    ragCache.get(
-        s"${graft.Fingerprint.dirKey(spark, dir)}|${graft.Artifacts.contextTag}") {
-      def mat(df: DataFrame): DataFrame = {
-        val p = df.persist()
-        p.count() // materialize before the building query's scope ends
-        p
-      }
-      val corpus = mat(chunkCorpus(spark, dir))
-      val (indexed, cents) =
-        SimilarityOps.ivfIndex(corpus, SimilarityOps.IvfLists)
-      val (i, c) = (mat(indexed), mat(cents))
-      graft.Artifacts.save("rag_ivf_assign")(i.select("vec_id", "list"))
-      graft.Artifacts.save("rag_ivf_centroids")(c)
-      (corpus, i, c)
+      : (DataFrame, DataFrame, DataFrame) = {
+    val (corpus, indexed, cents) = ragCache.get(graft.Fingerprint.dirKey(spark, dir)) {
+      val c = graft.Caching.materialize(chunkCorpus(spark, dir))
+      val (i, cs) = SimilarityOps.ivfIndex(c, SimilarityOps.IvfLists)
+      (c, graft.Caching.materialize(i), graft.Caching.materialize(cs))
     }
+    graft.Artifacts.save("rag_ivf_assign")(indexed.select("vec_id", "list"))
+    graft.Artifacts.save("rag_ivf_centroids")(cents)
+    (corpus, indexed, cents)
+  }
 
   def ragChunkTopK(spark: SparkSession, dir: String): DataFrame = {
     import graft.functions.HashExpressions.dotK

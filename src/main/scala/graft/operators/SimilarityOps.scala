@@ -304,8 +304,8 @@ object SimilarityOps {
     * expensive BY DESIGN (~30 split rounds at sf0.1: the fair-share loop
     * doing its job on the planted family); re-fitting it per probe run
     * measured 51 s/run on the r18 board — a cost no deployment pays
-    * twice. Keyed corpus-fingerprint × artifact context so Verify's
-    * export world and each corpus flavor get their own entry.
+    * twice. Keyed by corpus fingerprint, so each corpus flavor gets its
+    * own entry.
     */
   private val balancedCache =
     graft.Caching.Registry[(DataFrame, DataFrame, DataFrame, Long, (Int, Int))]("sim.balanced")
@@ -329,39 +329,31 @@ object SimilarityOps {
 
   private[operators] def ivfWorld(spark: SparkSession, dir: String)
       : (DataFrame, DataFrame, DataFrame) =
-    ivfWorldCache.get(
-        s"${graft.Fingerprint.dirKey(spark, dir)}|${graft.Artifacts.contextTag}") {
-      def mat(df: DataFrame): DataFrame = {
-        val p = df.persist()
-        p.count() // materialize before the building query's scope ends
-        p
-      }
-      val corpus = mat(unitCorpus(Tables.embeddings(spark, dir)))
+    ivfWorldCache.get(graft.Fingerprint.dirKey(spark, dir)) {
+      val corpus = graft.Caching.materialize(unitCorpus(Tables.embeddings(spark, dir)))
       val (indexed0, cents0) = ivfIndex(corpus, nLists = IvfLists)
-      (corpus, mat(indexed0), mat(cents0))
+      (corpus, graft.Caching.materialize(indexed0), graft.Caching.materialize(cents0))
     }
 
   private def balancedWorlds(spark: SparkSession, dir: String)
-      : (DataFrame, DataFrame, DataFrame, Long, (Int, Int)) =
-    balancedCache.get(
-        s"${graft.Fingerprint.dirKey(spark, dir)}|${graft.Artifacts.contextTag}") {
-      def mat(df: DataFrame): DataFrame = {
-        val p = df.persist()
-        p.count() // materialize before the building query's scope ends
-        p
-      }
-      val corpus = mat(unitCorpus(Tables.embeddings(spark, dir)))
+      : (DataFrame, DataFrame, DataFrame, Long, (Int, Int)) = {
+    val worlds = balancedCache.get(graft.Fingerprint.dirKey(spark, dir)) {
+      val corpus = graft.Caching.materialize(unitCorpus(Tables.embeddings(spark, dir)))
       val (indexed0, cents0, residual) =
         ivfIndexBalancedReport(corpus, nLists = IvfLists)
-      val (indexed, cents) = (mat(indexed0), mat(cents0))
+      val indexed = graft.Caching.materialize(indexed0)
+      val cents = graft.Caching.materialize(cents0)
       val nListsAfter = cents.count().toInt
       val nProbeScaled = math.max(1,
         math.round(IvfProbe.toDouble * nListsAfter / IvfLists).toInt)
-      graft.Artifacts.save("ivf_bal_assign")(indexed.select("vec_id", "list"))
-      graft.Artifacts.save("ivf_bal_centroids")(cents)
       (corpus, indexed, cents, residual.length.toLong,
         (nListsAfter, nProbeScaled))
     }
+    val (_, indexed, cents, _, _) = worlds
+    graft.Artifacts.save("ivf_bal_assign")(indexed.select("vec_id", "list"))
+    graft.Artifacts.save("ivf_bal_centroids")(cents)
+    worlds
+  }
 
   def ivfRecallBalanced(spark: SparkSession, dir: String): DataFrame = {
     val (corpus, indexed, cents, nResidual, cfg) = balancedWorlds(spark, dir)

@@ -268,8 +268,18 @@ object SketchOps {
       .orderBy("lang")
   }
 
+  /** Registry for the incremental face's STORED history registers — the
+    * face's contract ("the register frame of the historical 90% is
+    * PERSISTED ... history is never rescanned"), keyed by corpus
+    * fingerprint like every stored-index registry; ≤ m rows per entry.
+    */
+  private val hllHistoryCache =
+    graft.Caching.Registry[(DataFrame, Long)]("sketch.hllhistory")
+
+  def clearHllHistoryCache(): Unit = hllHistoryCache.clear()
+
   /** Query: incremental cardinality — the register frame of the historical
-    * 90% of the corpus is PERSISTED (Artifacts) and the 10% delta batch
+    * 90% of the corpus is PERSISTED (registry) and the 10% delta batch
     * merges its own registers by bucket-wise max; history is never
     * rescanned. Because registers max-merge losslessly, the merged state
     * equals the whole-corpus sketch EXACTLY, so the oracle is the same SQL
@@ -277,38 +287,19 @@ object SketchOps {
     * `dedup_incremental`, for the cardinality ledger a growing corpus
     * keeps (vocabulary size across ingest batches at 100 TB).
     */
-  /** Registry for the incremental face's STORED history registers — the
-    * face's own contract ("the register frame of the historical 90% is
-    * PERSISTED ... history is never rescanned") was only honored under
-    * Verify's artifact export; Bench re-tokenized the history per
-    * invocation. Keyed corpus fingerprint × artifact context like every
-    * stored-index registry; ≤ m rows per entry.
-    */
-  private val hllHistoryCache =
-    graft.Caching.Registry[(DataFrame, Long)]("sketch.hllhistory")
-
-  def clearHllHistoryCache(): Unit = hllHistoryCache.clear()
-
   def hllIncremental(spark: SparkSession, dir: String): DataFrame = {
     val m = 1024
     val docs = Tables.documents(spark, dir)
     def registersOf(d: DataFrame) = hllRegisters(
       d.select(explode(tokens(col("text"))).as("word"))
         .select(rollingHash(col("word")).as("h")), "h", m)
-    val (stored, cut) = hllHistoryCache.get(
-        s"${graft.Fingerprint.dirKey(spark, dir)}|${graft.Artifacts.contextTag}") {
+    val (stored, cut) = hllHistoryCache.get(graft.Fingerprint.dirKey(spark, dir)) {
       val c = docs
         .agg(floor(max(col("doc_id")) * 0.9).cast("long"))
         .collect()(0).getLong(0)
-      graft.Artifacts.save("hll_registers")(
-        registersOf(docs.filter(col("doc_id") <= c)))
-      val s = graft.Artifacts.path("hll_registers")
-        .map(spark.read.parquet(_))
-        .getOrElse(registersOf(docs.filter(col("doc_id") <= c)))
-        .persist()
-      s.count() // materialize before the building query's scope ends
-      (s, c)
+      (graft.Caching.materialize(registersOf(docs.filter(col("doc_id") <= c))), c)
     }
+    graft.Artifacts.save("hll_registers")(stored)
     val merged = stored
       .unionByName(registersOf(docs.filter(col("doc_id") > cut)))
       .groupBy("bucket").agg(max(col("r")).as("r"))

@@ -179,34 +179,17 @@ object SpanDedupOps {
   }
 
   /** Query: the last decile of doc ids probed against the first 90%'s
-    * stored gram index (same metadata-boundary cut as dedup_incremental;
-    * the index is persisted via the Artifacts seam and READ BACK, so the
-    * query demonstrates build-once/probe-many for the substring tier too).
+    * gram index (same metadata-boundary cut as dedup_incremental); the
+    * index exports via the Artifacts seam for the oracle.
     */
   def spanFlagsQuery(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(spark, dir)
-    val (stored, cut) = storedGramIndex(spark, dir)
-    spanHitBatch(docs.filter(col("doc_id") > cut), stored, "doc_id", "text")
-  }
-
-  /** The build-once half of the incremental span face: the first 90% of
-    * doc ids grammed and persisted via the Artifacts seam, READ BACK for
-    * the probe (DedupOps.storedIndex's substring sibling). Outside Verify
-    * (Artifacts disabled) the in-plan index is returned — Bench never pays
-    * the write.
-    */
-  private[graft] def storedGramIndex(spark: SparkSession,
-                                     dir: String): (DataFrame, Long) = {
     val docs = Tables.documents(spark, dir)
     val cut = docs
       .agg(floor(max(col("doc_id")) * 0.9).cast("long"))
       .collect()(0).getLong(0)
     val index = spanGramIndex(docs.filter(col("doc_id") <= cut), "text")
     graft.Artifacts.save("span_gram_index")(index)
-    val stored = graft.Artifacts.path("span_gram_index")
-      .map(spark.read.parquet(_))
-      .getOrElse(index)
-    (stored, cut)
+    spanHitBatch(docs.filter(col("doc_id") > cut), index, "doc_id", "text")
   }
 
   /** Query: duplicated-span profile over the documents fixture. */

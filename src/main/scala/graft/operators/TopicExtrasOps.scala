@@ -176,15 +176,6 @@ object TopicExtrasOps {
       .orderBy("cluster", "rank")
   }
 
-  /** Strategy (c): rank docs per class by cosine between the document's
-    * TF vector and the class's c-TF-IDF score vector, joined sparsely on
-    * the shared term dimension (no dense vectors materialize).
-    */
-  def tfidfCosineExamples(docs: DataFrame, classScores: DataFrame, idCol: String,
-                          textCol: String, classCol: String, k: Int): DataFrame =
-    tfidfCosineExamplesFromTf(graft.Caching.track(
-      docTermFreq(docs, idCol, textCol, classCol)), classScores, k)
-
   /** Per-doc term frequencies WITHOUT a token-level shuffle: the tfMap
     * kernel pre-aggregates inside the row and explode yields final
     * (doc_id, cls, word, tf) — one row per distinct word per doc, no
@@ -197,9 +188,12 @@ object TopicExtrasOps {
         .as(Seq("word", "tf")))
       .withColumn("tf", col("tf").cast("double"))
 
-  /** Same ranking from a pre-aggregated (doc_id, cls, word, tf) frame —
-    * persisted by the caller; lets the class scores derive from the SAME
-    * frame so the corpus tokenizes once.
+  /** Strategy (c): rank docs per class by cosine between the document's
+    * TF vector and the class's c-TF-IDF score vector, joined sparsely on
+    * the shared term dimension (no dense vectors materialize). Reads a
+    * pre-aggregated (doc_id, cls, word, tf) frame — persisted by the
+    * caller — so the class scores derive from the SAME frame and the
+    * corpus tokenizes once.
     */
   def tfidfCosineExamplesFromTf(docTf: DataFrame, classScores: DataFrame,
                                 k: Int): DataFrame = {

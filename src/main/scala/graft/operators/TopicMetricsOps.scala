@@ -81,21 +81,16 @@ object TopicMetricsOps {
 
   private def langClassTf(spark: SparkSession, dir: String): DataFrame =
     classTfCache.get(s"${graft.Fingerprint.dirKey(spark, dir)}|uni") {
-      val tf = classTfOf(Tables.documents(spark, dir), "lang",
-        tokens(col("text"))).persist()
-      tf.count() // materialize before the building query's scope ends
-      tf
+      graft.Caching.materialize(classTfOf(Tables.documents(spark, dir), "lang",
+        tokens(col("text"))))
     }
 
   private def langClassTfBigrams(spark: SparkSession, dir: String): DataFrame =
     classTfCache.get(s"${graft.Fingerprint.dirKey(spark, dir)}|bi") {
       val staged = Tables.documents(spark, dir)
         .select(col("lang"), tokens(col("text")).as("toks"))
-      val tf = classTfOf(staged, "lang",
-        concat(col("toks"), TextAnalysisOps.tokenBigrams(col("toks"))))
-        .persist()
-      tf.count() // materialize before the building query's scope ends
-      tf
+      graft.Caching.materialize(classTfOf(staged, "lang",
+        concat(col("toks"), TextAnalysisOps.tokenBigrams(col("toks")))))
     }
 
   /** c-TF-IDF scores from a PRE-AGGREGATED (cls, word, tf) frame — the seam
@@ -616,10 +611,8 @@ object TopicMetricsOps {
   private def corpusTopWords(spark: SparkSession, dir: String,
                              n: Int): DataFrame =
     topWordsCache.get(s"${graft.Fingerprint.dirKey(spark, dir)}|$n") {
-      val top = topWordsOfTokens(
-        tokenizedDocs(Tables.documents(spark, dir), "text"), n).persist()
-      top.count() // materialize before the building query's scope ends
-      top
+      graft.Caching.materialize(topWordsOfTokens(
+        tokenizedDocs(Tables.documents(spark, dir), "text"), n))
     }
 
   /** Query: u_mass coherence of the global top-10 words. */

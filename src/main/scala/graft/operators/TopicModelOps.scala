@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.ml.clustering.{KMeans, LDA}
+import org.apache.spark.ml.clustering.{KMeans, LDA, LDAModel}
 import org.apache.spark.ml.feature.{CountVectorizer, CountVectorizerModel, PCA}
 import org.apache.spark.ml.functions.{array_to_vector, vector_to_array}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -65,21 +65,25 @@ object TopicModelOps {
 
   /** Shared seeded LDA fit over the documents fixture. */
   private def fittedLda(spark: SparkSession, dir: String, k: Int,
-                        maxIter: Int): (DataFrame, Array[String], org.apache.spark.ml.clustering.LDAModel) =
+                        maxIter: Int): (DataFrame, Array[String], LDAModel) =
     cached(s"lda:${graft.Fingerprint.dirKey(spark, dir)}:$k:$maxIter") {
       val (vecs, vocab) = vectorize(Tables.documents(spark, dir), "text")
       vecs.persist()
-      // alpha='auto' parity: setOptimizeDocConcentration learns the doc-topic
-      // prior like gensim (LDA_Analysis.py:273). The same line also sets
-      // eta='auto'; Spark's online LDA keeps the topic-word prior FIXED at
-      // its default 1/k (gensim's eta starting point) and cannot adapt it —
-      // documented divergence: topic-word posteriors can differ slightly on
-      // corpora where gensim's learned eta drifts from 1/k.
-      val model = new LDA().setK(k).setSeed(Seed).setMaxIter(maxIter)
-        .setOptimizeDocConcentration(true)
-        .setFeaturesCol("features").fit(vecs)
-      (vecs, vocab, model)
+      (vecs, vocab, fitLda(vecs, k, maxIter))
     }
+
+  /** The engine's one LDA estimator: seeded (42) online LDA over `vecs`'
+    * `features` column. alpha='auto' parity: setOptimizeDocConcentration
+    * learns the doc-topic prior like gensim (LDA_Analysis.py:273). The same
+    * line also sets eta='auto'; Spark's online LDA keeps the topic-word
+    * prior FIXED at its default 1/k (gensim's eta starting point) and
+    * cannot adapt it — documented divergence: topic-word posteriors can
+    * differ slightly on corpora where gensim's learned eta drifts from 1/k.
+    */
+  def fitLda(vecs: DataFrame, k: Int, maxIter: Int): LDAModel =
+    new LDA().setK(k).setSeed(Seed).setMaxIter(maxIter)
+      .setOptimizeDocConcentration(true)
+      .setFeaturesCol("features").fit(vecs)
 
   /** Documents with a bag-of-words `features` vector and kept vocabulary.
     * maxDF (reference: no_above=0.7, LDA_Analysis.py:171) is optional — the
@@ -109,20 +113,9 @@ object TopicModelOps {
     (model.transform(toks), model.vocabulary)
   }
 
-  /** Trained LDA topics: (topic, rank, term, weight) — M1+M3. */
-  def ldaTopics(spark: SparkSession, docs: DataFrame, textCol: String,
-                k: Int, maxIter: Int = 20, topN: Int = 10): DataFrame = {
-    val (vecs, vocab) = vectorize(docs, textCol)
-    val model = new LDA().setK(k).setSeed(Seed).setMaxIter(maxIter)
-      // alpha='auto' parity; eta stays fixed at 1/k — see fittedLda
-      .setOptimizeDocConcentration(true)
-      .setFeaturesCol("features").fit(vecs)
-    describeJoined(spark, model, vocab, topN)
-  }
-
-  /** describeTopics ⋈ vocabulary → (topic, rank, term, weight). */
+  /** describeTopics ⋈ vocabulary → (topic, rank, term, weight) — M1+M3. */
   def describeJoined(spark: SparkSession,
-                     model: org.apache.spark.ml.clustering.LDAModel,
+                     model: LDAModel,
                      vocab: Array[String], topN: Int): DataFrame = {
     val vocabDf = spark.createDataFrame(
       vocab.zipWithIndex.map { case (t, i) => (i, t) }.toSeq)
@@ -341,7 +334,7 @@ object TopicModelOps {
     * describeTopics order, deterministic for a seeded fit. K·topN rows.
     */
   def topicWordsDF(spark: SparkSession,
-                   model: org.apache.spark.ml.clustering.LDAModel,
+                   model: LDAModel,
                    vocab: Array[String], topN: Int = 10): DataFrame = {
     import spark.implicits._
     model.describeTopics(topN).collect().flatMap { r =>
@@ -428,11 +421,8 @@ object TopicModelOps {
                      maxIter: Int = 10): DataFrame = {
     import spark.implicits._
     val rows = graft.Caching.forkJoin(ks.map { k => () =>
-      val model = new LDA().setK(k).setSeed(Seed).setMaxIter(maxIter)
-        .setOptimizeDocConcentration(true)
-        .setFeaturesCol("features").fit(corpus.vecs)
       (k, TopicMetricsOps.meanUmass(corpus.toks,
-        topicWordsDF(spark, model, corpus.vocab)))
+        topicWordsDF(spark, fitLda(corpus.vecs, k, maxIter), corpus.vocab)))
     })
     rows.toDF("k", "umass").withColumn("best",
       (col("umass") === max(col("umass")).over(Window.partitionBy())).cast("int"))

@@ -40,11 +40,7 @@ object AnalysisRunner {
                                   topN: Int, format: String): Unit =
       graft.Caching.scoped {
     val TopicModelOps.LdaCorpus(vecs, vocab, toks) = corpus
-    val model = new org.apache.spark.ml.clustering.LDA()
-      .setK(k).setSeed(TopicModelOps.Seed).setMaxIter(maxIter)
-      // alpha='auto' parity; eta stays fixed at 1/k — see TopicModelOps.fittedLda
-      .setOptimizeDocConcentration(true)
-      .setFeaturesCol("features").fit(vecs)
+    val model = TopicModelOps.fitLda(vecs, k, maxIter)
     val topics = graft.Caching.track(
       TopicModelOps.describeJoined(spark, model, vocab, topN))
     // (cls=topic, rank, word) shape reused by every keyword-family operator

@@ -39,24 +39,6 @@ class LayoutOpsSpec extends SparkSuite {
       .select("o_custkey").distinct().count())
   }
 
-  test("storedBucketed: no-op outside Verify; bucketed content-equal table " +
-    "with an exchange-free key aggregation when enabled") {
-    val docs = Tables.documents(spark, dir).limit(200)
-    val built = graft.operators.RetrievalOps.postings(docs, "doc_id", "text")
-    // Artifacts disabled (spec default): the in-plan frame returns as-is
-    assert(LayoutOps.storedBucketed("spec_idx_b", built, "word") eq built)
-    val tmp = Files.createTempDirectory("graft-stored-b").toString
-    Artifacts.enable(tmp)
-    try {
-      val stored = LayoutOps.storedBucketed("spec_idx_b", built, "word")
-      assert(stored.except(built).isEmpty && built.except(stored).isEmpty,
-        "the stored table must hold exactly the built postings")
-      val agg = stored.groupBy("word").agg(count(lit(1)).as("df"))
-      assert(!agg.queryExecution.executedPlan.toString.contains("Exchange"),
-        "the word-keyed df aggregation over the stored table must be exchange-free")
-    } finally Artifacts.disable()
-  }
-
   test("partitioned+sorted write yields one file per partition, pruned reads") {
     val tmp = Files.createTempDirectory("graft-layout").toString
     val orders = Tables.orders(spark, dir)

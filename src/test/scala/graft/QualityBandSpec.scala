@@ -18,7 +18,9 @@ class QualityBandSpec extends SparkSuite {
   test("seed-42 LDA end-to-end lands in the reference's quality bands: " +
     "mean c_v >= 0.3, topic diversity >= 0.5") {
     val docs = Tables.documents(spark, SparkSpec.FixtureDir)
-    val topics = TopicModelOps.ldaTopics(spark, docs, "text", k = 5)
+    val corpus = TopicModelOps.ldaCorpus(docs, "text")
+    val topics = TopicModelOps.describeJoined(spark,
+        TopicModelOps.fitLda(corpus.vecs, 5, 20), corpus.vocab, 10)
       .select(col("topic").as("cls"), col("term").as("word"), col("rank"))
       .cache()
 
@@ -26,10 +28,8 @@ class QualityBandSpec extends SparkSuite {
       .topicDiversity(topics)
       .select(col("diversity")).collect()(0).getDouble(0)
 
-    val toks = graft.Caching.track(
-      TopicMetricsOps.tokenizedDocs(docs, "text"))
     val cvs = (0 until 5).map { t =>
-      TopicMetricsOps.cvCoherenceOfTokens(toks,
+      TopicMetricsOps.cvCoherenceOfTokens(corpus.toks,
         topics.filter(col("cls") === t).select(col("word"), col("rank")))
         .select(col("c_v")).collect()(0).getDouble(0)
     }
@@ -52,16 +52,15 @@ class QualityBandSpec extends SparkSuite {
       SparkSpec.referenceFile("RAW_DATA/2025_6_28_22_56_49_4600_channel_download_ai광고.xlsx"))
     val docs = graft.pipeline.PreprocessPipeline.prepareCrawl(raw)
       .select(col("cleaned_text")).cache()
-    val topics = TopicModelOps.ldaTopics(spark, docs, "cleaned_text",
-      k = 5, maxIter = 10)
+    val corpus = TopicModelOps.ldaCorpus(docs, "cleaned_text")
+    val topics = TopicModelOps.describeJoined(spark,
+        TopicModelOps.fitLda(corpus.vecs, 5, 10), corpus.vocab, 10)
       .select(col("topic").as("cls"), col("term").as("word"), col("rank"))
       .cache()
     val diversity = TopicMetricsOps.topicDiversity(topics)
       .select(col("diversity")).collect()(0).getDouble(0)
-    val toks = graft.Caching.track(
-      TopicMetricsOps.tokenizedDocs(docs, "cleaned_text"))
     val cvs = (0 until 5).map { t =>
-      TopicMetricsOps.cvCoherenceOfTokens(toks,
+      TopicMetricsOps.cvCoherenceOfTokens(corpus.toks,
         topics.filter(col("cls") === t).select(col("word"), col("rank")))
         .select(col("c_v")).collect()(0).getDouble(0)
     }

@@ -8,7 +8,7 @@ import graft.operators.TopicModelOps
 class TopicModelSpec extends SparkSuite {
   private val dir = SparkSpec.FixtureDir
 
-  test("ldaTopics: k topics x topN ranked terms, weights descending per topic") {
+  test("ldaTopicsQuery: k topics x topN ranked terms, weights descending per topic") {
     val rows = TopicModelOps.ldaTopicsQuery(spark, dir).collect()
       .map(r => (r.getInt(0), r.getInt(1), r.getString(2), r.getDouble(3)))
     assert(rows.map(_._1).distinct.length == 5)
@@ -20,12 +20,14 @@ class TopicModelSpec extends SparkSuite {
   }
 
   test("lda runs are deterministic under the fixed seed") {
-    val a = TopicModelOps.ldaTopics(spark,
-      Tables.documents(spark, dir), "text", k = 3, maxIter = 5)
-      .collect().map(_.toSeq)
-    val b = TopicModelOps.ldaTopics(spark,
-      Tables.documents(spark, dir), "text", k = 3, maxIter = 5)
-      .collect().map(_.toSeq)
+    def topics() = {
+      val c = TopicModelOps.ldaCorpus(Tables.documents(spark, dir), "text")
+      TopicModelOps.describeJoined(spark, TopicModelOps.fitLda(c.vecs, 3, 5),
+        c.vocab, 10).collect().map(_.toSeq)
+    }
+    val a = topics()
+    val b = topics()
+    Caching.releaseAll()
     assert(a.toSeq == b.toSeq)
   }
 
