@@ -22,10 +22,12 @@ import org.apache.spark.sql.DataFrame
   *
   * Lifecycle: `Verify` enables exports into a sibling of its output dir
   * before running any query; each fit's owner calls `save` on every call;
-  * `SparkEntry.oracleSql` (evaluated AFTER the query loop) embeds
-  * `ref(...)` paths into the oracle SQL it dumps. Outside Verify (Bench,
-  * specs, CLI mains) exports are disabled and `save` is a no-op — the hot
-  * path never pays the write.
+  * `SparkEntry.oracleSql` renders on every call and embeds the `ref(...)`
+  * paths written so far (Verify reads it after the query loop). Every
+  * other oracle parameter is derived in the SQL from the tables and
+  * artifacts it reads, so the rendering holds no engine state. Outside
+  * Verify (Bench, specs, CLI mains) exports are disabled and `save` is a
+  * no-op — the hot path never pays the write.
   */
 object Artifacts {
 
@@ -47,13 +49,6 @@ object Artifacts {
     ns.withValue(prefix + "/")(body)
 
   private def full(name: String): String = ns.value + name
-
-  /** The active corpus-flavor namespace ("" outside `namespaced`) — lets
-    * per-corpus knob registries (SimilarityOps.dedupBits) key by flavor so
-    * a realistic face's corpus-scaled parameters can't clobber the base
-    * face's in the late-bound oracle dump.
-    */
-  def currentNamespace: String = ns.value
 
   /** Route subsequent `save` calls to `<base>/<name>` (fresh registry). */
   def enable(base: String): Unit = {

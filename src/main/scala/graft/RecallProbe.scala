@@ -32,6 +32,8 @@ object RecallProbe {
         .select(col("query_id"), col("vec_id")))
     val nBrute = brute.count()
     println(s"[recall] corpus n=$n queries=$nQ brute ground truth $nBrute rows")
+    def recalls(ann: org.apache.spark.sql.DataFrame): Array[Double] =
+      SimilarityOps.recallAtK(brute, ann).collect().map(_.getAs[Double]("recall"))
 
     for (nLists <- Seq(16, 32)) {
       val (indexed0, cents) = SimilarityOps.ivfIndex(corpus, nLists)
@@ -42,12 +44,7 @@ object RecallProbe {
         val t0 = System.nanoTime()
         val ann = SimilarityOps.ivfProbe(indexed, cents, queries, k = 10,
           nProbe = nProbe)
-        val perQuery = brute
-          .join(ann.select(col("query_id"), col("vec_id"), lit(1).as("hit")),
-            Seq("query_id", "vec_id"), "left")
-          .groupBy(col("query_id"))
-          .agg((sum(coalesce(col("hit"), lit(0))) / count(lit(1))).as("recall"))
-          .collect().map(_.getAs[Double]("recall"))
+        val perQuery = recalls(ann)
         val wall = (System.nanoTime() - t0) / 1e9
         // cost: average fraction of corpus vectors inside the probed lists
         val scanned = SimilarityOps.probeAssignments(cents, queries, nProbe)
@@ -81,23 +78,12 @@ object RecallProbe {
         val adcRecall = {
           val w = org.apache.spark.sql.expressions.Window
             .partitionBy(col("query_id")).orderBy(col("adc").desc, col("vec_id"))
-          val top = adc.withColumn("rk", row_number().over(w))
-            .filter(col("rk") <= 10)
-            .select(col("query_id"), col("vec_id"), lit(1).as("hit"))
-          brute.join(top, Seq("query_id", "vec_id"), "left")
-            .groupBy(col("query_id"))
-            .agg((sum(coalesce(col("hit"), lit(0))) / count(lit(1))).as("recall"))
-            .collect().map(_.getAs[Double]("recall"))
+          recalls(adc.withColumn("rk", row_number().over(w)).filter(col("rk") <= 10))
         }
         for (shortlist <- Seq(4, 8, 16)) {
           val t0 = System.nanoTime()
-          val rer = PqOps.pqSearch(corpus, lists, cents, codebooks, codes, ds,
-              queries, k = 10, shortlist = shortlist)
-            .select(col("query_id"), col("vec_id"), lit(1).as("hit"))
-          val perQ = brute.join(rer, Seq("query_id", "vec_id"), "left")
-            .groupBy(col("query_id"))
-            .agg((sum(coalesce(col("hit"), lit(0))) / count(lit(1))).as("recall"))
-            .collect().map(_.getAs[Double]("recall"))
+          val perQ = recalls(PqOps.pqSearch(corpus, lists, cents, codebooks, codes,
+            ds, queries, k = 10, shortlist = shortlist))
           val wall = (System.nanoTime() - t0) / 1e9
           println(f"[pq] cents=$nCents%2d shortlist=${shortlist}%2dx " +
             f"adc_recall mean=${adcRecall.sum / adcRecall.length}%.3f " +

@@ -392,6 +392,14 @@ object SparkEntry {
        |         THEN list_transform(v, x -> 0.0)
        |         ELSE list_transform(v, x -> x / sqrt(${dotSql("v", "v")})) END AS nv
        |  FROM e)""".stripMargin
+  /** Per-subspace query slices over the `q` CTE (query_id, qv) — the
+    * PqOps.pqFit split: each of the PqM subspaces is len(qv) / PqM wide.
+    */
+  private val PQ_QSUB_CTE =
+    s"""qs AS (SELECT query_id, t.m AS m,
+       |         list_slice(qv, t.m * (len(qv) // ${PqOps.PqM}) + 1,
+       |                    (t.m + 1) * (len(qv) // ${PqOps.PqM})) AS qsub
+       |       FROM q, range(0, ${PqOps.PqM}) t(m))""".stripMargin
   /** 256-bin 8-byte-window rolling-hash signature CTE chain (mirror of
     * MediaOps.StubCodec.signature over the UTF-8 bytes of `textExpr`):
     * float-width counts and division (REAL casts), double mean-center then
@@ -442,16 +450,16 @@ object SparkEntry {
        |      * (CAST((48271*((48271*((48271*(($seed + o)*131 + d) + 524287) % $MOD) + 524287) % $MOD) + 524287) % $MOD AS DOUBLE)
        |         - 500000003.0))), (acc, x) -> acc + x))""".stripMargin
 
-  /** The dedup_embed_clusters oracle body, parameterized by the band width
-    * — the base face renders the base table's corpus-scaled bits, the
-    * realistic twin (whose embeddings cardinality differs at sf0.1) its
-    * own. Everything else is shared verbatim so the two faces can never
-    * drift semantically.
+  /** The dedup_embed_clusters oracle body, shared verbatim with the
+    * realistic twin (dedup_embed_real) so the two faces can never drift
+    * semantically. The band width counts whichever `embeddings` the body
+    * reads, so the twin (whose cardinality differs at sf0.1) gets its own.
     */
-  private def embedClustersOracleBody(bits: Int): String =
+  private def embedClustersOracleBody: String =
     s"""WITH $UNIT_CTE,
        |sk AS (SELECT vec_id, nv,
-       |  ${bandsSql("nv", SimilarityOps.DedupBands, bits)} AS bands FROM u),
+       |  ${bandsSql("nv", SimilarityOps.DedupBands, "bits")} AS bands
+       |  FROM u, (SELECT ${bandBitsSql("count(*)")} AS bits FROM embeddings)),
        |bb AS (${bandRowsSql(SimilarityOps.DedupBands)}),
        |cands AS (
        |  SELECT DISTINCT a.vec_id AS vec_a, b2.vec_id AS vec_b
@@ -500,16 +508,21 @@ object SparkEntry {
 
   /** The sim_ivf_balanced oracle body, parameterized by the Artifacts
     * namespace ("" = base corpus, "real/" = the realistic twin): each
-    * flavor renders ITS OWN late-bound operating point
-    * (SimilarityOps.balancedCfg — the split count is data-dependent) and
-    * reads ITS OWN persisted ivf_bal_* artifacts (namespaced saves land
-    * under `real/...`, and Artifacts.ref resolves the prefixed name at
-    * dump time). Everything else is shared verbatim so the two faces can
-    * never drift semantically.
+    * flavor reads ITS OWN persisted ivf_bal_* artifacts (namespaced saves
+    * land under `real/...`, and Artifacts.ref resolves the prefixed name
+    * at render time). The operating point is data-dependent (the split
+    * count), so `cfg` derives it from the exported centroid table: the
+    * list count is its row count and nProbe scales with it exactly as
+    * SimilarityOps.balancedWorlds does. Everything else is shared
+    * verbatim so the two faces can never drift semantically.
     */
-  private def ivfBalancedOracleBody(ns: String): String = {
-    def cfg = SimilarityOps.balancedCfg(ns)
+  private def ivfBalancedOracleBody(ns: String): String =
     s"""WITH $UNIT_CTE,
+       |cfg AS (
+       |  SELECT CAST(n AS VARCHAR) || '/' || CAST(np AS VARCHAR) AS index_cfg, np
+       |  FROM (SELECT count(*) AS n, greatest(1, CAST(round(
+       |          ${SimilarityOps.IvfProbe} * count(*) / ${SimilarityOps.IvfLists}) AS BIGINT)) AS np
+       |        FROM ${Artifacts.ref(s"${ns}ivf_bal_centroids")})),
        |s AS (
        |  SELECT q.vec_id AS query_id, c.vec_id AS vec_id,
        |    ${dotSql("q.nv", "c.nv")} AS cos
@@ -531,7 +544,7 @@ object SparkEntry {
        |  SELECT query_id, ix.vec_id AS vec_id, ${dotSql("qv", "cu.nv")} AS cos
        |  FROM pr JOIN ${Artifacts.ref(s"${ns}ivf_bal_assign")} ix USING (list)
        |  JOIN u cu ON cu.vec_id = ix.vec_id
-       |  WHERE prk <= ${cfg._2} AND query_id <> ix.vec_id),
+       |  WHERE prk <= (SELECT np FROM cfg) AND query_id <> ix.vec_id),
        |an AS (
        |  SELECT query_id, vec_id FROM (
        |    SELECT query_id, vec_id,
@@ -547,13 +560,11 @@ object SparkEntry {
        |SELECT br.query_id, count(*) AS n_brute,
        |  CAST(sum(CASE WHEN an.vec_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hits,
        |  round(sum(CASE WHEN an.vec_id IS NOT NULL THEN 1 ELSE 0 END) / count(*), 4) AS recall,
-       |  '${cfg._1}/${cfg._2}' AS index_cfg,
-       |  res.n_residual
+       |  cfg.index_cfg, res.n_residual
        |FROM br LEFT JOIN an
        |  ON br.query_id = an.query_id AND br.vec_id = an.vec_id
-       |CROSS JOIN res
-       |GROUP BY 1, res.n_residual""".stripMargin
-  }
+       |CROSS JOIN res CROSS JOIN cfg
+       |GROUP BY 1, res.n_residual, cfg.index_cfg""".stripMargin
 
   /** RealisticCorpus.realisticize plus a realistic `embeddings` CTE: the
     * sigCtes chain over the realistic documents up to its centered
@@ -622,9 +633,11 @@ object SparkEntry {
   /** Banded 3-round-LCG hyperplane sketch (mirror of
     * HashKernels.planeBands): band j packs `bits` sign bits of
     * v · plane_{j·bits+i}, planes from f³(p·131 + d) with
-    * f(x) = (48271·x + 524287) mod P, centered at (P−1)/2.
+    * f(x) = (48271·x + 524287) mod P, centered at (P−1)/2. `bits` is an
+    * SQL expression: a literal, or a column of the row (the lambdas read
+    * it from the enclosing row).
     */
-  private def bandsSql(nv: String, bands: Int, bits: Int): String =
+  private def bandsSql(nv: String, bands: Int, bits: String): String =
     s"""list_transform(range(0, $bands), j ->
        |  CAST(list_sum(list_transform(range(0, $bits), i ->
        |    CASE WHEN list_reduce(list_prepend(0.0,
@@ -634,6 +647,15 @@ object SparkEntry {
        |                  - 500000003.0))),
        |           (acc, x) -> acc + x) > 0
        |         THEN CAST(power(2, i) AS BIGINT) ELSE 0 END)) AS BIGINT))""".stripMargin
+
+  /** SimilarityOps.dedupBandBits as an SQL expression over the row count
+    * `n`: the smallest width with 2^bits ≥ DedupBands·n/10, clamped to
+    * [10, 30], in the same double arithmetic (valid in DuckDB and Spark
+    * SQL alike).
+    */
+  private[graft] def bandBitsSql(n: String): String =
+    s"least(30, greatest(10, CAST(ceil(ln(greatest(1.0, " +
+      s"${SimilarityOps.DedupBands} * CAST($n AS DOUBLE) / 10)) / ln(2.0)) AS INT)))"
 
   /** Bucket-min label-propagation CTE chain over bucket table `b`
     * (doc_id, band, band_hash): l0 = identity labels, then `rounds` rounds
@@ -1190,43 +1212,37 @@ object SparkEntry {
       graft.streaming.StreamOps.topKeywordsQuery(s, d)),
   )
 
-  def oracleSql: Map[String, String] = baseOracleSql ++ Map(
+  /** The DuckDB oracle of each face, rendered on every call: artifact refs
+    * resolve to what has been saved so far, and every other parameter is
+    * derived in the SQL from the tables and artifacts it reads, so the
+    * text does not depend on which faces ran before.
+    */
+  def oracleSql: Map[String, String] = {
+    val base = baseOracleSql
     // realistic-fixture faces: base oracle bodies verbatim under the
     // realistic `documents` CTE — see RealisticCorpus
-    "quality_gopher_real" ->
-      RealisticCorpus.realisticize(baseOracleSql("quality_gopher_rules")),
-    "select_dsir_real" ->
-      RealisticCorpus.realisticize(baseOracleSql("select_dsir")),
-    "curation_funnel_real" ->
-      RealisticCorpus.realisticize(baseOracleSql("curation_funnel_full")),
-    "search_bm25_real" ->
-      RealisticCorpus.realisticize(baseOracleSql("search_bm25")),
-    "search_percolate_real" ->
-      RealisticCorpus.realisticize(baseOracleSql("search_percolate")),
-    "search_phrase_real" ->
-      RealisticCorpus.realisticize(baseOracleSql("search_phrase")),
-    "rag_chunk_topk_real" ->
-      RealisticCorpus.realisticize(baseOracleSql("rag_chunk_topk")),
-    "stream_ingest_real" ->
-      RealisticCorpus.realisticize(baseOracleSql("stream_ingest_gate")),
-    "stream_ingest_full_real" ->
-      RealisticCorpus.realisticize(baseOracleSql("stream_ingest_full")),
-    // realistic dense tier: embed clusters over the twin's hash-projected
-    // embeddings (own corpus-scaled bits), media keep-best over the twin
-    // documents — base bodies shared/verbatim
-    "dedup_embed_real" ->
-      realisticizeEmbeddings(
-        embedClustersOracleBody(SimilarityOps.dedupBits("real/"))),
-    "sim_ivf_balanced_real" ->
-      realisticizeEmbeddings(ivfBalancedOracleBody("real/")),
-    "media_keep_best_real" ->
-      RealisticCorpus.realisticize(baseOracleSql("media_keep_best")),
-    "dedup_minhash_real" ->
-      RealisticCorpus.realisticize(baseOracleSql("dedup_minhash_clusters")),
-    "media_dup_clusters_real" ->
-      RealisticCorpus.realisticize(baseOracleSql("media_dup_clusters")))
+    val twins = Seq(
+      "quality_gopher_real" -> "quality_gopher_rules",
+      "select_dsir_real" -> "select_dsir",
+      "curation_funnel_real" -> "curation_funnel_full",
+      "search_bm25_real" -> "search_bm25",
+      "search_percolate_real" -> "search_percolate",
+      "search_phrase_real" -> "search_phrase",
+      "rag_chunk_topk_real" -> "rag_chunk_topk",
+      "stream_ingest_real" -> "stream_ingest_gate",
+      "stream_ingest_full_real" -> "stream_ingest_full",
+      "media_keep_best_real" -> "media_keep_best",
+      "dedup_minhash_real" -> "dedup_minhash_clusters",
+      "media_dup_clusters_real" -> "media_dup_clusters")
+    base ++ twins.map { case (twin, face) =>
+      twin -> RealisticCorpus.realisticize(base(face)) } ++ Map(
+      // realistic dense tier: the base bodies over the twin's
+      // hash-projected embeddings
+      "dedup_embed_real" -> realisticizeEmbeddings(embedClustersOracleBody),
+      "sim_ivf_balanced_real" -> realisticizeEmbeddings(ivfBalancedOracleBody("real/")))
+  }
 
-  private lazy val baseOracleSql: Map[String, String] = Map(
+  private def baseOracleSql: Map[String, String] = Map(
     // RAG grounding: chunk windows re-derived with pure arithmetic, chunk
     // ids packed as doc_id*RagMaxChunks+chunk_no so the sigCtes chain
     // (which keys on `doc_id`) runs unchanged over the chunk CTE; the
@@ -1659,7 +1675,8 @@ object SparkEntry {
     "media_dup_clusters" ->
       s"""WITH ${sigCtes("s", "text")},
          |sk AS (SELECT doc_id AS vec_id, nv,
-         |  ${bandsSql("nv", SimilarityOps.DedupBands, graft.multimodal.MediaOps.lastMediaBits)} AS bands FROM su),
+         |  ${bandsSql("nv", SimilarityOps.DedupBands, "bits")} AS bands
+         |  FROM su, (SELECT ${bandBitsSql("count(*)")} AS bits FROM documents)),
          |bb AS (${bandRowsSql(SimilarityOps.DedupBands)}),
          |bc AS (SELECT band, band_val, count(*) AS m, min(vec_id) AS anchor
          |       FROM bb GROUP BY 1, 2),
@@ -1701,7 +1718,8 @@ object SparkEntry {
       s"""WITH ${sigCtes("s", "text")},
          |${sigCtes("c", s"substring(text, 1, ${graft.multimodal.MediaOps.CaptionChars})")},
          |sk AS (SELECT doc_id AS vec_id, nv,
-         |  ${bandsSql("nv", SimilarityOps.DedupBands, graft.multimodal.MediaOps.lastMediaBits)} AS bands FROM su),
+         |  ${bandsSql("nv", SimilarityOps.DedupBands, "bits")} AS bands
+         |  FROM su, (SELECT ${bandBitsSql("count(*)")} AS bits FROM documents)),
          |bb AS (${bandRowsSql(SimilarityOps.DedupBands)}),
          |bc AS (SELECT band, band_val, count(*) AS m, min(vec_id) AS anchor
          |       FROM bb GROUP BY 1, 2),
@@ -4191,7 +4209,8 @@ object SparkEntry {
     "dedup_embed_lsh" ->
       s"""WITH $UNIT_CTE,
          |sk AS (SELECT vec_id, label, nv,
-         |  ${bandsSql("nv", SimilarityOps.DedupBands, SimilarityOps.dedupBits(""))} AS bands FROM u),
+         |  ${bandsSql("nv", SimilarityOps.DedupBands, "bits")} AS bands
+         |  FROM u, (SELECT ${bandBitsSql("count(*)")} AS bits FROM embeddings)),
          |b AS (${bandRowsSql(SimilarityOps.DedupBands)}),
          |cands AS (
          |  SELECT DISTINCT a.vec_id AS vec_a, b2.vec_id AS vec_b
@@ -4210,7 +4229,7 @@ object SparkEntry {
     // embedding tier's cluster view, same shape as the minhash/simhash ones
     // (body shared with dedup_embed_real, which renders the twin's bits)
     "dedup_embed_clusters" ->
-      embedClustersOracleBody(SimilarityOps.dedupBits("")),
+      embedClustersOracleBody,
     // SemDeDup: edges = within-kmeans-cluster cosine pairs (assignment from
     // the persisted fit, dots the exact left fold), same propagation
     // unroll, keeper = min centroid-cosine against the persisted centroid
@@ -4600,7 +4619,7 @@ object SparkEntry {
     "sim_lsh_ann" ->
       s"""WITH $UNIT_CTE,
          |sk AS (SELECT vec_id, nv,
-         |  ${bandsSql("nv", SimilarityOps.AnnBands, SimilarityOps.AnnBandBits)} AS bands FROM u),
+         |  ${bandsSql("nv", SimilarityOps.AnnBands, s"${SimilarityOps.AnnBandBits}")} AS bands FROM u),
          |b AS (${bandRowsSql(SimilarityOps.AnnBands)}),
          |fl AS (SELECT unnest(${SimilarityOps.AnnFlips.mkString("[", ", ", "]")}) AS flip),
          |qp AS (
@@ -4637,7 +4656,7 @@ object SparkEntry {
          |    FROM s)
          |  WHERE rk <= 10),
          |sk AS (SELECT vec_id, nv,
-         |  ${bandsSql("nv", SimilarityOps.AnnBands, SimilarityOps.AnnBandBits)} AS bands FROM u),
+         |  ${bandsSql("nv", SimilarityOps.AnnBands, s"${SimilarityOps.AnnBandBits}")} AS bands FROM u),
          |b AS (${bandRowsSql(SimilarityOps.AnnBands)}),
          |fl AS (SELECT unnest(${SimilarityOps.AnnFlips.mkString("[", ", ", "]")}) AS flip),
          |qp AS (
@@ -4706,9 +4725,8 @@ object SparkEntry {
          |  ON br.query_id = an.query_id AND br.vec_id = an.vec_id
          |GROUP BY 1""".stripMargin,
     // Balanced-IVF recall gauge: same shape as sim_ivf_recall over the
-    // ivf_bal_* artifacts at the nProbe-scaled operating point (knobs are
-    // data-dependent, late-bound per-namespace from balancedCfg at dump
-    // time — the dedupBitsByNs pattern); n_residual re-derives the
+    // ivf_bal_* artifacts at the nProbe-scaled operating point (derived
+    // from the exported centroid table's row count); n_residual re-derives the
     // guard's give-up indicator from the persisted assignment (lists
     // still over the 2x-fair-share cap). Body shared verbatim with the
     // realistic twin via ivfBalancedOracleBody.
@@ -4728,10 +4746,7 @@ object SparkEntry {
          |  SELECT query_id, lx.vec_id AS vec_id
          |  FROM pr JOIN ${Artifacts.ref("pq_lists")} lx USING (list)
          |  WHERE prk <= ${SimilarityOps.IvfProbe} AND query_id <> lx.vec_id),
-         |qs AS (SELECT query_id, t.m AS m,
-         |         list_slice(qv, t.m * ${PqOps.lastPqDs} + 1,
-         |                    t.m * ${PqOps.lastPqDs} + ${PqOps.lastPqDs}) AS qsub
-         |       FROM q, range(0, ${PqOps.PqM}) t(m)),
+         |$PQ_QSUB_CTE,
          |qd AS (SELECT query_id, qs.m AS m, cb.cid AS cid,
          |         ${dotSql("qsub", "cb.centroid")} AS d
          |       FROM qs JOIN ${Artifacts.ref("pq_codebooks")} cb ON cb.m = qs.m),
@@ -4782,10 +4797,7 @@ object SparkEntry {
          |  SELECT query_id, lx.vec_id AS vec_id
          |  FROM pr JOIN ${Artifacts.ref("pq_lists")} lx USING (list)
          |  WHERE prk <= ${SimilarityOps.IvfProbe} AND query_id <> lx.vec_id),
-         |qs AS (SELECT query_id, t.m AS m,
-         |         list_slice(qv, t.m * ${PqOps.lastPqDs} + 1,
-         |                    t.m * ${PqOps.lastPqDs} + ${PqOps.lastPqDs}) AS qsub
-         |       FROM q, range(0, ${PqOps.PqM}) t(m)),
+         |$PQ_QSUB_CTE,
          |qd AS (SELECT query_id, qs.m AS m, cb.cid AS cid,
          |         ${dotSql("qsub", "cb.centroid")} AS d
          |       FROM qs JOIN ${Artifacts.ref("pq_codebooks")} cb ON cb.m = qs.m),

@@ -202,11 +202,6 @@ object MediaOps {
     }
   }
 
-  /** Band width the last media dedup query used (late-bound for the oracle
-    * dump, same pattern as SimilarityOps.lastDedupBits).
-    */
-  @volatile var lastMediaBits: Int = graft.operators.SimilarityOps.DedupBandBits
-
   /** Cross-query registry of the media tier's shared derivations — FIVE
     * faces (`media_dup_clusters`, `media_keep_best`, `media_text_align`,
     * `media_text_search`, `media_caption_gate`) consume the same
@@ -222,15 +217,7 @@ object MediaOps {
     */
   private val mediaCache = graft.Caching.Registry[DataFrame]("media.corpus")
 
-  /** Corpus-scaled band width per dirKey — computed once per corpus
-    * version alongside the cached frame (before r15 every signatureCorpus
-    * call re-ran a documents count() job to rederive the same bits, a
-    * per-call scan across all five media faces the registry was meant to
-    * amortize).
-    */
-  private val bitsCache = graft.Caching.Registry[Int]("media.bits")
-
-  def clearMediaCache(): Unit = { mediaCache.clear(); bitsCache.clear() }
+  def clearMediaCache(): Unit = mediaCache.clear()
 
   /** Built once per key (Caching.Registry) so concurrent first calls
     * can't both run the codec pass and leak the losing persisted frame.
@@ -244,20 +231,16 @@ object MediaOps {
     * (vec_id, label, nv, bands) — unit-normalized signature plus the
     * corpus-scaled band sketch. From here the WHOLE embedding machinery
     * (lshCosinePairs, label propagation, ANN) applies unchanged.
-    * Registry-shared: one codec pass per corpus per session.
+    * Registry-shared: one codec pass and one documents count per corpus
+    * version; the oracle renders the same width from the documents row
+    * count it reads.
     */
   def signatureCorpus(spark: SparkSession, dir: String): DataFrame = {
     import graft.functions.HashExpressions.{centerVector, unitVector}
     import graft.functions.VectorFunctions.asDouble
     import graft.operators.SimilarityOps
-    val dirKey = graft.Fingerprint.dirKey(spark, dir)
-    // a registry, not bare getOrElseUpdate: two concurrent first calls
-    // would both run the documents count() job (benign value-wise, a
-    // wasted scan cost-wise)
-    val bits = bitsCache.get(dirKey)(
-      SimilarityOps.dedupBandBits(Tables.documents(spark, dir).count()))
-    lastMediaBits = bits
-    cached(s"mcorpus:$dirKey") {
+    cached(s"mcorpus:${graft.Fingerprint.dirKey(spark, dir)}") {
+      val bits = SimilarityOps.dedupBandBits(Tables.documents(spark, dir).count())
       // center-then-normalize: count histograms live in the positive orthant
       // where every cosine is ≥ 0 and hyperplane bands barely cut — centering
       // spreads the corpus over the sphere (measured: cross-doc median cos

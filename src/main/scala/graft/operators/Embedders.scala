@@ -65,7 +65,7 @@ object Embedders {
 
   /** Shared unit-vector Word2Vec corpus over the documents fixture. */
   private def w2vCorpus(spark: SparkSession, dir: String): DataFrame = {
-    val corpus = cache.get(s"w2v:$dir") {
+    val corpus = cache.get(s"w2v:${graft.Fingerprint.dirKey(spark, dir)}") {
       val docs = Tables.documents(spark, dir)
       new Word2VecEmbedder().embed(docs, "doc_id", "text")
         .select(col("doc_id").as("vec_id"), unitVector(col("embedding")).as("nv"))
@@ -98,7 +98,7 @@ object Embedders {
     // the seeded 100-doc fit joins the fitted-embedding registry like every
     // other deterministic fit (w2vCorpus, the LDA/KMeans caches) — repeat
     // invocations re-read the persisted vectors instead of re-training
-    val w2v = cache.get(s"w2v100:$dir")(
+    val w2v = cache.get(s"w2v100:${graft.Fingerprint.dirKey(spark, dir)}")(
         new Word2VecEmbedder().embed(docs, "doc_id", "text").persist())
       .withColumn("embedder", lit("word2vec"))
     // the w2v side's fitted vectors export for the oracle; the precomputed

@@ -206,16 +206,10 @@ object IndexMaintOps {
     val (centsA, maintained, centsB, indexedB) = driftWorlds(spark, dir)
     val queries = neuC.filter(col("vec_id") < 50)
     val brute = SimilarityOps.bruteForceTopK(neuC, queries, 10)
-      .select(col("query_id"), col("vec_id"))
     def tierRecall(index: DataFrame, cents: DataFrame, tier: String): DataFrame = {
       val withNv = index.join(neuC.select(col("vec_id"), col("nv")), "vec_id")
-      val ann = SimilarityOps.ivfProbe(withNv, cents, queries, k = 10,
-          nProbe = SimilarityOps.IvfProbe)
-        .select(col("query_id"), col("vec_id"), lit(1).as("hit"))
-      brute.join(ann, Seq("query_id", "vec_id"), "left")
-        .groupBy(col("query_id"))
-        .agg(count(lit(1)).as("n_brute"),
-          sum(coalesce(col("hit"), lit(0))).as("n_hits"))
+      SimilarityOps.recallAtK(brute, SimilarityOps.ivfProbe(withNv, cents,
+          queries, k = 10, nProbe = SimilarityOps.IvfProbe))
         .agg(count(lit(1)).cast("long").as("n_queries"),
           (sum(col("n_hits")) / sum(col("n_brute"))).as("avg_r"),
           min(col("n_hits") / col("n_brute")).as("min_r"))

@@ -60,11 +60,6 @@ object PqOps {
     */
   val PqShortlist = 8
 
-  /** Subspace width the last PQ fit actually used — read by the oracle-SQL
-    * dump (rendered AFTER the query loop; the lastDedupBits pattern).
-    */
-  @volatile var lastPqDs: Int = 8
-
   /** Fit the per-subspace codebooks (seeded KMeans, one small fit per
     * subspace) and assign every corpus vector its M codes RELATIONALLY in
     * one pass: explode subvectors, broadcast-join the codebooks, take
@@ -80,7 +75,6 @@ object PqOps {
     import spark.implicits._
     val dim = corpus.select(size(col("nv"))).head().getInt(0)
     val ds = dim / PqM
-    lastPqDs = ds
     // the M subspace fits are independent seeded KMeans runs — forked so
     // their Spark jobs run side by side (the lda_grid pattern): run serially
     // they dominated the PQ queries (each small fit pays ~20 iterations of

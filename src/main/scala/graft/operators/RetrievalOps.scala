@@ -1158,16 +1158,9 @@ object RetrievalOps {
     val (corpus, indexed, cents) = ragWorlds(spark, dir)
     val probes = corpus.filter(col("doc_id") < 8 && col("chunk_no") === 0)
       .select(col("vec_id"), col("nv"))
-    val brute = SimilarityOps.bruteForceTopK(corpus, probes, 10)
-      .select(col("query_id"), col("vec_id"))
-    val ann = SimilarityOps.ivfProbe(indexed, cents, probes, k = 10,
-        nProbe = SimilarityOps.IvfProbe)
-      .select(col("query_id"), col("vec_id"), lit(1).as("hit"))
-    brute.join(ann, Seq("query_id", "vec_id"), "left")
-      .groupBy(col("query_id"))
-      .agg(count(lit(1)).as("n_brute"),
-        sum(coalesce(col("hit"), lit(0))).as("n_hits"))
-      .withColumn("recall", round(col("n_hits") / col("n_brute"), 4))
+    SimilarityOps.recallAtK(SimilarityOps.bruteForceTopK(corpus, probes, 10),
+        SimilarityOps.ivfProbe(indexed, cents, probes, k = 10,
+          nProbe = SimilarityOps.IvfProbe))
       .withColumn("index_cfg", concat_ws("/",
         lit(SimilarityOps.IvfLists), lit(SimilarityOps.IvfProbe)))
   }

@@ -52,7 +52,10 @@ object SimilarityOps {
     */
   val DedupBands = 16
 
-  /** Default width at fixture scale; queries override via dedupBandBits. */
+  /** Default width at fixture scale; the dedup faces scale it with
+    * dedupBandBits, and their oracles render the same formula over the
+    * row count they read (SparkEntry.bandBitsSql).
+    */
   val DedupBandBits = 12
 
   /** log2-scaled band width targeting ~10 random-collision candidates per
@@ -64,25 +67,6 @@ object SimilarityOps {
     val b = math.ceil(math.log(target) / math.log(2.0)).toInt
     math.min(30, math.max(10, b))
   }
-
-  /** Band width the last dedup-tier query actually used — read by the
-    * oracle-SQL dump, which is rendered AFTER the query loop (the
-    * Artifacts pattern: late-bound so Spark and DuckDB agree per run).
-    */
-  @volatile var lastDedupBits: Int = DedupBandBits
-
-  /** Per-corpus-flavor band widths, keyed by the Artifacts namespace the
-    * query ran under ("" = base, "real/" = the realistic twin). One global
-    * is not enough once two corpora of DIFFERENT cardinality run in the
-    * same Verify session: at sf0.1 the twin's 5000 doc-derived embeddings
-    * scale to a wider band than the base table's 2000, and whichever face
-    * ran last would clobber the other's oracle rendering.
-    */
-  private val dedupBitsByNs =
-    scala.collection.concurrent.TrieMap.empty[String, Int]
-
-  /** Band width the last dedup-tier query under namespace `ns` used. */
-  def dedupBits(ns: String): Int = dedupBitsByNs.getOrElse(ns, lastDedupBits)
 
   /** ANN tier: narrower bands + Hamming ≤ 2 multiprobe on the query side —
     * sized for moderate-similarity top-k on near-orthogonal corpora.
@@ -196,26 +180,22 @@ object SimilarityOps {
     * tier). The band columns are "a pre-materialized index table" at
     * 100 TB by this file's own contract (built once per corpus version,
     * probed by every ANN/dedup face), yet each face re-ran the
-    * 192-hyperplane sketch scan per invocation. Values carry the band
-    * width used so the per-namespace oracle knob is re-recorded on every
-    * access, not just the building one.
+    * 192-hyperplane sketch scan per invocation.
     */
-  private val bandsCache = graft.Caching.Registry[(DataFrame, Int)]("sim.bands")
+  private val bandsCache = graft.Caching.Registry[DataFrame]("sim.bands")
 
   private def bandedCorpus(spark: SparkSession, dir: String, tier: String,
-                           bands: Int, bitsOf: DataFrame => Int)
-      : (DataFrame, Int) =
+                           bands: Int, bitsOf: DataFrame => Int): DataFrame =
     bandsCache.get(s"${graft.Fingerprint.dirKey(spark, dir)}|$tier") {
       val embs = Tables.embeddings(spark, dir)
-      val bits = bitsOf(embs)
-      val df = withBands(unitCorpus(embs), bands, bits).persist()
+      val df = withBands(unitCorpus(embs), bands, bitsOf(embs)).persist()
       df.count() // materialize before the building query's scope ends
-      (df, bits)
+      df
     }
 
   /** Query: LSH ANN top-3 for the first 50 vectors. */
   def lshAnn(spark: SparkSession, dir: String): DataFrame = {
-    val (corpus, _) = bandedCorpus(spark, dir, "ann", AnnBands, _ => AnnBandBits)
+    val corpus = bandedCorpus(spark, dir, "ann", AnnBands, _ => AnnBandBits)
     lshTopK(corpus, corpus.filter(col("vec_id") < 50), 3)
   }
 
@@ -226,20 +206,26 @@ object SimilarityOps {
     * deterministic, so the recall itself sits under the exact oracle.
     */
   def annRecall(spark: SparkSession, dir: String): DataFrame = {
-    val (corpus, _) = bandedCorpus(spark, dir, "ann", AnnBands, _ => AnnBandBits)
+    val corpus = bandedCorpus(spark, dir, "ann", AnnBands, _ => AnnBandBits)
     val queries = corpus.filter(col("vec_id") < 5)
-    val brute = bruteForceTopK(corpus, queries, 10)
-      .select(col("query_id"), col("vec_id"))
-    val ann = lshTopK(corpus, queries, 10)
-      .select(col("query_id"), col("vec_id"), lit(1).as("hit"))
-    brute.join(ann, Seq("query_id", "vec_id"), "left")
+    recallAtK(bruteForceTopK(corpus, queries, 10), lshTopK(corpus, queries, 10))
+      .withColumn("index_cfg",
+        concat_ws("x", lit(AnnBands), lit(AnnBandBits)))
+  }
+
+  /** Per-query recall@k of an approximate top-k against the exact one —
+    * (query_id, n_brute, n_hits, recall). Both sides carry
+    * (query_id, vec_id); every recall gauge (LSH, IVF, balanced IVF, RAG,
+    * drift tiers) reports through this one join.
+    */
+  private[graft] def recallAtK(brute: DataFrame, ann: DataFrame): DataFrame =
+    brute.select(col("query_id"), col("vec_id"))
+      .join(ann.select(col("query_id"), col("vec_id"), lit(1).as("hit")),
+        Seq("query_id", "vec_id"), "left")
       .groupBy(col("query_id"))
       .agg(count(lit(1)).as("n_brute"),
         sum(coalesce(col("hit"), lit(0))).as("n_hits"))
       .withColumn("recall", round(col("n_hits") / col("n_brute"), 4))
-      .withColumn("index_cfg",
-        concat_ws("x", lit(AnnBands), lit(AnnBandBits)))
-  }
 
   /** Query: recall@10 of the IVF tier against the exact brute-force answer
     * on the probe query set — the IVF twin of `annRecall`, so BOTH index
@@ -251,51 +237,13 @@ object SimilarityOps {
   def ivfRecall(spark: SparkSession, dir: String): DataFrame = {
     val (corpus, indexed, cents) = ivfWorld(spark, dir)
     val queries = corpus.filter(col("vec_id") < 5)
-    val brute = bruteForceTopK(corpus, queries, 10)
-      .select(col("query_id"), col("vec_id"))
     graft.Artifacts.save("ivf_assign")(indexed.select("vec_id", "list"))
     graft.Artifacts.save("ivf_centroids")(cents)
-    val ann = ivfProbe(indexed, cents, queries, k = 10, nProbe = IvfProbe)
-      .select(col("query_id"), col("vec_id"), lit(1).as("hit"))
-    brute.join(ann, Seq("query_id", "vec_id"), "left")
-      .groupBy(col("query_id"))
-      .agg(count(lit(1)).as("n_brute"),
-        sum(coalesce(col("hit"), lit(0))).as("n_hits"))
-      .withColumn("recall", round(col("n_hits") / col("n_brute"), 4))
+    recallAtK(bruteForceTopK(corpus, queries, 10),
+        ivfProbe(indexed, cents, queries, k = 10, nProbe = IvfProbe))
       .withColumn("index_cfg", concat_ws("/", lit(IvfLists), lit(IvfProbe)))
   }
 
-  /** Per-corpus-flavor balanced operating points — (nLists after
-    * splitting, nProbe scaled to it) — keyed by the Artifacts namespace
-    * the query ran under ("" = base, "real/" = the realistic twin). The
-    * oracle SQL is assembled AFTER the query loop (Verify dumps last), so
-    * embedding these data-dependent knobs into the oracle is exact, the
-    * same late-binding pattern as MediaOps.lastMediaBits. Namespace-keyed
-    * like `dedupBitsByNs` (VERDICT r17 #2): the split count is
-    * data-DEPENDENT (the twin's planted dup family concentrates mass into
-    * hot lists the fair-share splitter must break), so a single global
-    * would let whichever corpus ran last clobber the other's oracle
-    * rendering. Spec-pinned in KnobNamespaceSpec.
-    */
-  private val balancedCfgByNs =
-    scala.collection.concurrent.TrieMap.empty[String, (Int, Int)]
-
-  /** Operating point the last balanced face under namespace `ns` used. */
-  def balancedCfg(ns: String): (Int, Int) =
-    balancedCfgByNs.getOrElse(ns, (IvfLists, IvfProbe))
-
-  /** Query: recall@10 of the BALANCED IVF tier at the nProbe-scaled
-    * operating point. `ivfRecall`'s twin with the hot-list guard applied:
-    * the guard splits oversized lists (the sf0.01 embeddings naturally
-    * hold a >2×-fair-share list at 32 lists, so this exercises a REAL
-    * split, not a planted one), and the probe scales nProbe with the
-    * post-split list count so the same corpus FRACTION is probed — the
-    * deployment recipe DEPLOY's dense-skew table prescribes (fixed nProbe
-    * over more lists probes a smaller fraction and silently costs
-    * recall). `n_residual` carries the give-up indicator from
-    * ivfIndexBalancedReport, re-derived by the oracle as the count of
-    * persisted lists still above the fair-share cap.
-    */
   /** Stored-index registry for the balanced worlds — (corpus, indexed,
     * centroids, residual count, operating point), all persisted. The
     * balanced index is a STORED table in production (built once per
@@ -355,22 +303,27 @@ object SimilarityOps {
     worlds
   }
 
+  /** Query: recall@10 of the BALANCED IVF tier at the nProbe-scaled
+    * operating point. `ivfRecall`'s twin with the hot-list guard applied:
+    * the guard splits oversized lists (the sf0.01 embeddings naturally
+    * hold a >2×-fair-share list at 32 lists, so this exercises a REAL
+    * split, not a planted one), and the probe scales nProbe with the
+    * post-split list count so the same corpus FRACTION is probed — the
+    * deployment recipe DEPLOY's dense-skew table prescribes (fixed nProbe
+    * over more lists probes a smaller fraction and silently costs
+    * recall). `n_residual` carries the give-up indicator from
+    * ivfIndexBalancedReport, re-derived by the oracle as the count of
+    * persisted lists still above the fair-share cap. The operating point
+    * is data-dependent (the twin's planted dup family forces more splits),
+    * so the oracle derives it from the exported centroid table's row
+    * count rather than from a constant.
+    */
   def ivfRecallBalanced(spark: SparkSession, dir: String): DataFrame = {
-    val (corpus, indexed, cents, nResidual, cfg) = balancedWorlds(spark, dir)
-    // record the operating point on HITS too: the late-bound oracle knob
-    // must reflect this namespace's corpus whichever call materialized it
-    balancedCfgByNs(graft.Artifacts.currentNamespace) = cfg
-    val (nListsAfter, nProbeScaled) = cfg
+    val (corpus, indexed, cents, nResidual, (nListsAfter, nProbeScaled)) =
+      balancedWorlds(spark, dir)
     val queries = corpus.filter(col("vec_id") < 5)
-    val brute = bruteForceTopK(corpus, queries, 10)
-      .select(col("query_id"), col("vec_id"))
-    val ann = ivfProbe(indexed, cents, queries, k = 10, nProbe = nProbeScaled)
-      .select(col("query_id"), col("vec_id"), lit(1).as("hit"))
-    brute.join(ann, Seq("query_id", "vec_id"), "left")
-      .groupBy(col("query_id"))
-      .agg(count(lit(1)).as("n_brute"),
-        sum(coalesce(col("hit"), lit(0))).as("n_hits"))
-      .withColumn("recall", round(col("n_hits") / col("n_brute"), 4))
+    recallAtK(bruteForceTopK(corpus, queries, 10),
+        ivfProbe(indexed, cents, queries, k = 10, nProbe = nProbeScaled))
       .withColumn("index_cfg",
         concat_ws("/", lit(nListsAfter), lit(nProbeScaled)))
       .withColumn("n_residual", lit(nResidual))
@@ -690,19 +643,13 @@ object SimilarityOps {
     lshCosinePairs(dedupCorpus(spark, dir), minCosine = 0.4)
   }
 
-  /** Unit corpus with corpus-scaled dedup bands (records the width used so
-    * the oracle renders the same sketch). Registry-backed (`sim.bands`):
-    * the late-bound width knob is re-recorded per access from the stored
-    * value, so a registry hit under a different namespace still renders
-    * its own oracle bits.
+  /** Unit corpus with corpus-scaled dedup bands, registry-backed
+    * (`sim.bands`). The oracle renders the same width from the
+    * embeddings row count it reads.
     */
-  private def dedupCorpus(spark: SparkSession, dir: String): DataFrame = {
-    val (banded, bits) = bandedCorpus(spark, dir, "dedup", DedupBands,
+  private def dedupCorpus(spark: SparkSession, dir: String): DataFrame =
+    bandedCorpus(spark, dir, "dedup", DedupBands,
       embs => dedupBandBits(embs.count()))
-    lastDedupBits = bits
-    dedupBitsByNs(graft.Artifacts.currentNamespace) = bits
-    banded
-  }
 
   /** Diagnostic twin of the embed pair face's cap (the embedding sibling of
     * DedupOps.bucketTruncationReport): the (band, band_val) buckets

@@ -221,18 +221,15 @@ object TopicModelOps {
     * mean + `noiseSigmas`·σ of their cluster's distance distribution are
     * relabeled −1. Fully distributed: per-dim centroid means via one
     * explode+groupBy (k·dims rows), thresholds via one more agg, both
-    * broadcast back.
+    * broadcast back. Returns (pre-noise assignment (vec_id, cluster, p)
+    * with the PCA coordinates `p`, noise-relabeled assignment): the oracle
+    * re-derives the centroids, distances and relabel from the first.
     */
   def clusterEmbeddingsWithNoise(embs: DataFrame, k: Int, pcaDims: Int = 5,
-                                 noiseSigmas: Double = 2.0,
-                                 artifactName: Option[String] = None): DataFrame = {
+                                 noiseSigmas: Double = 2.0): (DataFrame, DataFrame) = {
     val assigned = graft.Caching.track(
       clusterEmbeddings(embs, k, pcaDims)
         .withColumn("p", vector_to_array(col("pca"))))
-    // pre-noise assignment + PCA coordinates: the oracle re-derives the
-    // centroids, distances, and the mean+2σ relabel entirely in SQL
-    artifactName.foreach(n => graft.Artifacts.save(n)(
-      assigned.select("vec_id", "cluster", "p")))
     val cents = assigned
       .select(col("cluster"), posexplode(col("p")).as(Seq("dim", "x")))
       .groupBy("cluster", "dim").agg(avg("x").as("m"))
@@ -245,11 +242,11 @@ object TopicModelOps {
         "sqrt(aggregate(zip_with(p, centroid, (a, b) -> (a - b) * (a - b)), 0D, (acc, x) -> acc + x))")))
     val thr = withDist.groupBy("cluster")
       .agg((avg("d") + stddev_pop(col("d")) * noiseSigmas).as("thr"))
-    withDist
+    (assigned.select("vec_id", "cluster", "p"), withDist
       .join(broadcast(thr), "cluster")
       .withColumn("cluster",
         when(col("d") > col("thr"), lit(-1)).otherwise(col("cluster")))
-      .select("vec_id", "cluster", "label", "embedding")
+      .select("vec_id", "cluster", "label", "embedding"))
   }
 
   /** Shared noise-labeled assignment (the cluster path's default — the pure
@@ -257,12 +254,14 @@ object TopicModelOps {
     */
   private[operators] def fittedNoisyClusters(spark: SparkSession, dir: String,
                                              k: Int): DataFrame = {
-    val noisy = cached(s"kmNoise:${graft.Fingerprint.dirKey(spark, dir)}:$k") {
-      clusterEmbeddingsWithNoise(Tables.embeddings(spark, dir), k,
-        artifactName = Some("kmeans_pca_assign")).persist()
-    }
-    // post-noise labels: bertopic_keywords' oracle starts here (the noise
-    // rule itself is verified once, by cluster_noise's pca_assign oracle)
+    val (assigned, noisy) =
+      cached(s"kmNoise:${graft.Fingerprint.dirKey(spark, dir)}:$k") {
+        val (a, n) = clusterEmbeddingsWithNoise(Tables.embeddings(spark, dir), k)
+        (a, n.persist())
+      }
+    // pre-noise assignment: cluster_noise's oracle re-derives the noise
+    // rule from it; post-noise labels: bertopic_keywords' oracle starts there
+    graft.Artifacts.save("kmeans_pca_assign")(assigned)
     graft.Artifacts.save("kmeans_noisy_assign")(
       noisy.select("vec_id", "cluster"))
     noisy

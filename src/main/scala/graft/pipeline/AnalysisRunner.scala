@@ -94,7 +94,7 @@ object AnalysisRunner {
                          outDir: String, k: Int = 8,
                          format: String = "parquet"): Unit = graft.Caching.scoped {
     PreprocessPipeline.requireColumns(docs, Seq(idCol, textCol))
-    val clusters = TopicModelOps.clusterEmbeddingsWithNoise(embeddings, k)
+    val clusters = TopicModelOps.clusterEmbeddingsWithNoise(embeddings, k)._2
       .select(col("vec_id").as(idCol), col("cluster"))
     val clustered = graft.Caching.track(docs.join(clusters, idCol))
     // noise docs (cluster −1) stay in the size report but are excluded from

@@ -50,7 +50,8 @@ class ArtifactsSpec extends SparkSuite {
       "sim_ivf_drift" -> Seq("ivf_drift_cents_frozen", "ivf_drift_index_frozen",
         "ivf_drift_cents_retrained", "ivf_drift_index_retrained"),
       "sim_ivf_balanced" -> Seq("ivf_bal_assign", "ivf_bal_centroids"),
-      "rag_chunk_topk" -> Seq("rag_ivf_assign", "rag_ivf_centroids"))
+      "rag_chunk_topk" -> Seq("rag_ivf_assign", "rag_ivf_centroids"),
+      "cluster_noise" -> Seq("kmeans_pca_assign", "kmeans_noisy_assign"))
     def misses: Map[String, Long] =
       Caching.registryStatsSnapshot().map(s => s._1 -> s._3).toMap
     // one call of face q: its input files, its rows as a frame, and the

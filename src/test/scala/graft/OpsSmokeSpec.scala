@@ -28,6 +28,28 @@ class OpsSmokeSpec extends SparkSuite {
     assert((faces -- oracles).isEmpty, s"queries without oracleSql: ${faces -- oracles}")
   }
 
+  test("no object-level var in operators, multimodal, streaming or functions sources") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    // the scanner itself: only a var of an object body counts
+    assert(OpsSmokeSpec.objectVarLines(
+      """object A {
+        |  @volatile private var x = "{" // }
+        |  def f: Int = { var y = 2; y }
+        |  object B { var z = '}' }
+        |  /* object D { var d = 5 } */
+        |}
+        |class C(var c: Int) { var w = 4 }""".stripMargin) === Seq(2, 4))
+    val files = Seq("operators", "multimodal", "streaming", "functions")
+      .flatMap(p => Files.walk(Paths.get(s"src/main/scala/graft/$p")).iterator.asScala)
+      .filter(_.toString.endsWith(".scala"))
+    assert(files.size > 30, s"the scan found only ${files.size} sources")
+    val found = files.flatMap(f =>
+      OpsSmokeSpec.objectVarLines(Files.readString(f)).map(l => s"$f:$l"))
+    assert(found.isEmpty, "object-level var (engine state that is not data a " +
+      s"face or its oracle reads): ${found.mkString(", ")}")
+  }
+
   test("selectFaces: a face list with one unknown name fails and names it") {
     val err = SparkEntry.selectFaces(Some(Seq("txt_word_topn", "txt_wrod_topn")))
     assert(err.isLeft)
@@ -123,5 +145,47 @@ class OpsSmokeSpec extends SparkSuite {
     assert(df(0) === ((0.75, 1.0 - 1.0 / 3.0))) // 4x same token, 3x same bigram
     assert(df(1) === ((0.0, 0.0)))              // all distinct
     assert(df(2) === ((0.0, 0.0)))              // single token: no bigrams
+  }
+}
+
+object OpsSmokeSpec {
+
+  /** Comments, string literals and char literals, matched left to right. */
+  private val NonCode =
+    """(?s)/\*.*?\*/|//[^\n]*|"(\\.|[^"\\\n])*"|'(\\.|[^'\\\n])'""".r
+
+  /** A statement that declares a var, after its annotations and modifiers. */
+  private val VarStatement = """^\s*(@\w+\s+)*(\w+(\[\w+\])?\s+)*var\b""".r
+
+  private val ObjectHeader = """\bobject\s+\w+""".r
+
+  /** Line numbers (1-based) of the vars declared directly in an `object`
+    * body of Scala source `src`: comments and literals are blanked, then a
+    * brace walk tracks whether the innermost open block is an object body
+    * (its header, the code since the previous brace or `;`, names one).
+    */
+  def objectVarLines(src: String): Seq[Int] = {
+    val code = NonCode.replaceAllIn(src, m => m.matched.replaceAll("[^\n]", " "))
+    val blocks = scala.collection.mutable.Stack.empty[Boolean]
+    var header = 0
+    var line = 1
+    val found = Seq.newBuilder[Int]
+    code.indices.foreach { j =>
+      code(j) match {
+        case '{' =>
+          blocks.push(ObjectHeader.findFirstIn(code.substring(header, j)).nonEmpty)
+          header = j + 1
+        case '}' => if (blocks.nonEmpty) blocks.pop(); header = j + 1
+        case ';' => header = j + 1
+        case '\n' => line += 1
+        case _ => ()
+      }
+      if ((j == 0 || code(j - 1) == '\n' || code(j - 1) == '{' || code(j - 1) == ';') &&
+          blocks.headOption.contains(true) &&
+          VarStatement.findPrefixOf(code.substring(j, code.indexOf('\n', j) match {
+            case -1 => code.length; case e => e })).nonEmpty)
+        found += line
+    }
+    found.result()
   }
 }

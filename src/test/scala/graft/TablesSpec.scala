@@ -217,6 +217,29 @@ class TablesSpec extends SparkSuite {
     assert(docIds(dir) === Seq(7L, 8L))
   }
 
+  test("embedder_compare's word2vec side follows a documents rewrite") {
+    val dir = tempDir()
+    Seq("documents", "embeddings").foreach(t => Files.copy(
+      java.nio.file.Paths.get(s"${SparkSpec.FixtureDir}/$t.parquet"),
+      java.nio.file.Paths.get(s"$dir/$t.parquet")))
+    def word2vecDocs(): Long = Caching.scoped {
+      SparkEntry.queries("embedder_compare")(spark, dir)
+        .filter(col("embedder") === "word2vec").head().getAs[Long]("n_docs")
+    }
+    assert(word2vecDocs() === 100L)
+    // rewritten by another writer: a Spark overwrite of the path would
+    // also refresh the session's cached plans over it, which hides a stale
+    // registry key
+    val staged = tempDir()
+    spark.read.parquet(s"${SparkSpec.FixtureDir}/documents.parquet")
+      .filter(col("doc_id") < 40)
+      .coalesce(1).write.parquet(s"$staged/documents.parquet")
+    Files.delete(java.nio.file.Paths.get(s"$dir/documents.parquet"))
+    Files.move(java.nio.file.Paths.get(s"$staged/documents.parquet"),
+      java.nio.file.Paths.get(s"$dir/documents.parquet"))
+    assert(word2vecDocs() === 40L)
+  }
+
   test("relations: a drifted layout fails, is not cached, and loads once rewritten") {
     import spark.implicits._
     val dir = tempDir()
